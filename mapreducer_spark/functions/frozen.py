@@ -38,9 +38,9 @@ like tools/train_ivf_index.py — after any fixture regen).
 
 At 100 TB the artifact store would be a parquet/Iceberg table on object
 storage written by the same pipeline step; the single-directory layout
-here is the fixture-scale stand-in, and serving is a plain
-``spark.read.parquet`` — partition-parallel, predicate-pushable,
-nothing driver-sized.
+here is the fixture-scale stand-in, and serving is a plain parquet read
+(``sources.read_parquet``, which infers the schema once per artifact
+version) — partition-parallel, predicate-pushable, nothing driver-sized.
 """
 
 from __future__ import annotations
@@ -229,14 +229,14 @@ def frozen_or_build_info(
         # frozen posting table replaced the 64-partition live build.  At
         # production scale the artifact is a multi-file table and
         # fan_out is a no-op (sources/tables.py:62).
-        from mapreducer_spark.sources import fan_out
+        from mapreducer_spark.sources import fan_out, read_parquet
 
         fixture = os.path.basename(sf_dir.rstrip("/"))
         token = json.dumps(
             _fingerprints().get(f"{fixture}/{spec.name}"), sort_keys=True
         )
         return (
-            fan_out(spark.read.parquet(artifact_path(sf_dir, spec.name))),
+            fan_out(read_parquet(spark, artifact_path(sf_dir, spec.name))),
             token,
         )
     fixture = os.path.basename(sf_dir.rstrip("/"))

@@ -58,6 +58,10 @@ def clear_session_caches() -> None:
     the set is reproducible under a shuffled execution order.
     Production sessions never call this; the memo exists precisely so
     the second consumer in a real session gets the frame for free.
+
+    The parquet schemas remembered by ``sources.read_parquet`` are kept:
+    they are table metadata, not derived frames, so keeping them does
+    not make one query's cost depend on another having run first.
     """
     from mapreducer_spark.operators import graph, textstats
 

@@ -135,7 +135,9 @@ SELECT v, round(rank, 8) AS pagerank FROM r{_PR_ITERS}
 """
 
 
-# (applicationId, sf_dir) -> eagerly-checkpointed symmetric edge frame.
+# (applicationId, sf_dir, freshness token) -> symmetric edge frame; the
+# token is the frozen serve's accepted fingerprint record, None for the
+# live build (the only case that is eagerly checkpointed).
 # PageRank and the recursive BFS both derive the same ~370k-row edge
 # list, and its build (order-set groupBy + pair explode + distinct) is
 # ~2 s of their ~3-5 s wall at sf0.1 — within one session (the bench,
@@ -150,12 +152,13 @@ _SYM_EDGE_CACHE: dict[tuple[str, str, str | None], DataFrame] = {}
 
 def copurchase_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct symmetric (src, dst) co-purchase part edges for
-    ``_PR_YEAR``, eagerly checkpointed and MEMOIZED per (session,
-    fixture).  Edge generation without a fact-fact self-join:
-    per-order part sets (one shuffle), in-array i<j pair expansion (the
-    dedup.py LSH-bucket trick — order groups are tiny so m^2 structs
-    beat streaming a self-join), distinct on UNORDERED pairs (half the
-    shuffle volume), then a free symmetrizing union.  Shared by
+    ``_PR_YEAR``, MEMOIZED per (session, fixture, freshness token) and
+    eagerly checkpointed when built live.  Edge generation without a
+    fact-fact self-join: per-order part sets (one shuffle), in-array
+    i<j pair expansion (the dedup.py LSH-bucket trick — order groups
+    are tiny so m^2 structs beat streaming a self-join), distinct on
+    UNORDERED pairs (half the shuffle volume), then a free symmetrizing
+    union.  Shared by
     part_copurchase_pagerank and copurchase_bfs_recursive (sqlfront)."""
     app_id = spark.sparkContext.applicationId
     # ONE freshness decision (ADVICE r13): the serve itself reports
@@ -479,37 +482,60 @@ FROM e{_KCORE_ROUNDS} GROUP BY src
     "data-dependent; at gate scale peeling converges in round 5 and "
     "round 6 is a live no-op, and meets_k reports per-node whether "
     "the budget sufficed).  Determinism: pure integer degrees, no "
-    "floats anywhere.  Scale shape: per round, ONE degree "
-    "aggregation + two semi-join-shaped filters against the "
-    "|survivors|-row frame; each iterate is eagerly localCheckpointed "
-    "so the plan stays flat in rounds (the PageRank lesson) and the "
-    "edge frame is the session-memoized copurchase_sym_edges build.",
+    "floats anywhere.  Scale shape: the rounds run as a survivor-set "
+    "recurrence S1 = {u : deg(u) >= k}, S(r+1) = {u : |N(u) & S(r)| >= "
+    "k} over the edge frame, pinned once.  The recurrence is monotone "
+    "(S(r+1) is a subset of S(r)), so the edges with both ends in S(R) "
+    "are exactly the edge peel's round-R survivors; each level is ONE "
+    "degree aggregation over a semi-join against the vertex-sized "
+    "previous level, referenced once, so all rounds chain into one "
+    "lazy plan with no per-round checkpoint (GraphX's Pregel shape).",
     tags=("graph", "iterative", "join"),
 )
 def copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_sym_edges(spark, sf_dir)
-    for _ in range(_KCORE_ROUNDS):
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= _KCORE_K).select("src")
-        # Eager checkpoint per round is REQUIRED and the cheapest
-        # correct form (re-adjudicated r14): each round's survivors
-        # are referenced 3x by the next round (degree agg + both
-        # semi-filters), so the plan must sever per round (3^R textual
-        # expansion otherwise).  A lazy (eager=False) severance was
-        # A/B'd this round to fold the 6 blocking jobs into one action
-        # — and measured SLOWER (3.59 -> 4.28 s cold min-of-3): the 3
-        # sibling stages of each level race to compute the same
-        # just-marked RDD before its blocks persist, re-running the
-        # level up to 3x.  Keep eager.
-        edges = (
-            edges.join(keep, "src")
-            .join(keep.select(F.col("src").alias("dst")), "dst")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
+    # Every level scans the edge frame once: pin it so the executed plan
+    # reads the artifact once instead of twice per level.  The live
+    # build (freshness token None) is already pinned.
+    if not any(
+        v is edges and token is None
+        for (_, _, token), v in _SYM_EDGE_CACHE.items()
+    ):
+        edges = edges.localCheckpoint(eager=True)
+    return _kcore_peel(edges, _KCORE_K, _KCORE_ROUNDS)
+
+
+def _kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
+    """Survivors of ``rounds`` k-peels of the symmetric (src, dst) edge
+    frame, as (v, degree, meets_k) over the surviving edges.
+
+    Invariant: S1 = {u : deg(u) >= k} and S(r+1) = {u : |N(u) & S(r)|
+    >= k} give S(r+1) <= S(r) by induction, so the edge peel's round-r
+    edge set is exactly the edges with both ends in S(r).  Each level
+    is a vertex-sized frame that refers to the previous level once, so
+    the plan grows linearly in rounds and the whole recurrence runs as
+    one lazy plan; the final filter's two references to S(R) share
+    their exchanges."""
+    surv = (
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .where(F.col("deg") >= k)
+        .select(F.col("src").alias("dst"))
+    )
+    for _ in range(rounds - 1):
+        surv = (
+            edges.join(surv, "dst")
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .where(F.col("deg") >= k)
+            .select(F.col("src").alias("dst"))
         )
-    return edges.groupBy(F.col("src").alias("v")).agg(
+    core = edges.join(surv, "dst").join(
+        surv.select(F.col("dst").alias("src")), "src"
+    )
+    return core.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).alias("degree"),
-        (F.count(F.lit(1)) >= _KCORE_K).alias("meets_k"),
+        (F.count(F.lit(1)) >= k).alias("meets_k"),
     )
 
 

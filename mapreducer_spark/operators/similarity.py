@@ -143,13 +143,29 @@ def _index_frame(
     # range(1) + literal arrays, NOT createDataFrame: a Python-object
     # createDataFrame materializes through a pyspark worker task (~1 s
     # of interpreter spin-up PER QUERY INVOCATION); the literal
-    # projection is JVM-only and constant-folded.
-    return spark.range(1).select(
-        F.array(
-            *[F.array(*[F.lit(float(x)) for x in cv]) for _, cv in cents]
-        ).alias("__cents"),
-        F.array(*[F.lit(n) for n in norms]).alias("__cnorms"),
+    # projection is JVM-only and constant-folded.  The arrays go over as
+    # SQL text in one selectExpr call, not as one py4j round-trip per
+    # element Column; see _sql_double for why the bits survive.
+    def arr(xs) -> str:
+        return "array(" + ", ".join(xs) + ")"
+
+    return spark.range(1).selectExpr(
+        arr(arr(map(_sql_double, cv)) for _, cv in cents) + " AS __cents",
+        arr(map(_sql_double, norms)) + " AS __cnorms",
     )
+
+
+def _sql_double(x: float) -> str:
+    """A Spark SQL literal that parses to exactly the float64 ``x``:
+    ``repr`` is the shortest decimal that round-trips and the ``D``
+    suffix makes it a double literal (``-0.0D`` keeps its sign);
+    non-finite values go through a string cast."""
+    import math
+
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    return f"CAST('{x!r}' AS DOUBLE)"
 
 
 def _cluster_sims(vcol, vnorm_col):

@@ -21,11 +21,21 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def driver_memory_for(master: str | None) -> str | None:
     """Heap for a LOCAL-mode session, sized to its task-slot count:
     512 MB per slot, floor 2 GiB (``SPARK_GRAFT_DRIVER_MEM`` overrides).
-    None for non-local / externally-supplied masters — a real cluster
-    sizes its own executors and the harness supplies its own session."""
+    ``local[N,F]`` reads N; ``local[*]`` and ``local[*,F]`` read the CPU
+    count.  None for non-local / externally-supplied masters and for
+    ``local-cluster[...]`` — a real cluster sizes its own executors and
+    the harness supplies its own session."""
     if master is None or not master.startswith("local"):
         return None
-    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "1"
+    if master.startswith("local-cluster"):
+        # Separate executor JVMs with their own heaps: not slot-sized.
+        return None
+    # local[N,maxFailures]: the slot count is the first field.
+    n = (
+        master[master.find("[") + 1 : master.find("]")].split(",")[0].strip()
+        if "[" in master
+        else "1"
+    )
     if n == "*":
         slots = os.cpu_count() or 1
     else:

@@ -1,3 +1,9 @@
-from mapreducer_spark.sources.tables import TABLES, fan_out, load_table, load_tables
+from mapreducer_spark.sources.tables import (
+    TABLES,
+    fan_out,
+    load_table,
+    load_tables,
+    read_parquet,
+)
 
-__all__ = ["TABLES", "fan_out", "load_table", "load_tables"]
+__all__ = ["TABLES", "fan_out", "load_table", "load_tables", "read_parquet"]

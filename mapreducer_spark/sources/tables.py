@@ -9,8 +9,11 @@ tests/test_plans.py).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -45,14 +48,46 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # truncates identically), NTZ is reinterpreted in the UTC
         # session zone (same wall-clock, matching DuckDB's naive read).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = df.schema["ts"].dataType.simpleString()
         if ts_type == "bigint":
             return df.withColumn(
                 "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")
             )
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+# (applicationId, path, mtime_ns, size) -> the schema Spark inferred from
+# the parquet footer.  Inference is a Spark job on every read; handing
+# the remembered schema back with ``.schema(...)`` skips it.  Entries of
+# other applications and superseded stats of the same path are evicted
+# on insert.  Schemas are table metadata, not derived frames, so
+# ``clear_session_caches`` keeps them.
+_SCHEMAS: dict[tuple[str, str, int, int], StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    (application, file version).  The key is the top-level stat of
+    ``path``, so it suits single files and directories written whole
+    (the frozen artifacts); partitioned directories whose leaves change
+    under an unchanged top-level stat keep using ``spark.read.parquet``.
+    Paths that cannot be stat'ed locally are read plainly."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    for stale in [k for k in _SCHEMAS if k[0] != app_id or k[1] == path]:
+        del _SCHEMAS[stale]
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -32,3 +32,24 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_sf_dir() -> str:
     return SF_DIR_ORACLE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns ``(fn(), number of Spark jobs it launched)``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -274,7 +274,9 @@ def test_scan_split_estimate_unparseable_conf_falls_back(spark, monkeypatch):
     'fall back to .rdd', never an uncaught ValueError out of fan_out."""
     from mapreducer_spark.sources import tables
 
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "128m")
     try:
         monkeypatch.setattr(
             tables, "_size_to_bytes",
@@ -283,7 +285,10 @@ def test_scan_split_estimate_unparseable_conf_falls_back(spark, monkeypatch):
         df = _StubScanFrame(spark, ["file:/tmp/x.parquet"])
         assert tables._estimated_scan_splits(df) is None
     finally:
-        pass
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 def test_local_fan_out_behavior_unchanged(spark, sf_dir):
@@ -297,3 +302,63 @@ def test_local_fan_out_behavior_unchanged(spark, sf_dir):
         out.rdd.getNumPartitions()
         >= spark.sparkContext.defaultParallelism
     )
+
+
+def _write_parquet(path, columns: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), str(path))
+
+
+def test_read_parquet_second_read_runs_no_job(spark, tmp_path, count_jobs):
+    """The first read infers the schema from the footer (a Spark job);
+    a second read of the unchanged file reuses it and launches none."""
+    from mapreducer_spark.sources import read_parquet
+
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, {"a": [1, 2, 3], "b": ["x", "y", "z"]})
+    first = read_parquet(spark, str(path))
+    second, n_jobs = count_jobs(lambda: read_parquet(spark, str(path)))
+    assert n_jobs == 0
+    assert second.schema == first.schema
+    assert sorted(tuple(r) for r in second.collect()) == [
+        (1, "x"), (2, "y"), (3, "z"),
+    ]
+
+
+def test_read_parquet_sees_file_rewritten_in_place(spark, tmp_path):
+    """A file rewritten with other columns has a new stat, so its new
+    schema is inferred instead of the remembered one being reused."""
+    from mapreducer_spark.sources import read_parquet
+
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, {"a": [1, 2]})
+    assert read_parquet(spark, str(path)).columns == ["a"]
+    _write_parquet(
+        path, {"c": [1.5, 2.5], "d": ["p", "q"], "e": [True, False]}
+    )
+    df = read_parquet(spark, str(path))
+    assert df.columns == ["c", "d", "e"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1.5, "p", True), (2.5, "q", False),
+    ]
+
+
+def test_read_parquet_evicts_other_applications(spark, tmp_path):
+    """Like session_memo: an insert drops every entry of another
+    application, so a long-lived process keeps no dead session's
+    schemas."""
+    from pyspark.sql.types import StructType
+
+    from mapreducer_spark.sources import read_parquet, tables
+
+    dead = ("app-dead", str(tmp_path / "old.parquet"), 1, 1)
+    tables._SCHEMAS[dead] = StructType([])
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, {"a": [1]})
+    read_parquet(spark, str(path))
+    assert dead not in tables._SCHEMAS
+    app_id = spark.sparkContext.applicationId
+    assert all(k[0] == app_id for k in tables._SCHEMAS)
+    assert any(k[1] == str(path) for k in tables._SCHEMAS)

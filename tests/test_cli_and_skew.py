@@ -721,6 +721,8 @@ def test_driver_memory_sized_to_local_slots(monkeypatch):
     (512 MB/slot, floor 2g) so 32 concurrent partial-aggregate hash
     maps never share the 1 GiB -Xmx default (the r13 bench crash);
     non-local masters are left to the cluster's own sizing."""
+    import os
+
     from mapreducer_spark.session import driver_memory_for
 
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
@@ -728,6 +730,13 @@ def test_driver_memory_sized_to_local_slots(monkeypatch):
     assert driver_memory_for("local[8]") == "4g"
     assert driver_memory_for("local[1]") == "2g"
     assert driver_memory_for("local") == "2g"
+    # local[N,maxFailures]: slots are the first field.
+    assert driver_memory_for("local[8,3]") == "4g"
+    assert driver_memory_for("local[32, 4]") == "16g"
+    cpus = os.cpu_count() or 1
+    assert driver_memory_for("local[*,2]") == f"{max(2, (cpus + 1) // 2)}g"
+    # local-cluster runs executors in their own JVMs: not slot-sized.
+    assert driver_memory_for("local-cluster[2,1,1024]") is None
     assert driver_memory_for(None) is None
     assert driver_memory_for("yarn") is None
     assert driver_memory_for("spark://host:7077") is None

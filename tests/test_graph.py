@@ -178,3 +178,133 @@ def test_triangles_counts_each_corner(spark, sf_dir):
     rows = graph.neardup_triangles(spark, sf_dir).collect()
     total = sum(r.n_triangles for r in rows)
     assert total % 3 == 0
+
+
+def _python_kcore_peel(edges, k, rounds):
+    """The edge peel itself: each round keeps the edges whose two ends
+    both have degree >= k in the previous round's edge set."""
+    cur = set(edges)
+    for _ in range(rounds):
+        deg: dict[int, int] = {}
+        for a, _b in cur:
+            deg[a] = deg.get(a, 0) + 1
+        cur = {(a, b) for a, b in cur if deg[a] >= k and deg.get(b, 0) >= k}
+    out: dict[int, int] = {}
+    for a, _b in cur:
+        out[a] = out.get(a, 0) + 1
+    return {v: (d, d >= k) for v, d in out.items()}
+
+
+def _symmetric(pairs):
+    return sorted({(a, b) for a, b in pairs} | {(b, a) for a, b in pairs})
+
+
+def _clique(vs):
+    return [(a, b) for a in vs for b in vs if a < b]
+
+
+def _spark_kcore(spark, edges, k, rounds):
+    df = spark.createDataFrame(edges, "src long, dst long")
+    return {
+        r.v: (r.degree, r.meets_k)
+        for r in graph._kcore_peel(df, k, rounds).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "case, k, rounds",
+    [
+        ("empty", 2, 6),
+        ("none_meets_k", 3, 6),
+        ("clique_with_cascading_chain", 2, 6),
+        ("budget_not_finished", 2, 6),
+        ("random", 3, 6),
+    ],
+)
+def test_kcore_peel_matches_python_edge_peel(spark, case, k, rounds):
+    """The survivor-set recurrence returns what the edge peel returns:
+    on an empty graph, on one where no vertex meets k, on a (k+1)-clique
+    whose pendant chain peels one vertex per round, and on a chain too
+    long for the round budget (its last survivor reports meets_k =
+    false)."""
+    import random
+
+    if case == "empty":
+        pairs = []
+    elif case == "none_meets_k":
+        pairs = [(i, i + 1) for i in range(6)]
+    elif case == "clique_with_cascading_chain":
+        # Triangle 0-1-2 with the chain 0-10-11-12-13: the chain's tail
+        # has degree 1, so each round removes one more chain vertex and
+        # round 4 reaches the 2-core, the triangle.
+        pairs = _clique(range(k + 1)) + [(0, 10), (10, 11), (11, 12), (12, 13)]
+    elif case == "budget_not_finished":
+        # A chain of 8 off the triangle needs 8 rounds; after 6 the first
+        # two chain vertices survive and the second has degree 1.
+        chain = [0] + list(range(10, 18))
+        pairs = _clique(range(k + 1)) + list(zip(chain, chain[1:]))
+    else:
+        rng = random.Random(7)
+        pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(160)]
+        pairs = [(a, b) for a, b in pairs if a != b]
+    edges = _symmetric(pairs)
+    expect = _python_kcore_peel(edges, k, rounds)
+    if case == "budget_not_finished":
+        assert expect[11] == (1, False)
+    if case == "clique_with_cascading_chain":
+        assert expect == {v: (2, True) for v in range(3)}
+    assert _spark_kcore(spark, edges, k, rounds) == expect
+
+
+def _kcore_rows(spark, sf_dir):
+    from mapreducer_spark.functions.memo import clear_session_caches
+
+    clear_session_caches()
+    return sorted(
+        tuple(r) for r in graph.copurchase_kcore(spark, sf_dir).collect()
+    )
+
+
+def test_kcore_shuffle_join_regime_matches_broadcast(spark, sf_dir):
+    """With broadcasts off, every level's semi-join and the final
+    filter become shuffle joins; the rows must not change."""
+    broadcast_rows = _kcore_rows(spark, sf_dir)
+    assert broadcast_rows
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffle_rows = _kcore_rows(spark, sf_dir)
+    finally:
+        spark.conf.set(key, prior)
+    assert shuffle_rows == broadcast_rows
+
+
+# Spark jobs of one cold copurchase_kcore (plan building plus the
+# collect) at sf0.001 on the test session: 11 measured, 12 when the
+# frozen edge artifact's schema is read for the first time.  The peel
+# with an eager checkpoint per round ran 30 at sf0.01.
+_KCORE_JOB_BUDGET = 12
+
+
+def test_kcore_job_budget(spark, sf_dir, monkeypatch, count_jobs):
+    """The peel is one lazy plan: at most one localCheckpoint (the pin
+    of the edge frame) and a fixed number of jobs per query."""
+    from mapreducer_spark.functions.memo import clear_session_caches
+
+    frame_cls = type(spark.range(0))
+    pins = []
+    original = frame_cls.localCheckpoint
+
+    def counted(df, *args, **kwargs):
+        pins.append(True)
+        return original(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counted)
+    clear_session_caches()
+    rows, n_jobs = count_jobs(
+        lambda: graph.copurchase_kcore(spark, sf_dir).collect()
+    )
+    assert rows
+    assert len(pins) <= 1
+    assert 0 < n_jobs <= _KCORE_JOB_BUDGET

@@ -136,6 +136,34 @@ def test_distributed_training_roundtrips_index_frame(spark):
     assert list(row["__cnorms"]) == expect_norms
 
 
+def test_index_frame_literal_is_bit_exact(spark):
+    """The centroid and norm arrays travel as SQL text; every value must
+    collect back to the same float64 bits, signed zero and exponents
+    included."""
+    import math
+    import struct
+
+    values = [
+        0.5, -0.25, -0.0, 0.0, 1e-05, 1.5e20, -3.0000000000000004,
+        0.1, 2.2250738585072014e-308, 5e-324, -123456.78901234567,
+    ]
+    cents = [(0, values), (1, [-x for x in values])]
+    row = sim._index_frame(spark, cents).collect()[0]
+
+    def bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    for (_, cv), got in zip(cents, row["__cents"]):
+        assert bits(got) == bits(cv)
+    expect_norms = []
+    for _, cv in cents:
+        acc = 0.0
+        for x in cv:
+            acc += x * x
+        expect_norms.append(math.sqrt(acc))
+    assert bits(row["__cnorms"]) == bits(expect_norms)
+
+
 def test_drift_falls_back_to_live_training(spark, monkeypatch, restore_caches):
     """End-to-end fallback: with the fingerprint invalidated, the ANN
     query must live-train seeded KMeans and still produce a valid top-k
