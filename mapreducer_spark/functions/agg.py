@@ -1,22 +1,77 @@
 """Deterministic aggregate expressions.
 
 Double summation is order-dependent, and the driver's oracle gate hashes
-values exactly (SURVEY.md §7.4.3).  Strategy: cast to DECIMAL before
-SUM (exact, order-independent arithmetic), cast the final result back to
-DOUBLE.  Both Spark and DuckDB produce bit-identical doubles for the same
-decimal value, so partial aggregation / AQE / partition count can't change
-results.  The oracle SQL must mirror the same casts — see the module
-docstrings of each operator.
+values exactly (SURVEY.md §7.4.3).  Strategy: sum exact integers, not
+doubles, and cast the exact total back to DOUBLE once.  Both Spark and
+DuckDB produce bit-identical doubles for the same decimal value, so
+partial aggregation / AQE / partition count can't change results.  The
+oracle SQL must mirror the same casts — see the module docstrings of
+each operator.
+
+``dec_sum`` / ``dec_avg`` return the bits of
+``CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE)`` (the oracle's
+:func:`oracle_dec_sum`), but not by casting every row: Spark casts a
+double to a decimal through ``Double.toString``, a string format and
+parse per row.  Instead each row becomes its count of 10^-s units
+(:func:`_dec_units`):
+
+- y = x * 10^s as a double.  When |y| < 2^45 and the fraction of y is
+  more than 0.02 away from .5, units = floor(y + 0.5) — pure double
+  arithmetic inside whole-stage codegen.
+- Otherwise units = CAST(x AS DECIMAL(18,s)) * 10^s, the old cast, so
+  the old rounding and the old errors stay: a value out of DECIMAL(18,s)
+  range raises under ANSI, and NaN / infinity become NULL.
+
+Why the fast branch is exact: the cast rounds (HALF_UP) a decimal D
+that lies within half an ulp of x — for a double input the repr string
+``Double.toString`` gives, which parses back to x; for an integral or
+decimal input x itself, whose DOUBLE cast is correctly rounded.  y lies
+within half an ulp of x * 10^s.  Below 2^45 half an ulp of x * 10^s is
+at most 2^-8, so |y - D * 10^s| < 2^-8 + 2^-9 < 0.012; with y more than
+0.02 from a half-integer, both round to the same integer.  The units are
+summed as DECIMAL(28,0) — the same 10^28-unit capacity as the old
+DECIMAL(28,s) sum, so overflow behaviour is unchanged — and the total
+times 10^-s is the old sum's exact decimal value, whose DOUBLE cast is
+correctly rounded and so bit-identical.  The scaled-long idea is the
+one :func:`fixed6_sums` uses, made bit-compatible with the DECIMAL
+oracle.
 """
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Fast-branch bounds of _dec_units: |x * 10^s| below 2^45 keeps the double
+# within 2^-9 of x * 10^s, and a fraction more than _TIE_BAND from .5
+# rounds the same way as the exact decimal (see the module docstring).
+_FAST_LIMIT = float(2**45)
+_TIE_BAND = 0.02
+
+
+def _dec_units(col: Column | str, scale: int = 2) -> Column:
+    """CAST(x AS DECIMAL(18,scale)) * 10^scale as DECIMAL(18,0), computed
+    in double arithmetic where that is provably the same integer (module
+    docstring), and by the cast itself elsewhere."""
+    c = F.col(col) if isinstance(col, str) else col
+    y = c.cast("double") * F.lit(float(10**scale))
+    fast = (F.abs(y) < F.lit(_FAST_LIMIT)) & (
+        F.abs(y - F.floor(y) - F.lit(0.5)) > F.lit(_TIE_BAND)
+    )
+    exact = c.cast(f"decimal(18,{scale})") * F.lit(10**scale)
+    return F.when(
+        fast, F.floor(y + F.lit(0.5)).cast("decimal(18,0)")
+    ).otherwise(exact.cast("decimal(18,0)"))
+
 
 def dec_sum(col: Column | str, scale: int = 2) -> Column:
-    """SUM(CAST(x AS DECIMAL(18,scale))) :: DOUBLE — order-independent.
+    """SUM(CAST(x AS DECIMAL(18,scale))) :: DOUBLE — order-independent,
+    bit-identical to that formula, summed as integer units of 10^-scale
+    (:func:`_dec_units`; exactness argument, the 2^45 and +-0.02 band
+    bounds in the module docstring).  Overflow raises under ANSI and NaN
+    rows count as NULL, exactly as with the per-row cast.
 
     Cross-engine caveat (found by tools/oracle_at_scale.py): the final
     decimal->double cast is only guaranteed identical across engines
@@ -26,17 +81,19 @@ def dec_sum(col: Column | str, scale: int = 2) -> Column:
     every fixture — but a query whose sum can cross it should ROUND the
     exact decimal down to a smaller scale before the cast (see
     pricing_summary's sum_charge)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
+    return (
+        F.sum(_dec_units(col, scale)) * F.lit(Decimal(1).scaleb(-scale))
+    ).cast("double")
 
 
 def dec_avg(col: Column | str, scale: int = 2) -> Column:
-    """Decimal-exact sum divided by count, as DOUBLE.
+    """Decimal-exact sum divided by count, as DOUBLE — :func:`dec_sum`
+    over the row count, with the same bounds and the same overflow and
+    NaN behaviour.
 
     Oracle mirror: CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE) / COUNT(*)
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(F.lit(1))
+    return dec_sum(col, scale) / F.count(F.lit(1))
 
 
 # Oracle-side templates (DuckDB SQL) for the same expressions.
@@ -401,7 +458,7 @@ def _global_running_sums_impl(
     # offsets JOIN either: Spark's size-only join estimate is the
     # PRODUCT of the child sizes, which inflated the helper's output
     # stats past the auto-broadcast threshold and flipped downstream
-    # cross joins to CartesianProduct (caught by the r10 plan sweep).
+    # cross joins to CartesianProduct (caught by a plan sweep).
     # String values + cast keep LONG and any DECIMAL(p,s) exact (a raw
     # Decimal literal would infer DecimalType(38,18) and shrink the
     # integral headroom).

@@ -1,5 +1,5 @@
 """Frozen derived-frame lifecycle — materialize-once artifacts with
-fingerprint staleness guards (VERDICT r11 #1).
+fingerprint staleness guards.
 
 The ANN index taught the pattern (operators/similarity.py:247-403):
 expensive derived state is trained OFFLINE by a tool, frozen as a repo
@@ -12,9 +12,9 @@ to whole DataFrames: the LSH signature/candidate frames, the near-dup
 pair graph and its component labels, the co-purchase edge list, and the
 exact-top-k ANN ground truth are all artifacts a production pipeline at
 100 TB materializes exactly once and serves to every downstream
-consumer — yet (pre-r12) every gauge query re-paid the full build cold
-(`ann_ivf_int8_recall` 11.7 s, `minhash_estimator_error` 8.1 s on the
-r11 driver bench).
+consumer — yet without them every gauge query re-paid the full build
+cold (`ann_ivf_int8_recall` 11.7 s, `minhash_estimator_error` 8.1 s on
+a driver bench).
 
 Verification story — why serving a frozen frame does NOT weaken the
 correctness gate: every consumer's DuckDB oracle recomputes the SAME
@@ -99,13 +99,15 @@ def frozen_spec(
         def serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             return frozen_or_build(spark, sf_dir, spec)
 
-        # Single-check serving (ADVICE r13): callers whose downstream
-        # materialization policy depends on WHERE the frame came from
-        # (frozen artifact vs live build) read the decision from the
-        # same is_fresh call that made it, instead of re-deciding.
+        # Single-check serving: callers whose downstream materialization
+        # policy depends on WHERE the frame came from (frozen artifact vs
+        # live build) read the decision from the same is_fresh call that
+        # made it, instead of re-deciding; ``token`` lets a memo probe
+        # for a hit without serving.
         serve.info = lambda spark, sf_dir: frozen_or_build_info(
             spark, sf_dir, spec
         )
+        serve.token = lambda sf_dir: freshness_token(sf_dir, spec)
         serve.__name__ = f"frozen_{name}"
         serve.__doc__ = (
             f"Serve the frozen {name!r} artifact for sf_dir when its "
@@ -125,8 +127,8 @@ def all_specs() -> dict[str, FrozenSpec]:
 def _fingerprints() -> dict:
     # Keyed on the file's (mtime_ns, size) so an external freeze-tool run
     # mid-session is picked up; a missing/corrupt file is NOT cached
-    # (ADVICE r12: lifetime-cached results defeated the serve-time drift
-    # guard when sources were regenerated in-place).
+    # (a lifetime-cached result would defeat the serve-time drift guard
+    # when sources are regenerated in place).
     try:
         st = os.stat(_FP_PATH)
     except OSError:
@@ -147,7 +149,7 @@ def _file_md5(path: str) -> str | None:
     # Cache keyed on (path, mtime_ns, size): a regenerated fixture gets a
     # fresh hash instead of the stale cached one, and a missing file
     # (None) is never cached — so is_fresh stays a LIVE drift guard
-    # across in-session source changes (ADVICE r12).
+    # across in-session source changes.
     try:
         st = os.stat(path)
     except OSError:
@@ -178,31 +180,41 @@ def artifact_path(sf_dir: str, name: str) -> str:
     return os.path.join(_FROZEN_DIR, fixture, name)
 
 
-def is_fresh(sf_dir: str, spec: FrozenSpec) -> bool:
-    """True iff a frozen artifact exists for this fixture AND its
-    recorded source fingerprints and build version both match."""
+def is_fresh(
+    sf_dir: str, spec: FrozenSpec, records: dict | None = None
+) -> dict | None:
+    """The fingerprint record of this fixture's artifact when the
+    artifact exists AND its recorded source fingerprints and build
+    version both match, else None.  ``records`` is the fingerprint
+    file's content, read here when not given; the returned record is
+    the very object that was checked, so a caller that serves by it
+    never pairs the artifact with a record read later."""
+    if records is None:
+        records = _fingerprints()
     fixture = os.path.basename(sf_dir.rstrip("/"))
-    rec = _fingerprints().get(f"{fixture}/{spec.name}")
+    rec = records.get(f"{fixture}/{spec.name}")
     if not isinstance(rec, dict):
-        return False
+        return None
     if rec.get("version") != spec.version:
-        return False
+        return None
     path = artifact_path(sf_dir, spec.name)
     if not os.path.isdir(path):
-        return False
+        return None
     recorded = rec.get("sources", {})
     if not all(
         recorded.get(t) is not None
         and _source_md5s(sf_dir, (t,))[t] == recorded.get(t)
         for t in spec.sources
     ):
-        return False
+        return None
     recorded_extra = rec.get("extra", {})
-    return all(
+    if not all(
         recorded_extra.get(os.path.basename(f)) is not None
         and _file_md5(f) == recorded_extra.get(os.path.basename(f))
         for f in spec.extra_files
-    )
+    ):
+        return None
+    return rec
 
 
 def frozen_or_build(
@@ -211,36 +223,42 @@ def frozen_or_build(
     return frozen_or_build_info(spark, sf_dir, spec)[0]
 
 
+def freshness_token(sf_dir: str, spec: FrozenSpec) -> str | None:
+    """The token :func:`frozen_or_build_info` would return now, without
+    building or reading anything but fingerprints: memo lookups probe
+    with it and serve only on a miss."""
+    rec = is_fresh(sf_dir, spec)
+    return None if rec is None else json.dumps(rec, sort_keys=True)
+
+
 def frozen_or_build_info(
     spark: SparkSession, sf_dir: str, spec: FrozenSpec
 ) -> tuple[DataFrame, str | None]:
     """(frame, freshness token).  The token is the serialized
-    fingerprint record the ONE is_fresh call accepted (None = live
-    build) — callers use it both as the served-frozen flag and as a
-    memo-key component, so a mid-session refreeze/retrain changes the
-    token and can never pair a stale cached frame (or a checkpoint/
-    no-checkpoint decision) with a different artifact than the one
-    fingerprint-checked here (ADVICE r13 TOCTOU)."""
-    if is_fresh(sf_dir, spec):
+    fingerprint record that ``is_fresh`` accepted (None = live build),
+    from ONE read of the fingerprint file — callers use it both as the
+    served-frozen flag and as a memo-key component, so a mid-session
+    refreeze/retrain changes the token and can never pair a stale
+    cached frame (or a checkpoint/no-checkpoint decision) with a
+    different artifact than the one fingerprint-checked here."""
+    records = _fingerprints()
+    rec = is_fresh(sf_dir, spec, records)
+    if rec is not None:
         # fan_out: the fixture-scale artifact is one parquet file = ONE
         # input split, which would serialize every downstream per-row
         # stage (explode, hashing, pair expansion) onto a single core —
         # measured 1.3 s -> 4.7 s on neardup_jaccard_blocked when the
         # frozen posting table replaced the 64-partition live build.  At
         # production scale the artifact is a multi-file table and
-        # fan_out is a no-op (sources/tables.py:62).
+        # fan_out is a no-op (see sources.fan_out).
         from mapreducer_spark.sources import fan_out, read_parquet
 
-        fixture = os.path.basename(sf_dir.rstrip("/"))
-        token = json.dumps(
-            _fingerprints().get(f"{fixture}/{spec.name}"), sort_keys=True
-        )
         return (
             fan_out(read_parquet(spark, artifact_path(sf_dir, spec.name))),
-            token,
+            json.dumps(rec, sort_keys=True),
         )
     fixture = os.path.basename(sf_dir.rstrip("/"))
-    if f"{fixture}/{spec.name}" in _fingerprints():
+    if f"{fixture}/{spec.name}" in records:
         warnings.warn(
             f"frozen artifact {spec.name!r} for {fixture!r} is STALE "
             "(source fingerprint or build version no longer matches) — "

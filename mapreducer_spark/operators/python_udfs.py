@@ -31,7 +31,7 @@ from mapreducer_spark.functions.text import (
     SPARK_TOKEN_SPLIT_RE,
 )
 from mapreducer_spark.registry import register
-from mapreducer_spark.sources import fan_out, load_table
+from mapreducer_spark.sources import fan_out, fan_out_for_python, load_table
 
 _ORACLE_WORD_COUNT = f"""
 SELECT word, COUNT(*) AS cnt
@@ -92,6 +92,17 @@ FROM documents
     tags=("python", "text"),
 )
 def token_count_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token counts through a scalar ``pandas_udf``.
+
+    The scan is NOT fanned out to every core: each Python task pays a
+    fixed worker cost of about 0.27 s CPU (Spark 4.1.2 re-validates its
+    import caches per task, see ``sources.tables._PY_UDF_TASK_BYTES``)
+    against about 0.15 s of UDF body per 0.6 MB of ``documents``
+    parquet.  ``fan_out_for_python`` therefore allows one task per
+    ~1.1 MB of input: sf0.1's 0.6 MB table runs as one task with no
+    shuffle, where a plain ``fan_out`` paid a repartition shuffle and
+    one fixed cost per core.  Large inputs still fan out to cluster
+    parallelism."""
     import re
 
     # Compiled once per executor; applied per Arrow batch.
@@ -103,7 +114,7 @@ def token_count_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda t: sum(1 for tok in token_re.split(t.lower()) if tok)
         ).astype("int64")
 
-    d = fan_out(load_table(spark, sf_dir, "documents"))
+    d = fan_out_for_python(load_table(spark, sf_dir, "documents"))
     return d.select("doc_id", n_tokens("text").alias("n_tokens"))
 
 

@@ -10,6 +10,7 @@ tests/test_plans.py).
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -111,7 +112,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     micro-batch parallelism is the source's concern).
 
     The "already parallel?" decision reads LEAF-FILE SIZES, not
-    ``df.rdd`` (optimization r13, guide §1.2/§7.3): ``.rdd`` forces
+    ``df.rdd``, so deciding costs no Spark job: ``.rdd`` forces
     physical planning and — under AQE — executes upstream broadcast
     stages (measured 0.1-0.5 s plus a driver job PER CALL at build
     time, across ~70 call sites).  The estimate reproduces Spark's own
@@ -120,6 +121,9 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     select/filter/broadcast-join on top), so the file list is the
     scan's true input.  Frames with no resolvable files (future
     checkpointed/derived inputs) fall back to the old ``.rdd`` check.
+
+    Scans that feed a Python UDF use :func:`fan_out_for_python`, which
+    caps the target by input bytes per task.
     """
     if df.isStreaming:
         return df
@@ -132,6 +136,43 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+# Input bytes per Python-UDF task.  Every Python task pays a fixed
+# worker-side cost before its UDF body runs — about 0.27 s CPU per task
+# on Spark 4.1.2 / Python 3.11, whatever the body does: the worker's
+# ``setup_spark_files`` calls ``importlib.invalidate_caches()`` on every
+# task, and each of the ~16 zipimporters in ``sys.path_importer_cache``
+# then re-reads the 1,328-entry directory of ``pyspark.zip``.  The
+# token-count body costs about 0.15 s per 0.6 MB of ``documents``
+# parquet.  A task earns its fixed cost once its body costs as much, so
+# the floor is the input whose body time equals the fixed cost
+# (~1.1 MB).  Deliberately not a setting: it is a property of the
+# worker, not of a deployment.
+_PY_TASK_FIXED_S = 0.27
+_PY_BODY_S_PER_BYTE = 0.15 / (0.6 * 2**20)
+_PY_UDF_TASK_BYTES = round(_PY_TASK_FIXED_S / _PY_BODY_S_PER_BYTE)
+
+
+def fan_out_for_python(df: DataFrame) -> DataFrame:
+    """:func:`fan_out` for a scan that feeds a Python UDF: at most one
+    task per ``_PY_UDF_TASK_BYTES`` of scanned input, so a small input
+    is not split into tasks that each pay the fixed Python-worker cost
+    for a sliver of UDF work.  The byte count comes from
+    ``_scan_walk``, the leaf-file metadata walk behind fan_out's split
+    estimate, stopped as soon as the input fills ``defaultParallelism``
+    tasks — at 100 TB that is after a handful of files, and fan_out is
+    a no-op either way.  Unresolvable inputs keep fan_out's default
+    target."""
+    if df.isStreaming:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    walked = _scan_walk(
+        df, lambda n_files, n_bytes: n_bytes >= target * _PY_UDF_TASK_BYTES
+    )
+    if walked is not None:
+        target = max(1, min(target, walked[1] // _PY_UDF_TASK_BYTES))
+    return fan_out(df, target)
 
 
 def _size_to_bytes(s: str) -> int:
@@ -154,10 +195,10 @@ def _uri_size(uri: str, sc) -> int | None:
     Hadoop ``FileStatus.getLen`` through the JVM gateway for everything
     else (s3a/hdfs/abfs/...), so the metadata fast path survives the
     100 TB object-storage posture instead of silently resurrecting the
-    ``.rdd`` planning job (VERDICT r13 #3/#6).  The Hadoop FileSystem
-    instance is cached per (scheme, authority) by Hadoop itself, so the
-    per-file cost is one metadata RPC, bounded further by the caller's
-    saturation early-exit.  None = unstattable (caller falls back)."""
+    ``.rdd`` planning job.  The Hadoop FileSystem instance is cached per
+    (scheme, authority) by Hadoop itself, so the per-file cost is one
+    metadata RPC, bounded further by the caller's saturation
+    early-exit.  None = unstattable (caller falls back)."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -195,15 +236,9 @@ def _estimated_scan_splits(
     operators genuinely need.  bytes/maxPartitionBytes underestimates
     (a lower bound on row-group-bearing splits), so the error direction
     is always a cheap extra repartition of a small input, never a
-    serialized scan.  Known caveat (ADVICE r13): ``inputFiles`` ignores
+    serialized scan.  Known caveat: ``inputFiles`` ignores
     partition pruning, so a heavily-pruned partitioned scan can read
     high — every current call site feeds an unpruned leaf scan."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
     try:
         conf = df.sparkSession.conf
         mpb = _size_to_bytes(
@@ -216,6 +251,32 @@ def _estimated_scan_splits(
         return None
     if mpb <= 0:
         return None
+
+    def splits(n_files: int, n_bytes: int) -> int:
+        return max(1, -(-(n_bytes + n_files * open_cost) // mpb))
+
+    walked = _scan_walk(
+        df,
+        None
+        if saturate_at is None
+        else lambda n_files, n_bytes: splits(n_files, n_bytes) >= saturate_at,
+    )
+    return None if walked is None else splits(*walked)
+
+
+def _scan_walk(
+    df: DataFrame, stop: Callable[[int, int], bool] | None = None
+) -> tuple[int, int] | None:
+    """(files seen, bytes seen) over the frame's leaf files, from
+    driver-side metadata only, walking until ``stop(files, bytes)``
+    holds or the files run out.  None when the frame has no resolvable
+    files or any file is unstattable."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    if not files:
+        return None
     sc = df.sparkSession.sparkContext
     total = 0
     for n_seen, uri in enumerate(files, start=1):
@@ -223,8 +284,6 @@ def _estimated_scan_splits(
         if size is None:
             return None
         total += size
-        if saturate_at is not None:
-            est = max(1, -(-(total + n_seen * open_cost) // mpb))
-            if est >= saturate_at:
-                return est
-    return max(1, -(-(total + len(files) * open_cost) // mpb))
+        if stop is not None and stop(n_seen, total):
+            return n_seen, total
+    return len(files), total

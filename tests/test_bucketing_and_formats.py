@@ -179,7 +179,7 @@ def test_wds_shard_roundtrip_and_reproducibility(spark, tmp_path):
 
 
 def test_wds_reader_dotless_members_stay_distinct(spark, tmp_path):
-    """Foreign-shard edge (ADVICE r8): tar members WITHOUT a dot in the
+    """Foreign-shard edge: tar members WITHOUT a dot in the
     name must each stay their own sample (key=<full name>, ext=''),
     not silently merge under key=''."""
     import os
@@ -228,7 +228,7 @@ class _StubScanFrame:
 
 
 def test_scan_split_estimate_covers_remote_schemes(spark, monkeypatch):
-    """VERDICT r13 #6: the metadata split estimate must not silently
+    """The metadata split estimate must not silently
     fall back to the .rdd planning job for object-storage URIs — the
     Hadoop FileStatus path (mocked here) serves s3a/hdfs sizes."""
     from mapreducer_spark.sources import tables
@@ -270,7 +270,7 @@ def test_scan_split_estimate_saturates_early(spark, monkeypatch):
 
 
 def test_scan_split_estimate_unparseable_conf_falls_back(spark, monkeypatch):
-    """ADVICE r13: a conf value _size_to_bytes cannot parse must mean
+    """A conf value _size_to_bytes cannot parse must mean
     'fall back to .rdd', never an uncaught ValueError out of fan_out."""
     from mapreducer_spark.sources import tables
 
@@ -291,9 +291,46 @@ def test_scan_split_estimate_unparseable_conf_falls_back(spark, monkeypatch):
             spark.conf.set(key, prior)
 
 
+class _StubFanOutFrame(_StubScanFrame):
+    """A stub scan frame whose repartition reports its target."""
+
+    def repartition(self, n):
+        return ("repartitioned", n)
+
+
+def test_python_fan_out_floor(spark, monkeypatch):
+    """A scan feeding a Python UDF gets at most one task per
+    _PY_UDF_TASK_BYTES of input: returned unchanged below the floor,
+    repartitioned above it (capped at defaultParallelism), while the
+    JVM fan_out still spreads the same small input to every core."""
+    from mapreducer_spark.sources import tables
+
+    floor = tables._PY_UDF_TASK_BYTES
+    dp = spark.sparkContext.defaultParallelism
+    assert dp > 3
+    sizes = {"s3a://b/small/part-0.parquet": floor * 6 // 10}
+    sizes.update({f"s3a://b/mid/part-{i}.parquet": floor for i in range(3)})
+    sizes.update(
+        {f"s3a://b/big/part-{i}.parquet": floor * 2 for i in range(dp)}
+    )
+    monkeypatch.setattr(tables, "_uri_size", lambda uri, sc: sizes.get(uri))
+
+    def frame(prefix):
+        return _StubFanOutFrame(
+            spark, [u for u in sizes if u.startswith(f"s3a://b/{prefix}/")]
+        )
+
+    small = frame("small")
+    assert tables.fan_out_for_python(small) is small
+    assert tables.fan_out(small) == ("repartitioned", dp)
+    assert tables.fan_out_for_python(frame("mid")) == ("repartitioned", 3)
+    assert tables.fan_out_for_python(frame("big")) == ("repartitioned", dp)
+
+
 def test_local_fan_out_behavior_unchanged(spark, sf_dir):
-    """Local file: scans keep the r13 semantics: a tiny single-file
-    fixture reads as 1 split and fans out to cluster parallelism."""
+    """Local file scans keep the split-estimate semantics: a tiny
+    single-file fixture reads as 1 split and fans out to cluster
+    parallelism."""
     from mapreducer_spark.sources import fan_out, load_table
 
     li = load_table(spark, sf_dir, "lineitem")

@@ -1,4 +1,4 @@
-"""Frozen derived-frame lifecycle tests (VERDICT r11 #1) — the frame
+"""Frozen derived-frame lifecycle tests — the frame
 siblings of tests/test_index_guard.py.
 
 Three contracts:
@@ -14,6 +14,7 @@ Three contracts:
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -98,6 +99,28 @@ def _clear_fp_cache():
     for fn in (fz._fingerprints_at, fz._file_md5_at):
         if hasattr(fn, "cache_clear"):
             fn.cache_clear()
+
+
+def test_serve_reads_fingerprints_once(spark, monkeypatch, _clear_fp_cache):
+    """A fingerprint file that changes between reads is read ONCE per
+    serve, and the token is the very record is_fresh validated."""
+    sf_dir = FIXTURES[0]
+    spec = _specs()["copurchase_up_edges"]
+    key = "sf0.001/copurchase_up_edges"
+    real = fz._fingerprints()
+    assert fz.is_fresh(sf_dir, spec, real) is real[key]
+    reads = []
+
+    def changing():
+        reads.append(True)
+        if len(reads) == 1:
+            return real
+        return {**real, key: {**real[key], "n_rows": -1}}
+
+    monkeypatch.setattr(fz, "_fingerprints", changing)
+    _df, token = fz.frozen_or_build_info(spark, sf_dir, spec)
+    assert len(reads) == 1
+    assert token == json.dumps(real[key], sort_keys=True)
 
 
 def test_source_drift_falls_back_to_live(spark, monkeypatch, _clear_fp_cache):

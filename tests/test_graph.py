@@ -1,8 +1,8 @@
 """Graph-operator structure tests (beyond the oracle hash checks).
 
-The headline here is the PageRank rank-vector size switch (VERDICT r4
-#2): above _PR_BROADCAST_MAX_V vertices the per-round join falls back
-from a broadcast of the rank vector to a keyed shuffle.  The fallback
+The headline here is the PageRank rank-vector size switch: above
+_PR_BROADCAST_MAX_V vertices the per-round join falls back from a
+broadcast of the rank vector to a keyed shuffle.  The fallback
 branch can never trigger on fixture-sized graphs, so it is forced by
 patching the cap to zero and asserted EQUAL to the broadcast path —
 the per-edge decimal-rounded contributions make both partitionings
@@ -308,3 +308,30 @@ def test_kcore_job_budget(spark, sf_dir, monkeypatch, count_jobs):
     assert rows
     assert len(pins) <= 1
     assert 0 < n_jobs <= _KCORE_JOB_BUDGET
+
+
+def test_sym_edges_memo_hit_skips_serve(
+    spark, sf_dir, monkeypatch, count_jobs
+):
+    """A second copurchase_sym_edges call is a memo hit found by the
+    freshness-token probe alone: the same frame, no Spark job, and no
+    parquet read of the edge artifact."""
+    import mapreducer_spark.sources as sources
+    from mapreducer_spark.functions.memo import clear_session_caches
+    from mapreducer_spark.sources import tables
+
+    clear_session_caches()
+    first = graph.copurchase_sym_edges(spark, sf_dir)
+    reads = []
+
+    def counted_read(spark, path):
+        reads.append(path)
+        return tables.read_parquet(spark, path)
+
+    monkeypatch.setattr(sources, "read_parquet", counted_read)
+    second, n_jobs = count_jobs(
+        lambda: graph.copurchase_sym_edges(spark, sf_dir)
+    )
+    assert second is first
+    assert n_jobs == 0
+    assert reads == []

@@ -9,6 +9,12 @@ one failure mode the hash gate cannot see — still gets caught.
 
 from __future__ import annotations
 
+import math
+import struct
+
+import pytest
+from hypothesis import given, settings, strategies as st
+
 from mapreducer_spark.registry import all_queries
 
 
@@ -224,8 +230,209 @@ def test_in_session_reconciles_with_session_count(spark, sf_dir):
     assert conv.converting_sessions <= conv.sessions_with_view <= n_sessions
 
 
+_DEC_SCALES = (2, 4, 6)
+
+
+def _old_dec_sum(c, scale):
+    """The per-row-cast formula dec_sum replaced, kept as the reference:
+    the new kernel must return its bits."""
+    from pyspark.sql import functions as F
+
+    return F.sum(F.col(c).cast(f"decimal(18,{scale})")).cast("double")
+
+
+def _bits(v):
+    return None if v is None else struct.pack("<d", v)
+
+
+def _dec_sum_pairs(df, key):
+    """{key: [(old, new) per scale, then dec_avg's (old, new)]} over the
+    frame's ``x`` column, one aggregation for all scales."""
+    from pyspark.sql import functions as F
+
+    from mapreducer_spark.functions.agg import dec_avg, dec_sum
+
+    aggs = []
+    for s in _DEC_SCALES:
+        aggs += [
+            _old_dec_sum("x", s).alias(f"o{s}"),
+            dec_sum("x", s).alias(f"n{s}"),
+        ]
+    aggs += [
+        (_old_dec_sum("x", 4) / F.count(F.lit(1))).alias("oa"),
+        dec_avg("x", 4).alias("na"),
+    ]
+    out = df.groupBy(key).agg(*aggs) if key else df.agg(*aggs)
+    return {
+        (r[key] if key else None): [
+            (r[f"o{s}"], r[f"n{s}"]) for s in (*_DEC_SCALES, "a")
+        ]
+        for r in out.collect()
+    }
+
+
+def _assert_dec_sum_bits_match(spark, values):
+    """dec_sum/dec_avg equal the old formula bit for bit, per row and
+    per group of 7, at every scale."""
+    rows = [(i, i % 7, v) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "i int, g int, x double")
+    for key in ("i", "g"):
+        for k, pairs in _dec_sum_pairs(df, key).items():
+            for old, new in pairs:
+                assert _bits(new) == _bits(old), (key, k, old, new)
+
+
+def _scale_edges():
+    """Values at the 2^45 / 10^s fast-branch edge, a few ulps each side."""
+    out = []
+    for s in _DEC_SCALES:
+        for edge in (2.0**45 / 10**s, -(2.0**45) / 10**s):
+            down = up = edge
+            out.append(edge)
+            for _ in range(3):
+                down = math.nextafter(down, 0.0)
+                up = math.nextafter(up, math.copysign(math.inf, edge))
+                out += [down, up]
+    return out
+
+
+_DEC_EDGE_VALUES = [
+    1.00005, -0.00005, 2.675, -2.675, 0.125, -0.125, 0.005, -0.005,
+    0.015, 1.0000005, -1.0000005, 0.0, -0.0, 1e-300, -1e-300, 5e-324,
+    None, 123456.785, 98765.43215, 0.30000000000000004,
+    # TPC-H-style 2-dp x 2-dp products, plain and as price * (1 - disc)
+    901.0 * 0.04, 1234.56 * 0.07, 99999.99 * 0.1, 54321.01 * (1 - 0.06),
+    37.5 * 0.05, 104949.5 * (1 - 0.03),
+] + _scale_edges()
+
+
+def test_dec_sum_matches_old_formula_on_edge_cases(spark):
+    """Exact ties, the 2^45 edge, signed zero, NULL, subnormals and
+    2-dp products: the kernel's bits equal the per-row-cast formula."""
+    _assert_dec_sum_bits_match(spark, _DEC_EDGE_VALUES)
+
+
+def test_dec_sum_empty_and_null_groups_match_old_formula(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(1, None), (1, None), (2, 1.5), (2, None)], "g int, x double"
+    )
+    got = _dec_sum_pairs(df, "g")
+    for pairs in got.values():
+        for old, new in pairs:
+            assert _bits(new) == _bits(old)
+    assert got[1][0] == (None, None)  # all-NULL group
+    assert got[2][0] == (1.5, 1.5)
+    (empty,) = _dec_sum_pairs(df.where(F.lit(False)), None).values()
+    assert all(p == (None, None) for p in empty[: len(_DEC_SCALES)])
+
+
+def test_dec_sum_group_sums_past_2_53_units_match_old_formula(spark):
+    """Group sums above 2^53 units, from fast-branch rows (3.4e11 at
+    scale 2) and slow-branch rows (3.4e11 at scale 6, 4e11 at scale 2)."""
+    values = [3.4e11 + i / 100 for i in range(2800)] + [4e11, -4e11 + 0.01]
+    # every group of 7 (the helper's grouping) crosses 2^53 units
+    assert min(sum(values[g::7]) * 100 for g in range(7)) > 2**53
+    _assert_dec_sum_bits_match(spark, values)
+
+
+_dec_value = st.one_of(
+    st.none(),
+    st.floats(min_value=-1e11, max_value=1e11, allow_nan=False),
+    # magnitudes whose x * 10^s crosses 2^45 at some scale
+    st.builds(
+        lambda m, neg: -m if neg else m,
+        st.floats(min_value=1e7, max_value=1e11),
+        st.booleans(),
+    ),
+    st.builds(
+        lambda k, s: (k + 0.5) / 10**s,
+        st.integers(min_value=-(10**12), max_value=10**12),
+        st.sampled_from(_DEC_SCALES),
+    ),
+    st.builds(
+        lambda a, b: (a / 100) * (b / 100),
+        st.integers(min_value=-(10**7), max_value=10**7),
+        st.integers(min_value=0, max_value=100),
+    ),
+    st.builds(
+        lambda a, b: (a / 100) * (1 - b / 100),
+        st.integers(min_value=0, max_value=10**7),
+        st.integers(min_value=0, max_value=10),
+    ),
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(_dec_value, min_size=1, max_size=300))
+def test_dec_sum_matches_old_formula_hypothesis(spark, values):
+    _assert_dec_sum_bits_match(spark, values)
+
+
+def test_dec_sum_nan_and_out_of_range_behave_as_before(spark):
+    """A NaN row counts as NULL, and a value past DECIMAL(18,4) raises
+    the same error under ANSI, exactly as the per-row cast did."""
+    from mapreducer_spark.functions.agg import dec_sum
+
+    df = spark.createDataFrame(
+        [(1, float("nan")), (2, float("nan")), (2, 2.5)], "g int, x double"
+    )
+    got = _dec_sum_pairs(df, "g")
+    assert got[1][0] == (None, None)
+    assert got[2][0] == (2.5, 2.5)
+
+    key = "spark.sql.ansi.enabled"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        big = spark.createDataFrame([(1.5e14,)], "x double")
+        errors = []
+        for agg in (_old_dec_sum("x", 4), dec_sum("x", 4)):
+            with pytest.raises(Exception) as e:
+                big.agg(agg.alias("v")).collect()
+            errors.append(e.value)
+        old_err, new_err = errors
+        assert type(new_err) is type(old_err)
+        assert new_err.getCondition() == old_err.getCondition()
+        assert "NUMERIC_VALUE_OUT_OF_RANGE" in old_err.getCondition()
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+def test_dec_sum_partition_count_invariant(spark):
+    """One partition and 32 partitions give the same bits."""
+    import random
+
+    from mapreducer_spark.functions.agg import dec_sum
+
+    rnd = random.Random(11)
+    values = [
+        round(rnd.uniform(-1e5, 1e5), 2) * round(rnd.uniform(0, 1), 2)
+        for _ in range(3000)
+    ] + _DEC_EDGE_VALUES
+    df = spark.createDataFrame(
+        [(i % 13, v) for i, v in enumerate(values)], "g int, x double"
+    )
+    results = []
+    for n in (1, 32):
+        rows = (
+            df.repartition(n)
+            .groupBy("g")
+            .agg(*[dec_sum("x", s).alias(f"s{s}") for s in _DEC_SCALES])
+            .collect()
+        )
+        results.append(
+            {r.g: [_bits(r[f"s{s}"]) for s in _DEC_SCALES] for r in rows}
+        )
+    assert results[0] == results[1]
+
+
 def test_fixed6_quantize_cross_engine_and_sum_exactness(spark):
-    """The r9 fixed6 primitive's two contracts, adversarially probed:
+    """The fixed6 primitive's two contracts, adversarially probed:
 
     1. Cross-engine determinism: fixed6_quantize (floor(x*1e6+0.5) as
        LONG in pure double arithmetic) must equal DuckDB's evaluation
@@ -397,7 +604,7 @@ def test_dp_clamped_sum_release_reconciles(spark, sf_dir):
 
 
 def test_dp_histogram_composition_accounting(spark, sf_dir):
-    """The DP histogram's budget accounting (VERDICT r10 #5): the
+    """The DP histogram's budget accounting: the
     release prices itself under PARALLEL composition (eps_total == the
     per-cell epsilon, never cells x eps) because disjoint clamped
     buckets give per-cell sensitivity 1; a SECOND release under a new
@@ -526,7 +733,7 @@ def test_mmr_rerank_invariants(spark, sf_dir):
 
 
 def test_dp_histogram_release_rejects_out_of_grid_buckets(spark):
-    """ADVICE r11: a true_h bucket outside [0, n_buckets) must fail
+    """A true_h bucket outside [0, n_buckets) must fail
     LOUD at execution, not silently drop its mass — a left-join drop
     would under-report identically in Spark and the oracle, so the
     hash gate could never catch it."""
@@ -558,7 +765,7 @@ def test_dp_histogram_release_rejects_out_of_grid_buckets(spark):
 
 
 def test_pca_fold_decimal_adds_resolve_exact(spark):
-    """ADVICE r13: the PCA mat-vec/norm folds must accumulate with adds
+    """The PCA mat-vec/norm folds must accumulate with adds
     whose STATIC result type keeps the product scale — a precision-38
     accumulator forces allowPrecisionLoss to shave the scale and
     HALF_UP-round every partial sum (1e-14 / 1e-17), silently breaking
@@ -572,7 +779,7 @@ def test_pca_fold_decimal_adds_resolve_exact(spark):
     out = df.select(
         (F.lit(0).cast("decimal(37,15)") + prod).alias("matvec_add"),
         (F.lit(0).cast("decimal(37,18)") + sq * sq).alias("norm_add"),
-        # the r13 accumulator shape, for contrast: scale-adjusted
+        # a precision-38 accumulator, for contrast: scale-adjusted
         (F.lit(0).cast("decimal(38,15)") + prod).alias("lossy_add"),
     )
     types = {f.name: f.dataType.simpleString() for f in out.schema.fields}
