@@ -31,6 +31,7 @@ from mapreducer_spark.functions.text import ORACLE_TOKEN_LIST_SNIPPET
 from mapreducer_spark.functions.frozen import frozen_spec
 from mapreducer_spark.operators.dedup import (
     docs_with_near_dups,
+    neardup_pairs_frozen,
     neardup_pairs_shared,
 )
 from mapreducer_spark.registry import register
@@ -299,8 +300,7 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neardup_cc_labels_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v, comp) component labels over the near-dup pair graph — the
     cluster-assignment table a production dedup pipeline materializes
-    exactly once (this docstring predates the artifact; r12 made the
-    materialization real).  The iterative label-propagation run is the
+    exactly once.  The iterative label-propagation run is the
     expensive part — rounds x shuffles — and is exactly what the frozen
     artifact amortizes; its input is the frozen pair artifact when
     fresh."""
@@ -311,14 +311,14 @@ def neardup_cc_labels_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _neardup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Component labels over the near-dup pair graph: frozen artifact
     when fingerprint-fresh (live iterative rebuild otherwise), memoized
-    per (session, fixture) — shared between neardup_clusters,
-    corpus_after_neardup_dedup and corpus_dedup_keep_best."""
-    from mapreducer_spark.functions.memo import session_memo
+    and pinned per (session, fixture, freshness tokens) — shared
+    between neardup_clusters, corpus_after_neardup_dedup and
+    corpus_dedup_keep_best.  The live rebuild reads the pair frame, so
+    the pair artifact's token is part of the key."""
+    from mapreducer_spark.functions.memo import memo_serve
 
-    return session_memo(
-        spark,
-        ("neardup_cc_labels", sf_dir),
-        lambda: neardup_cc_labels_frozen(spark, sf_dir),
+    return memo_serve(
+        spark, sf_dir, neardup_cc_labels_frozen, inputs=(neardup_pairs_frozen,)
     )
 
 

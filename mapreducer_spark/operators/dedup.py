@@ -247,7 +247,7 @@ def neardup_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The VERIFY-stage pipeline query: the blocked overlap join +
     # Jaccard computation run live, but the (doc_id, block, tok_set)
     # posting sets are served from the frozen neardup_tok_hash_sets
-    # artifact when fresh (ADVICE r12: the benched number prices the
+    # artifact when fresh (the benched number prices the
     # pair VERIFICATION, not tokenization/posting-set construction —
     # that build cost is priced once by the freeze tool, as a
     # production pipeline would).  Downstream consumers (clustering,
@@ -257,17 +257,14 @@ def neardup_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def neardup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The near-dup pair frame for CONSUMERS: fingerprint-fresh frozen
-    artifact (functions/frozen.py) — the materialization a production
-    pipeline writes exactly once — memoized per (session, fixture);
-    live rebuild with a loud warning on staleness."""
-    from mapreducer_spark.functions.memo import session_memo
+    """The near-dup pair frame for CONSUMERS: the fingerprint-fresh
+    frozen artifact (functions/frozen.py), the materialization a
+    production pipeline writes exactly once, else a live rebuild with
+    a loud warning; memoized and pinned per (session, fixture,
+    freshness token) by ``functions.memo.memo_serve``."""
+    from mapreducer_spark.functions.memo import memo_serve
 
-    return session_memo(
-        spark,
-        ("neardup_pairs", sf_dir),
-        lambda: neardup_pairs_frozen(spark, sf_dir),
-    )
+    return memo_serve(spark, sf_dir, neardup_pairs_frozen)
 
 
 def _neardup_jaccard_blocked_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

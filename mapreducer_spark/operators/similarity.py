@@ -32,7 +32,7 @@ from mapreducer_spark.functions.agg import (
     fixed6_grouped_sums,
     oracle_fixed6_sum,
 )
-from mapreducer_spark.functions.frozen import frozen_spec
+from mapreducer_spark.functions.frozen import _file_md5, frozen_spec
 from mapreducer_spark.functions.vectors import cosine, oracle_sign_bucket, sign_bucket
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import fan_out, load_table
@@ -397,19 +397,12 @@ def _frozen_fingerprints() -> dict[str, str]:
         return {}
 
 
-@lru_cache(maxsize=32)
 def _embeddings_md5(sf_dir: str) -> str | None:
-    import hashlib
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        h = hashlib.md5()
-        with open(path, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                h.update(chunk)
-        return h.hexdigest()
-    except OSError:
-        return None
+    """md5 of the fixture's embeddings.parquet, cached on the file's
+    (path, mtime_ns, size): a file rewritten in place gets a fresh
+    hash, so the index and codebook guards see drift without a cache
+    clear."""
+    return _file_md5(os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def _fp_record(key: str) -> tuple[str | None, int | None]:
@@ -3752,15 +3745,12 @@ def _spherical_lloyd(em: DataFrame, k: int, rounds: int):
     k tiny centroid rows x one scan (map-side assignment), one
     (cluster x dim) aggregation with map-side partials.
 
-    The rounds chain LAZILY in one action (optimization r13, the
-    part_copurchase_pagerank broadcast-regime shape, guide §1.2): each
-    round's centroid frame is referenced exactly once by the next
-    round, so the plan grows linearly and nothing re-executes — the
-    former per-round localCheckpoint(eager=True) bought plan flatness
-    at the price of 2 blocking driver jobs per round plus a Python
-    round-trip between them (~1.5 s of the 5.5 s ari-staleness build).
-    Consumers that reference the returned frames more than once
-    materialize them once (session_memo / checkpoint_inspected)."""
+    The rounds chain LAZILY in one action (the part_copurchase_pagerank
+    broadcast-regime shape): each round's centroid frame is referenced
+    exactly once by the next round, so the plan grows linearly and
+    nothing re-executes, with no blocking driver job between rounds.
+    The session memo (_lloyd_artifacts) pins both returned frames once
+    for every consumer."""
     cents = em.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cent_id"),
         F.transform("v", lambda x: x.cast("double")).alias("cv"),
@@ -3768,18 +3758,16 @@ def _spherical_lloyd(em: DataFrame, k: int, rounds: int):
 
     assign = None
     for r in range(1, rounds + 1):
-        # Per-ROW argmax over the centroid array (optimization r14,
-        # guide §2.4 remove-shuffles / VERDICT r13 #3): the k centroids
+        # Per-ROW argmax over the centroid array: the k centroids
         # fold into ONE row (sort_array keeps cs ordered by cent_id —
         # sorting k metadata rows, not data) and ride a broadcast, so
-        # the assignment is a pure map-side projection — the former
-        # n x k crossJoin rows and the n-row groupBy(vec_id) EXCHANGE
-        # per round are gone.  array_max over struct(sim, -cent_id)
-        # is the same lexicographic reduction max_by ran: round-6
-        # cosine first, lowest cent_id on ties (nc breaks every tie, so
-        # the trailing fields never compare), and a NULL sim (zero-norm
-        # vector) loses to any non-NULL exactly as max_by's NULL-last
-        # ordering did.
+        # the assignment is a pure map-side projection with no n x k
+        # crossJoin rows and no n-row EXCHANGE per round.  array_max
+        # over struct(sim, -cent_id) is the same lexicographic
+        # reduction max_by ran: round-6 cosine first, lowest cent_id on
+        # ties (nc breaks every tie, so the trailing fields never
+        # compare), and a NULL sim (zero-norm vector) loses to any
+        # non-NULL exactly as max_by's NULL-last ordering did.
         carr = cents.groupBy().agg(
             F.sort_array(F.collect_list(F.struct("cent_id", "cv"))).alias(
                 "cs"
@@ -3855,39 +3843,28 @@ def _lloyd_artifacts(
     (cents, assign, fingerprint).  ann_index_ari_staleness and
     retrain_frozen_index both run the identical (k, rounds) training
     loop; within one session (a gate sweep, a bench, a notebook) the
-    second consumer gets the checkpointed frames for free.
+    second consumer gets the pinned frames for free.
 
     The memo key includes the embeddings.parquet md5 taken BEFORE
     training, so a fixture regenerated mid-session can never be served
-    stale artifacts (the retrain TOCTOU hazard) — and retrain re-checks
-    this same fingerprint before freezing.  ``assign`` is memoized as
-    the THIN (vec_id, cent_id, sim) projection: the embedding vector
-    column stays out of the checkpoint (the memo contract's no-corpus-
-    payload rule), and no consumer of the shared artifact needs it.
+    stale artifacts — and retrain re-checks this same fingerprint
+    before freezing.  ``assign`` is memoized as the THIN (vec_id,
+    cent_id, sim) projection: the embedding vector column stays out of
+    the pin (the memo's no-corpus-payload rule), and no consumer of the
+    shared artifact needs it.
     """
     from mapreducer_spark.functions.memo import session_memo
 
-    _embeddings_md5.cache_clear()
     fp = _embeddings_md5(sf_dir)
-    holder: dict = {}
 
-    def build_assign():
+    def build():
         em = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").alias("v")
         )
         cents, assign = _spherical_lloyd(em, k, rounds)
-        holder["cents"] = cents
-        return assign.select("vec_id", "cent_id", "sim")
+        return cents, assign.select("vec_id", "cent_id", "sim")
 
-    assign = session_memo(
-        spark, ("lloyd_assign", sf_dir, fp, k, rounds), build_assign
-    )
-    # Built (and therefore cached) together with assign above; the
-    # lambda only fires on the same first call that filled holder.
-    cents = session_memo(
-        spark, ("lloyd_cents", sf_dir, fp, k, rounds),
-        lambda: holder["cents"],
-    )
+    cents, assign = session_memo(spark, ("lloyd", sf_dir, fp, k, rounds), build)
     return cents, assign, fp
 
 
@@ -3899,7 +3876,7 @@ def retrain_frozen_index(
     k: int | None = None,
     rounds: int = _KM_ROUNDS,
 ) -> list:
-    """IN-ENGINE frozen-index retrain (VERDICT r8 #6) — closes the ANN
+    """IN-ENGINE frozen-index retrain — closes the ANN
     index lifecycle: the drift guard (frozen_index_for) refuses a stale
     index; this trains a replacement with the PROVEN oracle-checked
     spherical-k-means dataflow (_spherical_lloyd, the loop behind the
@@ -3920,7 +3897,7 @@ def retrain_frozen_index(
     fp_path = fingerprint_path or _IVF_FINGERPRINT_PATH
     n_train = load_table(spark, sf_dir, "embeddings").count()
     if k is None:
-        # The sqrt-n scale rule (VERDICT r10 #6) — same default the
+        # The sqrt-n scale rule — same default the
         # offline tool applies, so in-engine and offline retrains
         # freeze interchangeable artifacts.
         k = ivf_k_for(n_train)
@@ -3930,7 +3907,6 @@ def retrain_frozen_index(
     # TOCTOU guard: the fingerprint was taken BEFORE training (it keys
     # the memoized artifacts); re-hash now and refuse to freeze an
     # index whose fixture changed underneath the training run.
-    _embeddings_md5.cache_clear()
     if _embeddings_md5(sf_dir) != fp_trained:
         raise RuntimeError(
             f"retrain_frozen_index: {sf_dir}/embeddings.parquet changed "
@@ -3949,7 +3925,7 @@ def retrain_frozen_index(
         pass
     key = os.path.basename(sf_dir.rstrip("/"))
     index[key] = trained
-    # Dict form (r11): freshness md5 + training-set size, the
+    # Dict form: freshness md5 + training-set size, the
     # mean-list serving guard's input (frozen_index_for).
     fingerprints[key] = {"md5": fp_trained, "n_train": int(n_train)}
     os.makedirs(os.path.dirname(idx_path), exist_ok=True)

@@ -145,9 +145,9 @@ def price_qty_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table is where they deliberately differ.  A recursive CTE's
 # non-recursive CTEs are inlined into every iteration, so deriving the
 # edge list inside the recursion re-ran the lineitem self-join per step
-# (~15 s at sf0.1).  The Spark side therefore materializes the edge
-# list ONCE (graph.py's set-expansion builder + localCheckpoint, ~1 s)
-# and recurses over the materialized view — the same "iterate over a
+# (~15 s at sf0.1).  The Spark side therefore recurses over the edge
+# list materialized ONCE (graph.copurchase_sym_edges, pinned by the
+# session memo) as a view — the same "iterate over a
 # pinned edge list" discipline every iterative operator in this repo
 # uses (clustering.py, graph.py).  DuckDB, whose optimizer materializes
 # the CTE, keeps the fully-inline ANSI derivation as the oracle.
@@ -202,18 +202,12 @@ GROUP BY seed
 def copurchase_bfs_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducer_spark.operators.graph import copurchase_sym_edges
 
-    # Suffixed view name (repo convention, cf. relational.py
-    # "li_gsets_tmp") so a session-global "edges" view can't collide.
-    # Pin the edge frame HERE (optimization r13): since the shared
-    # serve stopped eagerly copying the frozen artifact, the recursive
-    # CTE would otherwise re-scan artifact + symmetrizing union once
-    # per BFS level (A/B: 4.8 s lazy vs 3.8 s pinned at sf0.1); the
-    # one-off materialization is cheaper than per-level rescans.
-    from mapreducer_spark.plans.inspect import checkpoint_inspected
-
-    edges = checkpoint_inspected(
-        copurchase_sym_edges(spark, sf_dir), "bfs.edges"
-    )
+    # The memoized edge frame is pinned, so each BFS level of the
+    # recursive CTE reads the materialized edges, not the artifact plus
+    # its symmetrizing union.  Suffixed view name (repo convention, cf.
+    # relational.py "li_gsets_tmp") so a session-global "edges" view
+    # can't collide.
+    edges = copurchase_sym_edges(spark, sf_dir)
     edges.createOrReplaceTempView("copurchase_edges_tmp")
     return spark.sql("WITH RECURSIVE " + _BFS_TRAVERSAL_SQL)
 

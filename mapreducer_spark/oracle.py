@@ -158,55 +158,12 @@ def run_spark_gated(spark, query, sf_dir: str) -> tuple[list[str], list[tuple]]:
     sdf = query.fn(spark, sf_dir)
     assert_scalar_schema(query.name, sdf)
     scols, srows = run_spark(sdf)
-    # Rescan budget on the just-executed plan (free — run_spark already
-    # collected): no query may read the same table more than
-    # MAX_EXECUTED_SCANS_PER_TABLE times.  This is the structural kill
-    # for the r8 corr-matrix defect class (a unionAll fan-out silently
-    # re-executing its input subtree per branch — 12 executed scans).
-    from mapreducer_spark.plans.inspect import (
-        BROADCAST_HINTED_MAX_ROWS,
-        MAX_EXECUTED_SCANS_PER_TABLE,
-        UNPARTITIONED_WINDOW_MAX_ROWS,
-        executed_filescan_counts,
-        hinted_broadcast_rows,
-        unpartitioned_window_input_rows,
-    )
+    # The structural budgets on the just-executed plan (free —
+    # run_spark already collected): rescans per table, rows through an
+    # unpartitioned window, rows in a hint-forced broadcast.
+    from mapreducer_spark.plans.inspect import check_plan_budgets
 
-    for table, n_scans in executed_filescan_counts(sdf).items():
-        assert n_scans <= MAX_EXECUTED_SCANS_PER_TABLE, (
-            f"{query.name}: executed plan reads table {table!r} "
-            f"{n_scans} times (budget {MAX_EXECUTED_SCANS_PER_TABLE}) — "
-            "a branch is re-executing its input subtree; localCheckpoint "
-            "the shared frame or emit branches via F.stack"
-        )
-    # Single-partition window budget (r10, whitelist-free — the
-    # structural kill for the r9 vocab_growth_curve class): any Window
-    # node with an empty partition spec must sit on a domain-bounded
-    # frame.  Data-dimension frames cross the bound by sf0.01/sf0.1;
-    # fix with functions/agg.py's two-phase global_row_number /
-    # global_running_sum helpers.
-    for n_rows in unpartitioned_window_input_rows(sdf):
-        assert 0 <= n_rows <= UNPARTITIONED_WINDOW_MAX_ROWS, (
-            f"{query.name}: unpartitioned Window over {n_rows} rows "
-            f"(budget {UNPARTITIONED_WINDOW_MAX_ROWS}) — a global "
-            "window collapses its whole input into ONE task; use the "
-            "two-phase helpers in functions/agg.py"
-        )
-    # Hinted-broadcast budget (r11, whitelist-free — the structural kill
-    # for the unbounded-broadcast class the r10 audit cleared by hand):
-    # every HINT-FORCED BroadcastExchange must carry a domain-bounded
-    # frame.  Stats/AQE-chosen broadcasts are exempt by attribution —
-    # Spark stops choosing those when the side outgrows its bytes
-    # threshold, while a hint ships the frame to every executor no
-    # matter how large it grows.  Fix: drop the hint (the planner still
-    # broadcasts small frames on its own) or bound the frame.
-    for n_rows in hinted_broadcast_rows(sdf):
-        assert 0 <= n_rows <= BROADCAST_HINTED_MAX_ROWS, (
-            f"{query.name}: hint-forced BroadcastExchange over {n_rows} "
-            f"rows (budget {BROADCAST_HINTED_MAX_ROWS}) — an explicit "
-            "broadcast() on a frame that grows with the data OOMs at "
-            "100 TB; drop the hint or bound the frame"
-        )
+    check_plan_budgets(sdf, query.name)
     return scols, srows
 
 

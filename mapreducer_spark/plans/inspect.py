@@ -329,7 +329,7 @@ def hinted_broadcast_rows(df: DataFrame) -> list[int]:
                         hinted = False
                 # else: link defined but NOT a Join — attribution gap;
                 # keep hinted=True so it fails loud like a missing link
-                # (ADVICE r11) instead of silently exempting the exchange.
+                # instead of silently exempting the exchange.
             if hinted:
                 kids = _children(node)
                 build = kids[1] if build_right else kids[0]
@@ -338,35 +338,56 @@ def hinted_broadcast_rows(df: DataFrame) -> list[int]:
     return out
 
 
+def check_plan_budgets(df: DataFrame, label: str) -> None:
+    """Raise AssertionError when the EXECUTED plan of ``df`` breaks a
+    structural budget: a table read more than
+    MAX_EXECUTED_SCANS_PER_TABLE times, an unpartitioned Window over
+    more than UNPARTITIONED_WINDOW_MAX_ROWS rows, or a hint-forced
+    BroadcastExchange over more than BROADCAST_HINTED_MAX_ROWS rows.
+    The df must already have been executed; this only inspects.  The
+    checks are explicit raises, so they hold under ``python -O``."""
+    for table, n_scans in executed_filescan_counts(df).items():
+        if n_scans > MAX_EXECUTED_SCANS_PER_TABLE:
+            raise AssertionError(
+                f"{label}: executed plan reads table {table!r} "
+                f"{n_scans} times (budget {MAX_EXECUTED_SCANS_PER_TABLE}) "
+                "— a branch is re-executing its input subtree; "
+                "localCheckpoint the shared frame or emit branches via "
+                "F.stack"
+            )
+    for n_rows in unpartitioned_window_input_rows(df):
+        if not 0 <= n_rows <= UNPARTITIONED_WINDOW_MAX_ROWS:
+            raise AssertionError(
+                f"{label}: unpartitioned Window over {n_rows} rows "
+                f"(budget {UNPARTITIONED_WINDOW_MAX_ROWS}) — a global "
+                "window collapses its whole input into ONE task; use "
+                "the two-phase helpers in functions/agg.py"
+            )
+    for n_rows in hinted_broadcast_rows(df):
+        if not 0 <= n_rows <= BROADCAST_HINTED_MAX_ROWS:
+            raise AssertionError(
+                f"{label}: hint-forced BroadcastExchange over {n_rows} "
+                f"rows (budget {BROADCAST_HINTED_MAX_ROWS}) — an "
+                "explicit broadcast() on a frame that grows with the "
+                "data OOMs at 100 TB; drop the hint or bound the frame"
+            )
+
+
 def checkpoint_inspected(df: DataFrame, label: str) -> DataFrame:
     """localCheckpoint(eager=True) that does NOT blind the structural
-    budgets (ADVICE r11): a checkpoint severs lineage, so the gate's
-    per-collect detectors (run_spark_gated) only ever see the plan
-    segment AFTER the last checkpoint — a hinted broadcast, rescan
-    fan-out, or global window inside the checkpointed subtree would
-    escape.  This wrapper materializes the frame, then runs all three
-    budget detectors on the just-executed subtree plan before handing
-    back the severed frame, so iterative operators (MMR's greedy rounds,
-    pointer-jumping, ...) keep the whole pipeline under budget.  The
-    inspection itself is a JVM plan-tree walk over existing metrics —
-    no extra job."""
+    budgets: a checkpoint severs lineage, so the gate's per-collect
+    check (run_spark_gated) only ever sees the plan segment AFTER the
+    last checkpoint — a hinted broadcast, rescan fan-out, or global
+    window inside the checkpointed subtree would escape.  This wrapper
+    materializes the frame, then runs :func:`check_plan_budgets` on
+    the just-executed subtree plan before handing back the severed
+    frame, so iterative operators (MMR's greedy rounds,
+    pointer-jumping, ...) and every memoized frame
+    (functions/memo.py) keep the whole pipeline under budget.  The
+    inspection is a JVM plan-tree walk over existing metrics — no
+    extra job."""
     out = df.localCheckpoint(eager=True)
-    for table, n_scans in executed_filescan_counts(df).items():
-        assert n_scans <= MAX_EXECUTED_SCANS_PER_TABLE, (
-            f"{label}: checkpointed subtree reads table {table!r} "
-            f"{n_scans} times (budget {MAX_EXECUTED_SCANS_PER_TABLE})"
-        )
-    for n_rows in unpartitioned_window_input_rows(df):
-        assert 0 <= n_rows <= UNPARTITIONED_WINDOW_MAX_ROWS, (
-            f"{label}: checkpointed subtree has an unpartitioned Window "
-            f"over {n_rows} rows (budget {UNPARTITIONED_WINDOW_MAX_ROWS})"
-        )
-    for n_rows in hinted_broadcast_rows(df):
-        assert 0 <= n_rows <= BROADCAST_HINTED_MAX_ROWS, (
-            f"{label}: checkpointed subtree has a hint-forced "
-            f"BroadcastExchange over {n_rows} rows "
-            f"(budget {BROADCAST_HINTED_MAX_ROWS})"
-        )
+    check_plan_budgets(df, f"{label} (checkpointed subtree)")
     return out
 
 

@@ -450,8 +450,9 @@ def test_cli_snapshot_commands(spark, tmp_path, capsys):
 
 def test_session_memo_hits_and_evicts_stale_apps(spark):
     """functions.memo contract: same key -> same materialized frame
-    (one build), and entries from dead applications are evicted on
-    insert so long-lived processes don't pin stale checkpoints."""
+    (one build, also for a tuple of frames), entries from dead
+    applications are evicted on insert so long-lived processes don't
+    pin stale checkpoints, and the pin runs the plan budgets."""
     from mapreducer_spark.functions import memo
 
     calls = []
@@ -469,6 +470,34 @@ def test_session_memo_hits_and_evicts_stale_apps(spark):
     memo._CACHE[("dead-app-id", "x")] = a
     memo.session_memo(spark, ("memo_test_k2",), lambda: spark.range(1))
     assert ("dead-app-id", "x") not in memo._CACHE
+
+    # A tuple build: each frame pinned once, the same objects on a hit.
+    pair_calls = []
+
+    def build_pair():
+        pair_calls.append(1)
+        return spark.range(2), spark.range(4)
+
+    p1 = memo.session_memo(spark, ("memo_test_pair",), build_pair)
+    p2 = memo.session_memo(spark, ("memo_test_pair",), build_pair)
+    assert isinstance(p1, tuple) and len(p1) == 2
+    assert p2[0] is p1[0] and p2[1] is p1[1]
+    assert len(pair_calls) == 1
+    assert (p1[0].count(), p1[1].count()) == (2, 4)
+
+    # The memo's pin is budget-inspected: an oversized hint-forced
+    # broadcast inside a memoized build raises instead of hiding
+    # behind the checkpoint.
+    from pyspark.sql import functions as F
+
+    def build_bad():
+        base = spark.range(0, 9000)
+        grower = spark.range(0, 9000).select(F.col("id").alias("id2"))
+        return base.join(F.broadcast(grower), base.id == grower.id2)
+
+    with pytest.raises(AssertionError, match="hint-forced"):
+        memo.session_memo(spark, ("memo_test_bad",), build_bad)
+    assert not [k for k in memo._CACHE if "memo_test_bad" in k]
 
 
 def test_cli_curate_writes_snapshot_consistent_with_capstone(
@@ -624,11 +653,7 @@ def test_cli_retrain_index(spark, tmp_path, capsys, monkeypatch):
     monkeypatch.setattr(
         sim, "_IVF_FINGERPRINT_PATH", str(tmp_path / "fp.json")
     )
-    for fn in (
-        sim._frozen_ivf_index,
-        sim._frozen_fingerprints,
-        sim._embeddings_md5,
-    ):
+    for fn in (sim._frozen_ivf_index, sim._frozen_fingerprints):
         fn.cache_clear()
     fx = tmp_path / "sfcli"
     fx.mkdir()
@@ -639,11 +664,7 @@ def test_cli_retrain_index(spark, tmp_path, capsys, monkeypatch):
     assert rc == 0
     assert "re-frozen" in capsys.readouterr().out
     assert sim.frozen_index_for(str(fx)) is not None
-    for fn in (
-        sim._frozen_ivf_index,
-        sim._frozen_fingerprints,
-        sim._embeddings_md5,
-    ):
+    for fn in (sim._frozen_ivf_index, sim._frozen_fingerprints):
         fn.cache_clear()
 
 

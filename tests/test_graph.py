@@ -310,18 +310,16 @@ def test_kcore_job_budget(spark, sf_dir, monkeypatch, count_jobs):
     assert 0 < n_jobs <= _KCORE_JOB_BUDGET
 
 
-def test_sym_edges_memo_hit_skips_serve(
-    spark, sf_dir, monkeypatch, count_jobs
-):
-    """A second copurchase_sym_edges call is a memo hit found by the
+def _assert_memo_hit_skips_serve(fn, spark, sf_dir, monkeypatch, count_jobs):
+    """A second call of a memoized frozen serve is a hit found by the
     freshness-token probe alone: the same frame, no Spark job, and no
-    parquet read of the edge artifact."""
+    parquet read of the artifact."""
     import mapreducer_spark.sources as sources
     from mapreducer_spark.functions.memo import clear_session_caches
     from mapreducer_spark.sources import tables
 
     clear_session_caches()
-    first = graph.copurchase_sym_edges(spark, sf_dir)
+    first = fn(spark, sf_dir)
     reads = []
 
     def counted_read(spark, path):
@@ -329,9 +327,87 @@ def test_sym_edges_memo_hit_skips_serve(
         return tables.read_parquet(spark, path)
 
     monkeypatch.setattr(sources, "read_parquet", counted_read)
-    second, n_jobs = count_jobs(
-        lambda: graph.copurchase_sym_edges(spark, sf_dir)
-    )
+    second, n_jobs = count_jobs(lambda: fn(spark, sf_dir))
     assert second is first
     assert n_jobs == 0
     assert reads == []
+
+
+def test_sym_edges_memo_hit_skips_serve(
+    spark, sf_dir, monkeypatch, count_jobs
+):
+    _assert_memo_hit_skips_serve(
+        graph.copurchase_sym_edges, spark, sf_dir, monkeypatch, count_jobs
+    )
+
+
+def test_neardup_pairs_memo_hit_skips_serve(
+    spark, sf_dir, monkeypatch, count_jobs
+):
+    from mapreducer_spark.operators.dedup import neardup_pairs_shared
+
+    _assert_memo_hit_skips_serve(
+        neardup_pairs_shared, spark, sf_dir, monkeypatch, count_jobs
+    )
+
+
+def test_refreeze_mid_session_serves_new_frames(spark, sf_dir, monkeypatch):
+    """When the neardup_pairs fingerprint record changes mid-session (a
+    refreeze), the memo hands out new frames for the pairs and for the
+    component labels whose live build reads them, never the frames
+    pinned under the old record; unchanged records keep hitting."""
+    import os
+
+    from mapreducer_spark.functions import frozen as fz
+    from mapreducer_spark.functions.memo import clear_session_caches
+    from mapreducer_spark.operators.clustering import _neardup_cc_labels
+    from mapreducer_spark.operators.dedup import neardup_pairs_shared
+
+    clear_session_caches()
+    pairs, labels = (
+        neardup_pairs_shared(spark, sf_dir),
+        _neardup_cc_labels(spark, sf_dir),
+    )
+    edges = graph.copurchase_sym_edges(spark, sf_dir)
+    assert neardup_pairs_shared(spark, sf_dir) is pairs
+    assert _neardup_cc_labels(spark, sf_dir) is labels
+
+    real = fz._fingerprints()
+    key = f"{os.path.basename(sf_dir.rstrip('/'))}/neardup_pairs"
+    refrozen = {**real, key: {**real[key], "n_rows": real[key]["n_rows"] + 1}}
+    monkeypatch.setattr(fz, "_fingerprints", lambda: refrozen)
+
+    new_pairs = neardup_pairs_shared(spark, sf_dir)
+    new_labels = _neardup_cc_labels(spark, sf_dir)
+    assert new_pairs is not pairs
+    assert new_labels is not labels
+    assert neardup_pairs_shared(spark, sf_dir) is new_pairs
+    assert _neardup_cc_labels(spark, sf_dir) is new_labels
+    assert graph.copurchase_sym_edges(spark, sf_dir) is edges
+    assert sorted(map(tuple, new_pairs.collect())) == sorted(
+        map(tuple, pairs.collect())
+    )
+
+
+@pytest.mark.parametrize(
+    "query",
+    ["copurchase_assortativity", "neardup_triangles", "copurchase_bfs_recursive"],
+)
+def test_memo_consumers_pin_once(spark, sf_dir, monkeypatch, query):
+    """A cold consumer of a memoized frame pays exactly one pin, the
+    memo's own: consumers never re-pin memo output."""
+    from mapreducer_spark.functions.memo import clear_session_caches
+    from mapreducer_spark.registry import all_queries
+
+    frame_cls = type(spark.range(0))
+    pins = []
+    original = frame_cls.localCheckpoint
+
+    def counted(df, *args, **kwargs):
+        pins.append(True)
+        return original(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counted)
+    clear_session_caches()
+    assert all_queries()[query].fn(spark, sf_dir).collect()
+    assert len(pins) == 1

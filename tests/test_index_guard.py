@@ -31,7 +31,6 @@ def _clear_caches():
     for fn in (
         sim._frozen_ivf_index,
         sim._frozen_fingerprints,
-        sim._embeddings_md5,
         sim._frozen_pq_codebooks,
         sim._pq_fingerprints,
     ):
@@ -244,7 +243,7 @@ def test_trained_codebooks_cut_reconstruction_error(spark):
 
 
 def test_index_lifecycle_drift_retrain_serve(spark, tmp_path, monkeypatch, restore_caches):
-    """Full ANN index lifecycle in-engine (VERDICT r8 #6): fresh fixture
+    """Full ANN index lifecycle in-engine: fresh fixture
     -> retrain_frozen_index trains spherical k-means and freezes it
     under the fingerprint contract -> guard serves; PERTURB the
     embeddings (simulated fixture regeneration) -> guard REFUSES the
@@ -288,7 +287,6 @@ def test_index_lifecycle_drift_retrain_serve(spark, tmp_path, monkeypatch, resto
     (part,) = glob.glob(os.path.join(tmp_out, "part-*.parquet"))
     os.remove(fx / "embeddings.parquet")
     shutil.copy(part, fx / "embeddings.parquet")
-    sim._embeddings_md5.cache_clear()
 
     # Drift: the guard refuses the stale index, loudly.
     with warnings.catch_warnings(record=True) as caught:
@@ -315,6 +313,35 @@ def test_index_lifecycle_drift_retrain_serve(spark, tmp_path, monkeypatch, resto
         for r in sim._ivf_topk(em2, list(enumerate(t2))).collect()
     }
     assert served and served == explicit
+
+
+def test_in_place_rewrite_refuses_index_without_cache_clear(
+    tmp_path, monkeypatch, restore_caches
+):
+    """embeddings.parquet rewritten in place (same path) is drift the
+    guard sees on the very next call, with no cache clear: the md5 is
+    keyed on the file's (mtime_ns, size), not on the fixture dir."""
+    import shutil
+    import warnings
+
+    import pyarrow.parquet as pq
+
+    fx = tmp_path / "sfrewrite"
+    fx.mkdir()
+    path = fx / "embeddings.parquet"
+    shutil.copy(os.path.join(TESTDATA, "sf0.01", "embeddings.parquet"), path)
+    index = sim._frozen_ivf_index()["sf0.01"]
+    record = {"md5": sim._embeddings_md5(str(fx)), "n_train": sim._fp_record("sf0.01")[1]}
+    monkeypatch.setattr(sim, "_frozen_ivf_index", lambda: {"sfrewrite": index})
+    monkeypatch.setattr(sim, "_frozen_fingerprints", lambda: {"sfrewrite": record})
+    assert sim.frozen_index_for(str(fx)) == index
+
+    pq.write_table(pq.read_table(path).slice(1), path)
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert sim.frozen_index_for(str(fx)) is None
+    assert any("STALE" in str(w.message) for w in caught)
 
 
 def test_ivf_k_scale_rule():

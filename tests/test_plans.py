@@ -557,8 +557,22 @@ def test_no_python_worker_literal_frames_in_operators():
     assert not offenders, offenders
 
 
+def test_plan_inspection_has_no_assert_statements():
+    """plans/inspect.py guards production paths (the oracle gate and
+    every inspected pin), and ``python -O`` strips ``assert``: every
+    check there must be an explicit raise."""
+    import ast
+    from pathlib import Path
+
+    from mapreducer_spark.plans import inspect as plan_inspect
+
+    tree = ast.parse(Path(plan_inspect.__file__).read_text())
+    asserts = [n.lineno for n in ast.walk(tree) if isinstance(n, ast.Assert)]
+    assert asserts == [], f"assert statements at lines {asserts}"
+
+
 def test_checkpoint_inspected_catches_blinded_violation(spark):
-    """checkpoint_inspected (ADVICE r11) closes the localCheckpoint
+    """checkpoint_inspected closes the localCheckpoint
     blind spot: a budget violation INSIDE a checkpointed subtree is
     invisible to run_spark_gated (lineage severed — the gate sees only
     the LocalTableScan-rooted final segment), but the wrapper inspects
