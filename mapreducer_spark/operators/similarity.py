@@ -354,28 +354,18 @@ def ivf_k_for(n: int) -> int:
         return _N_CENTROIDS
     return max(16, min(4096, 2 ** round(math.log2(math.sqrt(n)))))
 
-# The scale the correctness gates run at: the driver compares at sf0.01;
-# the local gate honors SPARK_GRAFT_ORACLE_SF.  The frozen-index oracles
-# are rendered at import for THIS scale's centroids, so overriding the
-# gate scale automatically re-renders them for the right index (or drops
-# to rows-only when no fresh frozen index exists for that scale).
-_ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-
-
 @lru_cache(maxsize=1)
 def _frozen_ivf_index() -> dict[str, list[list[float]]]:
     """Seeded-KMeans centroids per fixture, trained OFFLINE by
     tools/train_ivf_index.py and frozen as a repo artifact.  Serving
     from a persisted quantizer (instead of re-training per query) is
     both how production IVF works and what makes the query
-    hash-checkable: the DuckDB oracle renders the SAME literals.
+    hash-checkable: the DuckDB oracle reads the SAME centroids as its
+    ``ivf_centroids`` relation (oracle.artifact_sql).
 
     A missing/corrupt artifact degrades to an EMPTY index ({}) rather
-    than raising: this function runs at module import time (the oracle
-    strings are built during register()), and an exception here would
-    take down the whole registry import — every query, not just the
-    ANN pair.  With an empty index the ANN queries register with
-    oracle=None and fall back to live training."""
+    than raising: serving falls back to live training, and the oracle
+    gate refuses the artifact-backed queries by name."""
     try:
         with open(_IVF_INDEX_PATH) as f:
             return json.load(f)
@@ -388,8 +378,8 @@ def _frozen_fingerprints() -> dict[str, str]:
     """Per-fixture md5 of embeddings.parquet AT TRAINING TIME, written by
     tools/train_ivf_index.py next to the centroids.  This is the drift
     detector: a regenerated fixture changes the file hash, and a frozen
-    index trained on the old data must then neither serve nor render
-    oracles (VERDICT r4 #1)."""
+    index trained on the old data must then neither serve nor back an
+    oracle comparison."""
     try:
         with open(_IVF_FINGERPRINT_PATH) as f:
             return json.load(f)
@@ -493,31 +483,15 @@ def ann_ivf_assign_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_assigned_live(em, index).select("vec_id", "cluster")
 
 
-def _ivf_oracle_ctes() -> str | None:
+def _ivf_oracle_ctes(nprobe: int = _N_PROBE) -> str:
     """Shared DuckDB CTE chain for the frozen-index IVF pipeline —
-    assignment, nprobe routing, probed scoring — over the frozen sf0.01
-    centroids rendered as literal DOUBLE[] arrays (the driver's
-    correctness gate runs at sf0.01; repr() round-trips float64 exactly
-    on both engines).  Tie-breaks mirror the Spark side: assignment =
-    highest sim then lowest cent_id (max_by struct(csim, -cent_id));
-    top-k = sim desc then vec_id.
-
-    Rendered for the GATE's scale (_ORACLE_SF_DIR, honoring the
-    SPARK_GRAFT_ORACLE_SF override — ADVICE r4) and only from a
-    fingerprint-FRESH index: a regenerated fixture drops these oracles
-    to None (rows-only at the driver) instead of hash-failing against a
-    stale index (VERDICT r4 #1)."""
-    idx = frozen_index_for(_ORACLE_SF_DIR)
-    if idx is None:
-        return None
-    values = ",\n    ".join(
-        f"({i}, CAST([{', '.join(repr(x) for x in v)}] AS DOUBLE[]))"
-        for i, v in enumerate(idx)
-    )
-    return f"""cents(cent_id, cent_v) AS (
-  VALUES {values}
-),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    assignment, routing to the ``nprobe`` nearest lists (each candidate
+    tagged with its list's probe rank prn), probed scoring, top-k —
+    over the ``ivf_centroids`` relation, which the gate builds from the
+    index of the fixture being checked.  Tie-breaks mirror the Spark
+    side: assignment = highest sim then lowest cent_id (max_by
+    struct(csim, -cent_id)); top-k = sim desc then vec_id."""
+    return f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 assigned AS (
   SELECT vec_id, v, cluster FROM (
     SELECT e.vec_id, e.v, c.cent_id AS cluster,
@@ -526,23 +500,23 @@ assigned AS (
              ORDER BY round(list_cosine_similarity(e.v, c.cent_v), 9) DESC,
                       c.cent_id
            ) AS arn
-    FROM e CROSS JOIN cents c
+    FROM e CROSS JOIN ivf_centroids c
   ) WHERE arn = 1
 ),
 probes AS (
-  SELECT q_id, qv, cluster FROM (
+  SELECT q_id, qv, cluster, prn FROM (
     SELECT e.vec_id AS q_id, e.v AS qv, c.cent_id AS cluster,
            ROW_NUMBER() OVER (
              PARTITION BY e.vec_id
              ORDER BY round(list_cosine_similarity(e.v, c.cent_v), 9) DESC,
                       c.cent_id
            ) AS prn
-    FROM e CROSS JOIN cents c
+    FROM e CROSS JOIN ivf_centroids c
     WHERE e.vec_id < {_N_QUERIES}
-  ) WHERE prn <= {_N_PROBE}
+  ) WHERE prn <= {nprobe}
 ),
 scored AS (
-  SELECT p.q_id, a.vec_id,
+  SELECT p.q_id, a.vec_id, p.prn,
          round(list_cosine_similarity(p.qv, a.v), 6) AS sim
   FROM probes p JOIN assigned a ON p.cluster = a.cluster
   WHERE p.q_id <> a.vec_id
@@ -558,23 +532,9 @@ ivf_topk AS (
 )"""
 
 
-def _ivf_oracle_sql() -> str | None:
-    ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
-    return f"WITH {ctes}\nSELECT q_id, vec_id, sim, rnk FROM ivf_topk"
-
-
-def _ivf_recall_oracle_sql() -> str | None:
-    """Recall@k of the frozen IVF index vs exact brute force, entirely
-    in SQL: the ivf_topk CTE chain plus the similarity_topk exact scan,
-    left-joined per (q_id, vec_id)."""
-    ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
-    return f"""
-WITH {ctes},
-exact AS (
+# Exact brute-force cosine top-k of the query sample over the chain's
+# ``e`` — the reference every IVF recall oracle compares against.
+_IVF_EXACT_CTE = f"""exact AS (
   SELECT q_id, vec_id FROM (
     SELECT eq.q_id, ec.vec_id,
            ROW_NUMBER() OVER (
@@ -586,7 +546,16 @@ exact AS (
     CROSS JOIN (SELECT vec_id, v AS cv FROM e) ec
     WHERE eq.q_id <> ec.vec_id
   ) WHERE rnk <= {_TOP_K}
-)
+)"""
+
+
+def _ivf_recall_oracle_sql() -> str:
+    """Recall@k of the frozen IVF index vs exact brute force, entirely
+    in SQL: the ivf_topk CTE chain plus the similarity_topk exact scan,
+    left-joined per (q_id, vec_id)."""
+    return f"""
+WITH {_ivf_oracle_ctes()},
+{_IVF_EXACT_CTE}
 SELECT x.q_id,
        CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*) AS recall_at_10
 FROM exact x
@@ -598,56 +567,16 @@ GROUP BY x.q_id
 _SWEEP_NPROBES = (1, 2, 4, 8)
 
 
-def _nprobe_sweep_oracle_sql() -> str | None:
-    """DuckDB twin of the nprobe sweep: one probe routing at
-    max(nprobe), then per-level top-k and per-query recall vs the exact
-    scan.  Same frozen-centroid literals and tie-breaks as
-    _ivf_oracle_ctes; per-(nprobe, q_id) output rows keep every float op
-    a single division (no cross-query averaging -> no float-sum order
+def _nprobe_sweep_oracle_sql() -> str:
+    """DuckDB twin of the nprobe sweep: the IVF chain routed once at
+    max(nprobe), then per-level top-k over the candidates whose probe
+    rank fits the level, and per-query recall vs the exact scan.
+    Per-(nprobe, q_id) output rows keep every float op a single
+    division (no cross-query averaging -> no float-sum order
     sensitivity)."""
-    idx = frozen_index_for(_ORACLE_SF_DIR)
-    if idx is None:
-        return None
-    values = ",\n    ".join(
-        f"({i}, CAST([{', '.join(repr(x) for x in v)}] AS DOUBLE[]))"
-        for i, v in enumerate(idx)
-    )
-    max_np = max(_SWEEP_NPROBES)
     levels = ", ".join(f"({n})" for n in _SWEEP_NPROBES)
     return f"""
-WITH cents(cent_id, cent_v) AS (
-  VALUES {values}
-),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-assigned AS (
-  SELECT vec_id, v, cluster FROM (
-    SELECT e.vec_id, e.v, c.cent_id AS cluster,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, c.cent_v), 9) DESC,
-                      c.cent_id
-           ) AS arn
-    FROM e CROSS JOIN cents c
-  ) WHERE arn = 1
-),
-probes AS (
-  SELECT q_id, qv, cluster, prn FROM (
-    SELECT e.vec_id AS q_id, e.v AS qv, c.cent_id AS cluster,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, c.cent_v), 9) DESC,
-                      c.cent_id
-           ) AS prn
-    FROM e CROSS JOIN cents c
-    WHERE e.vec_id < {_N_QUERIES}
-  ) WHERE prn <= {max_np}
-),
-scored AS (
-  SELECT p.q_id, a.vec_id, p.prn,
-         round(list_cosine_similarity(p.qv, a.v), 6) AS sim
-  FROM probes p JOIN assigned a ON p.cluster = a.cluster
-  WHERE p.q_id <> a.vec_id
-),
+WITH {_ivf_oracle_ctes(max(_SWEEP_NPROBES))},
 levels(nprobe) AS (VALUES {levels}),
 approx AS (
   SELECT nprobe, q_id, vec_id FROM (
@@ -658,19 +587,7 @@ approx AS (
     FROM levels l JOIN scored s ON s.prn <= l.nprobe
   ) WHERE rnk <= {_TOP_K}
 ),
-exact AS (
-  SELECT q_id, vec_id FROM (
-    SELECT eq.q_id, ec.vec_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY eq.q_id
-             ORDER BY round(list_cosine_similarity(eq.qv, ec.cv), 6) DESC,
-                      ec.vec_id
-           ) AS rnk
-    FROM (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {_N_QUERIES}) eq
-    CROSS JOIN (SELECT vec_id, v AS cv FROM e) ec
-    WHERE eq.q_id <> ec.vec_id
-  ) WHERE rnk <= {_TOP_K}
-)
+{_IVF_EXACT_CTE}
 SELECT l.nprobe, x.q_id,
        round(CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*), 6) AS recall_at_10
 FROM levels l
@@ -740,7 +657,7 @@ def ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_topk",
-    oracle=_ivf_oracle_sql(),
+    oracle=f"WITH {_ivf_oracle_ctes()}\nSELECT q_id, vec_id, sim, rnk FROM ivf_topk",
     doc="IVF ANN served from a FROZEN trained index: seeded KMeans "
     "centroids trained offline (tools/train_ivf_index.py, pinned "
     "seed/maxIter) and persisted as a repo artifact; the query "
@@ -748,12 +665,11 @@ def ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only the nprobe nearest clusters per query, exact top-k within "
     "probed clusters (L3 scale path).  Hash-checked: the DuckDB "
     "oracle replicates assignment + routing + top-k over the same "
-    "centroid literals (VERDICT r3 #2).  ORACLE SCOPE: the literals "
-    "are the GATE scale's index (SPARK_GRAFT_ORACLE_SF, default "
-    "sf0.01), and both serving and oracle require the fixture's "
-    "embeddings.parquet to match the training-time fingerprint — on "
-    "drift the query live-trains and the oracle drops to rows-only "
-    "(tests/test_index_guard.py fails loudly instead).  Recall vs "
+    "centroids, read as the gate's ivf_centroids relation for the "
+    "fixture being checked.  Both serving and the gate require the "
+    "fixture's embeddings.parquet to match the training-time "
+    "fingerprint — on drift the query live-trains and the gate "
+    "refuses the comparison, naming tools/train_ivf_index.py.  Recall vs "
     "exact is reported by ann_ivf_kmeans_recall and floor-asserted in "
     "tests.",
     tags=("llm", "similarity"),
@@ -1096,24 +1012,13 @@ def embedding_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_COS = 0.999
 
 
-def _semdedup_oracle_sql() -> str | None:
+def _semdedup_oracle_sql() -> str:
     """DuckDB twin: same corpus (base + scaled copies), assignment to
-    the frozen centroid literals (csim DESC, cent_id tie-break — the
+    the ivf_centroids relation (csim DESC, cent_id tie-break — the
     map-side argmax's ordering), pairwise cosine WITHIN clusters only,
-    keeper = lowest-id neighbor over the threshold.  Scale-resolved and
-    freshness-gated exactly like _ivf_oracle_ctes."""
-    idx = frozen_index_for(_ORACLE_SF_DIR)
-    if idx is None:
-        return None
-    values = ",\n    ".join(
-        f"({i}, CAST([{', '.join(repr(x) for x in v)}] AS DOUBLE[]))"
-        for i, v in enumerate(idx)
-    )
+    keeper = lowest-id neighbor over the threshold."""
     return f"""
-WITH cents(cent_id, cent_v) AS (
-  VALUES {values}
-),
-corpus AS (
+WITH corpus AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   UNION ALL
   SELECT vec_id + 1000000 AS vec_id,
@@ -1128,7 +1033,7 @@ assigned AS (
              ORDER BY round(list_cosine_similarity(corpus.v, c.cent_v), 9) DESC,
                       c.cent_id
            ) AS arn
-    FROM corpus CROSS JOIN cents c
+    FROM corpus CROSS JOIN ivf_centroids c
   ) WHERE arn = 1
 ),
 pairs AS (
@@ -1161,8 +1066,8 @@ FROM pairs GROUP BY dropped_id
     "cosine >= 0.999, each duplicate reported once with its lowest-id "
     "keeper.  Synthesized scaled copies (same direction -> same "
     "cluster, cosine 1) must all be caught — asserted in tests.  The "
-    "oracle replays assignment + pairing over the same centroid "
-    "literals.",
+    "oracle replays assignment + pairing over the same centroids "
+    "(the ivf_centroids relation).",
     tags=("llm", "dedup", "similarity"),
 )
 def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1676,33 +1581,9 @@ def _pq_cb_trained_frame(
     )
 
 
-def _pq_trained_cb_sql() -> str | None:
-    """DuckDB cb body rendered from the frozen codebooks at the GATE's
-    scale — None (rows-only) when no fresh artifact exists, instead of
-    hash-failing against stale codewords."""
-    cbs = frozen_pq_for(_ORACLE_SF_DIR)
-    if cbs is None:
-        return None
-    values = ",\n    ".join(
-        f"({m}, {k}, CAST([{', '.join(repr(x) for x in cw)}] AS DOUBLE[]))"
-        for m, per_m in enumerate(cbs)
-        for k, cw in enumerate(per_m)
-    )
-    return (
-        "SELECT * FROM (VALUES\n    " + values + "\n  ) AS t(m, k, cv)"
-    )
-
-
-def _trained_recall_oracle_sql() -> str | None:
-    cb = _pq_trained_cb_sql()
-    if cb is None:
-        return None
-    return _adc_recall_oracle_sql(cb)
-
-
 @register(
     "ann_pq_adc_recall_trained",
-    oracle=_trained_recall_oracle_sql(),
+    oracle=_adc_recall_oracle_sql("SELECT m, k, cv FROM pq_codebooks"),
     doc="ADC recall@10 under TRAINED per-subspace KMeans codebooks "
     "(tools/train_pq_codebooks.py, frozen + fingerprinted like the IVF "
     "index) vs exact L2 top-10 — read next to ann_pq_adc_recall (the "
@@ -1712,10 +1593,10 @@ def _trained_recall_oracle_sql() -> str | None:
     "(asserted in tests/test_index_guard.py) while top-10 recall "
     "stays ~0.3 — the honest geometry of 4-bit subspaces on "
     "unstructured vectors; clustered real embeddings are where both "
-    "move together.  The oracle renders the frozen codewords as "
-    "literals at the gate's scale and drops to rows-only on fixture "
-    "drift; the Spark side falls back to the stand-in with a loud "
-    "warning in that case.",
+    "move together.  The oracle reads the frozen codewords as the "
+    "gate's pq_codebooks relation for the fixture being checked; on "
+    "fixture drift the Spark side falls back to the stand-in with a "
+    "loud warning and the gate refuses the comparison.",
     tags=("llm", "similarity"),
 )
 def ann_pq_adc_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2420,12 +2301,9 @@ def embedding_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-def _ivf_sq8_recall_oracle_sql() -> str | None:
-    ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
+def _ivf_sq8_recall_oracle_sql() -> str:
     return f"""
-WITH {ctes},
+WITH {_ivf_oracle_ctes()},
 {_sq_oracle_calib().strip()},
 sq_scored AS (
   SELECT p.q_id, a.vec_id,
@@ -2444,19 +2322,7 @@ sq_topk AS (
     FROM sq_scored
   ) WHERE rnk <= {_TOP_K}
 ),
-exact AS (
-  SELECT q_id, vec_id FROM (
-    SELECT eq.q_id, ec.vec_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY eq.q_id
-             ORDER BY round(list_cosine_similarity(eq.qv, ec.cv), 6) DESC,
-                      ec.vec_id
-           ) AS rnk
-    FROM (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {_N_QUERIES}) eq
-    CROSS JOIN (SELECT vec_id, v AS cv FROM e) ec
-    WHERE eq.q_id <> ec.vec_id
-  ) WHERE rnk <= {_TOP_K}
-),
+{_IVF_EXACT_CTE},
 r1 AS (
   SELECT x.q_id,
          round(CAST(COUNT(s.vec_id) AS DOUBLE) / COUNT(*), 6)
@@ -2495,8 +2361,8 @@ FROM r1 JOIN r2 ON r1.q_id = r2.q_id
     "scan streams 4x fewer bytes than float32 — the memory-bandwidth "
     "lever that makes 100 TB ANN serveable.  Composes the frozen IVF "
     "index (tools/train_ivf_index.py) with embedding_int8_recall_at_k's "
-    "calibration; fingerprint drift drops the oracle to rows-only "
-    "rather than serving a stale index.",
+    "calibration; on fingerprint drift serving live-trains and the "
+    "gate refuses the comparison rather than check a stale index.",
     tags=("llm", "similarity", "vector"),
 )
 def ann_ivf_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3888,8 +3754,8 @@ def retrain_frozen_index(
 
     After the write the artifact caches are cleared, so the next
     frozen_index_for / _centroid_list call serves the refreshed index
-    (oracle SQL strings rendered at import keep their old literals —
-    re-import or re-render for a new gate; serving needs no restart).
+    and the next oracle connection reads it as ivf_centroids; neither
+    needs a restart.
     """
     import json as _json
 
@@ -3938,30 +3804,20 @@ def retrain_frozen_index(
     return trained
 
 
-def _ari_oracle_sql() -> str | None:
-    """ARI between the frozen-index assignment (literal centroids) and
-    the unrolled in-engine spherical retrain — None (rows-only) when no
-    fingerprint-fresh frozen index exists for the gate fixture."""
-    idx = frozen_index_for(_ORACLE_SF_DIR)
-    if idx is None:
-        return None
-    values = ",\n    ".join(
-        f"({i}, CAST([{', '.join(repr(x) for x in v)}] AS DOUBLE[]))"
-        for i, v in enumerate(idx)
-    )
+def _ari_oracle_sql() -> str:
+    """ARI between the frozen-index assignment (the ivf_centroids
+    relation of the fixture being checked, as the Spark side serves
+    it) and the unrolled in-engine spherical retrain."""
     r = _KM_ROUNDS
     return f"""
 WITH {_oracle_spherical_ctes(_N_CENTROIDS, _KM_ROUNDS)},
-fr(cent_id, cv) AS (
-  VALUES {values}
-),
 fa AS (
   SELECT vec_id, cent_id AS ca FROM (
     SELECT e.vec_id, f.cent_id,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY round(list_cosine_similarity(e.v, f.cv), 6) DESC,
+             ORDER BY round(list_cosine_similarity(e.v, f.cent_v), 6) DESC,
                       f.cent_id) AS rnk
-    FROM e CROSS JOIN fr f
+    FROM e CROSS JOIN ivf_centroids f
   ) WHERE rnk = 1
 ),
 fb AS (SELECT vec_id, cent_id AS cb FROM a{r}),
@@ -4015,8 +3871,8 @@ WHERE n >= 2
     "adjustment matters here because k=16 labelings agree "
     "substantially by luck alone.  Determinism: both assignments are "
     "round-6 cosine argmax with cent_id tie-break (the spherical-"
-    "k-means recipe); frozen centroids are repr() literals in both "
-    "engines.  Scale shape: two map-side assignments (broadcast "
+    "k-means recipe); both engines read the same frozen centroids, "
+    "bit for bit.  Scale shape: two map-side assignments (broadcast "
     "centroids), one join on vec_id, a <=k^2-cell contingency "
     "aggregation, the fold on one row.",
     tags=("llm", "similarity", "vector", "iterative"),
@@ -4213,11 +4069,9 @@ def embedding_isotropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_balance_oracle_sql() -> str | None:
+def _ivf_balance_oracle_sql() -> str:
+    # Only the e/assigned front is needed; drop probes onward.
     ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
-    # Only the cents/e/assigned front is needed; drop probes onward.
     front = ctes[: ctes.index(",\nprobes AS (")]
     return f"""
 WITH {front},
@@ -4255,9 +4109,9 @@ ORDER BY sizes.cluster
     "join_key_skew_profile's same diagnostic for shuffle keys.  "
     "Assignment is the exact frozen-index map-side argmax of the ANN "
     "path; shares are identical-order divisions; the imbalance sum "
-    "rounds 10dp terms into a decimal.  Degrades with the index "
-    "contract: fingerprint drift drops the oracle to rows-only, "
-    "serving live-trains.  Scale shape: one assignment scan, one "
+    "rounds 10dp terms into a decimal.  Follows the index contract: "
+    "on fingerprint drift serving live-trains and the gate refuses "
+    "the comparison.  Scale shape: one assignment scan, one "
     "16-row aggregation.",
     tags=("llm", "similarity", "profiling"),
 )
@@ -4599,16 +4453,11 @@ def _mmr_rerank(
     )
 
 
-def _ann_mmr_oracle_sql() -> str | None:
-    """IVF-pool MMR twin: the frozen-index IVF chain (same literals and
-    tie-breaks as ann_ivf_topk) feeding the unrolled greedy rounds.
-    None (rows-only at the driver) when no fingerprint-fresh frozen
-    index exists for the gate scale — the ann_ivf_topk contract."""
-    ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
+def _ann_mmr_oracle_sql() -> str:
+    """IVF-pool MMR twin: the frozen-index IVF chain (same centroids and
+    tie-breaks as ann_ivf_topk) feeding the unrolled greedy rounds."""
     return f"""
-WITH {ctes},
+WITH {_ivf_oracle_ctes()},
 pool AS MATERIALIZED (
   SELECT t.q_id, t.vec_id, t.sim AS rel, e.v AS cv
   FROM ivf_topk t JOIN e ON e.vec_id = t.vec_id
@@ -4625,7 +4474,7 @@ FROM mmr
 @register(
     "ann_mmr_topk",
     oracle=_ann_mmr_oracle_sql(),
-    doc="The PRODUCTION retrieval stack (VERDICT r11 #2): frozen-index "
+    doc="The PRODUCTION retrieval stack: frozen-index "
     f"IVF ANN pool (nprobe={_N_PROBE}, top-{_TOP_K}) -> greedy MMR "
     f"re-rank to {_MMR_K} diverse results per query — what a RAG/"
     "curation pipeline actually runs between the vector index and the "
@@ -4659,16 +4508,13 @@ def mmr_exact_sel_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity_topk_mmr(spark, sf_dir)
 
 
-def _ann_mmr_agreement_oracle_sql() -> str | None:
+def _ann_mmr_agreement_oracle_sql() -> str:
     """Two full unrolled MMR chains (exact pool, prefix-less; IVF pool,
     prefix i) composed into the per-query agreement + redundancy
     report."""
-    ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
     k = _MMR_K
     return f"""
-WITH {ctes},
+WITH {_ivf_oracle_ctes()},
 ipool AS MATERIALIZED (
   SELECT t.q_id, t.vec_id, t.sim AS rel, e.v AS cv
   FROM ivf_topk t JOIN e ON e.vec_id = t.vec_id
@@ -4802,10 +4648,7 @@ def ann_mmr_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivf_delta_assign",
-    oracle=(
-        None
-        if _ivf_oracle_ctes() is None
-        else f"""
+    oracle=f"""
 WITH {_ivf_oracle_ctes()}
 SELECT CAST(cluster AS BIGINT) AS cluster,
        CAST(SUM(CASE WHEN vec_id % 10 = 7 THEN 0 ELSE 1 END) AS BIGINT)
@@ -4814,8 +4657,7 @@ SELECT CAST(cluster AS BIGINT) AS cluster,
          AS n_new,
        CAST(COUNT(*) AS BIGINT) AS n_total
 FROM assigned GROUP BY cluster
-"""
-    ),
+""",
     doc="Incremental INDEX UPDATE — the ingest-time half of the frozen "
     "IVF lifecycle (the ANN analogue of incremental_neardup_pairs): "
     "vectors at vec_id % 10 == 7 play today's ingest; ONLY the delta "
@@ -4825,10 +4667,10 @@ FROM assigned GROUP BY cluster
     "anti-join).  Output is the per-cluster old/new/total occupancy "
     "after the merge — identical, by the assignment's per-row "
     "determinism, to a full re-assignment, which is exactly what the "
-    "oracle computes from the same centroid literals.  Scale shape: "
+    "oracle computes from the same centroids.  Scale shape: "
     "at 100 TB the daily delta is the only vector scan; the lists "
-    "table is join-pruned on the delta's ids.  Oracle scope: frozen "
-    "gate index (the ann_ivf_topk contract).",
+    "table is join-pruned on the delta's ids.  The oracle reads the "
+    "checked fixture's frozen index (the ann_ivf_topk contract).",
     tags=("llm", "similarity", "incremental"),
 )
 def ann_ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4870,14 +4712,11 @@ _RULE_K_SQL = (
 )
 
 
-def _ivf_rebalance_oracle_sql() -> str | None:
-    ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
-    k_lit = len(_frozen_ivf_index().get(os.path.basename(_ORACLE_SF_DIR.rstrip("/")), []))
+def _ivf_rebalance_oracle_sql() -> str:
     rule_k = _RULE_K_SQL.format(n="r.n")
+    index_k = "(SELECT COUNT(*) FROM ivf_centroids)"
     return f"""
-WITH {ctes},
+WITH {_ivf_oracle_ctes()},
 occ AS (
   SELECT cluster,
          CAST(SUM(CASE WHEN vec_id % 10 = 7 THEN 0 ELSE 1 END) AS BIGINT)
@@ -4894,8 +4733,8 @@ SELECT CAST(o.cluster AS BIGINT) AS cluster,
        round(CAST(o.n_total AS DOUBLE) * {rule_k} / r.n, 6)
          AS occupancy_ratio,
        CAST({rule_k} AS BIGINT) AS rule_k,
-       CAST({k_lit} AS BIGINT) AS index_k,
-       ({k_lit} * {_IVF_RULE_SLACK} < {rule_k}) AS k_lags_rule,
+       CAST({index_k} AS BIGINT) AS index_k,
+       ({index_k} * {_IVF_RULE_SLACK} < {rule_k}) AS k_lags_rule,
        CASE WHEN o.n_total > {_IVF_MAX_MEAN_LIST_ROWS} THEN 'split'
             WHEN o.n_total * {rule_k} > 2 * r.n THEN 'hot'
             ELSE 'ok' END AS action
@@ -4906,7 +4745,7 @@ FROM occ o CROSS JOIN r
 @register(
     "ann_ivf_rebalance_plan",
     oracle=_ivf_rebalance_oracle_sql(),
-    doc="The IVF index MAINTENANCE decision (VERDICT r12 #6), closing "
+    doc="The IVF index MAINTENANCE decision, closing "
     "the lifecycle: ingest (ann_ivf_delta_assign), drift "
     "(ann_index_ari_staleness), the serving guard's refusal thresholds "
     "(frozen_index_for) — and now the readout that names WHICH "
@@ -4923,7 +4762,8 @@ FROM occ o CROSS JOIN r
     "threshold), else 'ok'.  Scale shape: the delta is the only "
     "vector scan (|delta| x k cosines); the lists are read, never "
     "recomputed; everything after the occupancy groupBy is k rows.  "
-    "Oracle scope: frozen gate index (the ann_ivf_topk contract).",
+    "The oracle reads the checked fixture's frozen index (the "
+    "ann_ivf_topk contract).",
     tags=("llm", "similarity", "incremental", "index"),
 )
 def ann_ivf_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4978,7 +4818,7 @@ def ivf_rebalance_readout(
 
 
 # ---------------------------------------------------------------------------
-# RAG retrieval capstone (VERDICT r12 #5) — the retrieval analogue of
+# RAG retrieval capstone — the retrieval analogue of
 # curation_pipeline_summary: chunking -> IVF retrieval -> MMR re-rank ->
 # context assembly, fused into ONE Catalyst plan and hash-checked end
 # to end.  Every stage is an individually-oracle-checked operator
@@ -4990,18 +4830,13 @@ def ivf_rebalance_readout(
 _RAG_CTX = 128  # context-window token budget per query
 
 
-def _retrieval_pipeline_oracle_sql() -> str | None:
+def _retrieval_pipeline_oracle_sql() -> str:
     """IVF chain -> unrolled MMR rounds -> even-tile chunks of the
-    selected docs -> per-query running-offset context assembly.
-    None (rows-only) when no fingerprint-fresh frozen index exists for
-    the gate scale — the ann_mmr_topk contract."""
+    selected docs -> per-query running-offset context assembly."""
     from mapreducer_spark.functions.text import ORACLE_TOKEN_LIST_SNIPPET
 
-    ctes = _ivf_oracle_ctes()
-    if ctes is None:
-        return None
     return f"""
-WITH {ctes},
+WITH {_ivf_oracle_ctes()},
 pool AS MATERIALIZED (
   SELECT t.q_id, t.vec_id, t.sim AS rel, e.v AS cv
   FROM ivf_topk t JOIN e ON e.vec_id = t.vec_id
@@ -5062,7 +4897,7 @@ JOIN complete d ON d.q_id = s.q_id
 @register(
     "retrieval_pipeline_summary",
     oracle=_retrieval_pipeline_oracle_sql(),
-    doc="The RAG retrieval CAPSTONE (VERDICT r12 #5), one Catalyst "
+    doc="The RAG retrieval CAPSTONE, one Catalyst "
     "plan end to end: frozen-index IVF probe -> shared greedy MMR "
     f"re-rank ({_MMR_K} diverse docs per query) -> the selected docs' "
     "non-overlapping chunk tiling (doc_token_chunks' even-stride "

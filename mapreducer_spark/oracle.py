@@ -19,6 +19,7 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import math
+import re
 
 import duckdb
 
@@ -36,6 +37,70 @@ TABLES = (
 )
 
 
+# Frozen artifacts that oracles read as relations, next to the table
+# views: relation -> (columns, the tool that retrains the artifact).
+ARTIFACTS = {
+    "ivf_centroids": ("cent_id, cent_v", "tools/train_ivf_index.py"),
+    "pq_codebooks": ("m, k, cv", "tools/train_pq_codebooks.py"),
+}
+
+
+def artifact_sql(name: str, sf_dir: str) -> str | None:
+    """The SELECT that yields artifact relation ``name`` for the fixture
+    at ``sf_dir``, built from the same fingerprint-checked loader the
+    Spark side serves from, so both engines read the same index; None
+    when the fixture has no fresh artifact.  Each double is its repr(),
+    which both engines parse back to the same float64."""
+    from mapreducer_spark.operators.similarity import frozen_index_for, frozen_pq_for
+
+    if name == "ivf_centroids":
+        idx = frozen_index_for(sf_dir)
+        rows = None if idx is None else list(enumerate(idx))
+    else:
+        cbs = frozen_pq_for(sf_dir)
+        rows = None if cbs is None else [
+            (m, k, cw) for m, per_m in enumerate(cbs) for k, cw in enumerate(per_m)
+        ]
+    if rows is None:
+        return None
+    # A row is its integer keys, then one vector.
+    values = ",\n  ".join(
+        "(" + ", ".join(map(str, r[:-1]))
+        + f", CAST([{', '.join(map(repr, r[-1]))}] AS DOUBLE[]))"
+        for r in rows
+    )
+    return f"SELECT * FROM (VALUES\n  {values}\n) AS t({ARTIFACTS[name][0]})"
+
+
+def _reads(sql: str) -> list[str]:
+    return [n for n in ARTIFACTS if re.search(rf"\b{n}\b", sql)]
+
+
+def self_contained(sql: str, sf_dir: str) -> str | None:
+    """``sql`` runnable on a connection that holds only the table views:
+    each artifact relation it reads is inlined as a CTE built at
+    ``sf_dir``.  None when one of them has no fresh artifact there."""
+    rels = {n: artifact_sql(n, sf_dir) for n in _reads(sql)}
+    if not rels:
+        return sql
+    if None in rels.values():
+        return None
+    ctes = ",\n".join(f"{n} AS ({body})" for n, body in rels.items())
+    return f"WITH {ctes}\nSELECT * FROM (\n{sql}\n)"
+
+
+def require_fresh_artifacts(query, sf_dir: str) -> None:
+    """Raise AssertionError, naming the retrain tool, when ``query``'s
+    oracle reads a frozen artifact that ``sf_dir`` has no fresh copy
+    of: another scale's index would make the comparison meaningless."""
+    for name in _reads(query.oracle):
+        if artifact_sql(name, sf_dir) is None:
+            raise AssertionError(
+                f"{query.name}: no fresh frozen {name} for {sf_dir}; "
+                f"retrain it with python {ARTIFACTS[name][1]} {sf_dir}"
+            )
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:
@@ -43,6 +108,10 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
         # fixture path must not break (or smuggle SQL into) the DDL.
         p = f"{sf_dir}/{t}.parquet".replace("'", "''")
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    for name in ARTIFACTS:
+        body = artifact_sql(name, sf_dir)
+        if body is not None:
+            con.sql(f"CREATE VIEW {name} AS {body}")
     return con
 
 
@@ -102,11 +171,12 @@ def assert_scalar_schema(name: str, df) -> None:
         for f in df.schema.fields
         if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
     ]
-    assert not complex_cols, (
-        f"{name}: complex-typed result column(s) {complex_cols} "
-        "(array/map/struct) — the driver's hash harness cannot "
-        "canonicalize them; flatten with array_join() or explode"
-    )
+    if complex_cols:
+        raise AssertionError(
+            f"{name}: complex-typed result column(s) {complex_cols} "
+            "(array/map/struct) — the result-hash harness cannot "
+            "canonicalize them; flatten with array_join() or explode"
+        )
 
 
 def run_spark(df) -> tuple[list[str], list[tuple]]:
@@ -129,10 +199,11 @@ def run_duck(con, sql: str) -> tuple[list[str], list[tuple]]:
         for c, t in zip(rel.columns, rel.types)
         if "HUGEINT" in str(t).upper()
     ]
-    assert not hugeint, (
-        f"oracle result has HUGEINT column(s) {hugeint}; "
-        "wrap the aggregate in CAST(... AS BIGINT)"
-    )
+    if hugeint:
+        raise AssertionError(
+            f"oracle result has HUGEINT column(s) {hugeint}; "
+            "wrap the aggregate in CAST(... AS BIGINT)"
+        )
     # Same class of driver-hash hazard as HUGEINT: complex-typed oracle
     # columns (LIST/STRUCT/MAP) can't be canonicalized by the driver's
     # pandas harness.  The Spark side is checked by assert_scalar_schema;
@@ -142,10 +213,11 @@ def run_duck(con, sql: str) -> tuple[list[str], list[tuple]]:
         for c, t in zip(rel.columns, rel.types)
         if any(k in str(t).upper() for k in ("[]", "LIST", "STRUCT", "MAP"))
     ]
-    assert not complex_cols, (
-        f"oracle result has complex-typed column(s) {complex_cols}; "
-        "flatten with array_to_string() or UNNEST"
-    )
+    if complex_cols:
+        raise AssertionError(
+            f"oracle result has complex-typed column(s) {complex_cols}; "
+            "flatten with array_to_string() or UNNEST"
+        )
     return list(rel.columns), rel.fetchall()
 
 
@@ -153,7 +225,7 @@ def run_spark_gated(spark, query, sf_dir: str) -> tuple[list[str], list[tuple]]:
     """Run the query's Spark side and assert every EXECUTED-PLAN
     structural budget (the 100 TB posture checks that ride along with
     every correctness collect).  Shared by assert_matches_oracle, the
-    rows-only sweep leg, and the cached 10x sweep (tools/sweep_r11.py),
+    rows-only sweep leg, and the cached 10x sweep (tools/sweep.py),
     so no verification path can skip a budget."""
     sdf = query.fn(spark, sf_dir)
     assert_scalar_schema(query.name, sdf)
@@ -184,8 +256,11 @@ def result_digest(cols: list[str], rows: list[tuple]) -> dict:
 
 
 def assert_matches_oracle(spark, query, sf_dir: str, max_report: int = 5) -> None:
-    """query: a registry.Query with fn + oracle."""
-    assert query.oracle is not None, f"{query.name}: no oracle SQL declared"
+    """query: a registry.Query with fn + oracle.  Raises AssertionError
+    on any divergence (require_fresh_artifacts first)."""
+    if query.oracle is None:
+        raise AssertionError(f"{query.name}: no oracle SQL declared")
+    require_fresh_artifacts(query, sf_dir)
     scols, srows = run_spark_gated(spark, query, sf_dir)
     con = duck_connection(sf_dir)
     try:
@@ -193,12 +268,14 @@ def assert_matches_oracle(spark, query, sf_dir: str, max_report: int = 5) -> Non
     finally:
         con.close()
 
-    assert sorted(scols) == sorted(dcols), (
-        f"{query.name}: column mismatch spark={sorted(scols)} duck={sorted(dcols)}"
-    )
-    assert len(srows) == len(drows), (
-        f"{query.name}: row count mismatch spark={len(srows)} duck={len(drows)}"
-    )
+    if sorted(scols) != sorted(dcols):
+        raise AssertionError(
+            f"{query.name}: column mismatch spark={sorted(scols)} duck={sorted(dcols)}"
+        )
+    if len(srows) != len(drows):
+        raise AssertionError(
+            f"{query.name}: row count mismatch spark={len(srows)} duck={len(drows)}"
+        )
     s_norm = _normalize(scols, srows)
     d_norm = _normalize(dcols, drows)
     if s_norm != d_norm:

@@ -1,30 +1,57 @@
-"""Frozen-ANN-index drift guard (VERDICT r4 #1).
+"""Frozen-ANN-index drift guard.
 
-The ann_ivf_topk / ann_ivf_kmeans_recall / semdedup_clusters oracles are
-rendered from centroids trained OFFLINE on a specific fixture; if the
-driver ever regenerates /root/testdata, a stale index would silently
-flip those queries red.  The guard has three layers, each proven here:
+Thirteen oracles read centroids or codewords trained OFFLINE per
+fixture, as the ``ivf_centroids`` and ``pq_codebooks`` relations the
+gate's DuckDB connection builds for the fixture being checked; if a
+fixture is regenerated, a stale index would silently flip those
+queries red.  The guard has three layers, each proven here:
 
-1. Fingerprint freshness: serving + oracle rendering require the
+1. Fingerprint freshness: serving and the gate's relations require the
    fixture's embeddings.parquet to hash to the training-time md5.  The
    freshness test below turns drift into a HARD failure naming the fix
    (re-run tools/train_ivf_index.py) instead of an opaque hash mismatch.
 2. Fallback: on a stale/missing index the query path live-trains
    seeded KMeans (similarity._centroid_list) — serving keeps working.
-3. Degradation: a corrupt/missing artifact never takes down registry
-   import; the ANN oracles drop to None (rows-only at the driver).
+3. Refusal: a corrupt/missing artifact never takes down registry
+   import (no oracle reads an artifact when it is built); the gate
+   refuses the artifact-backed queries, naming the retrain tool, and
+   __spark_entry__.oracle_sql() leaves them out (rows-only).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
+import duckdb
 import pytest
 
+import __spark_entry__
+from mapreducer_spark import oracle
 from mapreducer_spark.operators import similarity as sim
+from mapreducer_spark.registry import all_queries
 
 TESTDATA = "/root/testdata"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The queries whose oracles read a frozen-artifact relation.
+ARTIFACT_BACKED = (
+    "ann_index_ari_staleness",
+    "ann_ivf_delta_assign",
+    "ann_ivf_int8_recall",
+    "ann_ivf_kmeans_recall",
+    "ann_ivf_nprobe_sweep",
+    "ann_ivf_rebalance_plan",
+    "ann_ivf_topk",
+    "ann_mmr_agreement",
+    "ann_mmr_topk",
+    "ann_pq_adc_recall_trained",
+    "ivf_list_balance",
+    "retrieval_pipeline_summary",
+    "semdedup_clusters",
+)
 
 
 def _clear_caches():
@@ -67,20 +94,35 @@ def test_frozen_index_fingerprints_fresh():
         assert sim._fp_record(key)[0] == sim._embeddings_md5(sf_dir), (
             f"FIXTURE DRIFT: {key}/embeddings.parquet no longer matches the "
             "fingerprint recorded when the frozen IVF index was trained. "
-            "The ANN queries have fallen back to live training and their "
-            "oracles to rows-only; re-run tools/train_ivf_index.py to "
+            "The ANN queries have fallen back to live training and the "
+            "gate refuses their oracles; re-run tools/train_ivf_index.py to "
             "refreeze the index + fingerprints."
         )
 
 
 def test_fresh_index_serves_frozen_and_oracles_render():
-    assert sim.frozen_index_for(os.path.join(TESTDATA, "sf0.01")) is not None
-    # With a fresh index at the gate scale the three oracles must be SQL.
-    from mapreducer_spark.registry import all_queries
-
+    sf_dir = os.path.join(TESTDATA, "sf0.01")
+    assert sim.frozen_index_for(sf_dir) is not None
+    # Exactly the artifact-backed oracles read a relation, and they
+    # carry no centroid or codeword literal.
     q = all_queries()
-    for name in ("ann_ivf_topk", "ann_ivf_kmeans_recall", "semdedup_clusters"):
-        assert q[name].oracle is not None, f"{name}: oracle should be rendered"
+    backed = {n for n, x in q.items() if x.oracle and oracle._reads(x.oracle)}
+    assert backed == set(ARTIFACT_BACKED)
+    for name in ARTIFACT_BACKED:
+        assert "DOUBLE[]))" not in q[name].oracle, name
+    # With fresh artifacts the gate connection serves both relations
+    # and the oracle_sql() texts inline them.
+    con = oracle.duck_connection(sf_dir)
+    try:
+        assert con.sql("SELECT COUNT(*) FROM ivf_centroids").fetchone() == (16,)
+        assert con.sql("SELECT COUNT(*) FROM pq_codebooks").fetchone() == (
+            sim._PQ_M * sim._PQ_K,
+        )
+    finally:
+        con.close()
+    texts = __spark_entry__.oracle_sql()
+    for name in ARTIFACT_BACKED:
+        assert texts[name].startswith("WITH "), name
 
 
 def test_stale_fingerprint_detected_and_refused(monkeypatch, restore_caches):
@@ -100,15 +142,69 @@ def test_missing_fingerprint_refused(monkeypatch, restore_caches):
 
 
 def test_corrupt_artifact_degrades_to_empty(tmp_path, monkeypatch, restore_caches):
+    # Building the registry opens no artifact, so an unreadable one
+    # cannot take its import down.
+    probe = (
+        "import builtins\n"
+        "real = builtins.open\n"
+        "def guarded(f, *a, **k):\n"
+        "    assert 'codebooks' not in str(f) and 'centroids' not in str(f), f\n"
+        "    return real(f, *a, **k)\n"
+        "builtins.open = guarded\n"
+        "from mapreducer_spark.registry import all_queries\n"
+        "print(len(all_queries()))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True
+    )
+    assert out.returncode == 0 and int(out.stdout) > 300, out.stderr[-2000:]
+
     bad = tmp_path / "ivf_centroids.json"
     bad.write_text("{ not json")
     monkeypatch.setattr(sim, "_IVF_INDEX_PATH", str(bad))
     _clear_caches()
     assert sim._frozen_ivf_index() == {}
-    # Oracle renderers degrade to None rather than raising.
-    assert sim._ivf_oracle_sql() is None
-    assert sim._ivf_recall_oracle_sql() is None
-    assert sim._semdedup_oracle_sql() is None
+    # The gate refuses the comparison and names the retrain tool...
+    sf_dir = os.path.join(TESTDATA, "sf0.01")
+    q = all_queries()
+    for name in ("ann_ivf_topk", "ann_ivf_kmeans_recall", "semdedup_clusters"):
+        with pytest.raises(AssertionError, match="tools/train_ivf_index.py"):
+            oracle.assert_matches_oracle(None, q[name], sf_dir)
+    # ...and oracle_sql() leaves those queries out (rows-only),
+    # while the PQ oracle, whose artifact is intact, stays.
+    texts = __spark_entry__.oracle_sql()
+    assert not (set(ARTIFACT_BACKED) - {"ann_pq_adc_recall_trained"}) & set(texts)
+    assert "ann_pq_adc_recall_trained" in texts
+
+
+@pytest.mark.parametrize("name", ARTIFACT_BACKED)
+def test_artifact_oracles_match_off_gate_scale(spark, sf_dir, name):
+    """The artifact-backed oracles read the index of the fixture being
+    checked, so they hold at a scale other than GATE_SF_DIR's."""
+    oracle.assert_matches_oracle(spark, all_queries()[name], sf_dir)
+
+
+def test_oracle_sql_texts_are_self_contained():
+    """oracle_sql() keeps every oracle at GATE_SF_DIR, and each
+    artifact-backed text, run on a bare connection holding only the
+    table views, gives the gate connection's result."""
+    texts = __spark_entry__.oracle_sql()
+    q = all_queries()
+    assert set(texts) == {n for n, x in q.items() if x.oracle is not None}
+    assert len(texts) == 330
+    sf_dir = __spark_entry__.GATE_SF_DIR
+    bare = duckdb.connect()
+    for t in oracle.TABLES:
+        bare.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    gate = oracle.duck_connection(sf_dir)
+    try:
+        for name in ARTIFACT_BACKED:
+            assert oracle.result_digest(
+                *oracle.run_duck(bare, texts[name])
+            ) == oracle.result_digest(*oracle.run_duck(gate, q[name].oracle)), name
+    finally:
+        bare.close()
+        gate.close()
 
 
 def test_distributed_training_roundtrips_index_frame(spark):

@@ -702,53 +702,6 @@ def test_bfs_recursive_reaches_neighbours(spark, sf_dir):
         assert r.n_2hop >= 0
 
 
-def test_mllib_minhash_parity_with_custom_lsh(spark, sf_dir):
-    """The MLlib MinHashLSH demo (tests-only, not a registered query) must
-    agree with the custom LSH path on the synthesized near-dup pairs:
-    both are 4-table/4-band MinHash over the same 3-token shingles, so
-    the planted (i, i+3000000) pairs should be recovered by both."""
-    from mapreducer_spark.operators.mllib_lsh import dedup_minhash_mllib
-
-    mllib_found = {
-        (r.id_a, r.id_b) for r in dedup_minhash_mllib(spark, sf_dir).collect()
-    }
-    expected = {(i, i + 3000000) for i in range(0, 500, 5)}
-    recall = len(mllib_found & expected) / len(expected)
-    assert recall >= 0.95, f"MLlib LSH recall too low: {recall}"
-    # And the reported distances must be genuine near-dups.
-    for r in dedup_minhash_mllib(spark, sf_dir).collect():
-        assert 0.0 <= r.jaccard_dist <= 0.3
-
-
-def test_mllib_brp_ann_parity_with_exact(spark, sf_dir):
-    """The MLlib BucketedRandomProjectionLSH demo (tests-only) must
-    return only genuine sub-threshold neighbours, verified against exact
-    Euclidean distance computed independently."""
-    import math
-
-    from mapreducer_spark.operators.mllib_lsh import ann_random_projection_mllib
-    from mapreducer_spark.sources import load_table
-
-    rows = ann_random_projection_mllib(spark, sf_dir).collect()
-    assert rows, "BRP-LSH returned no candidate pairs"
-    vecs = {
-        r.vec_id: r.embedding
-        for r in load_table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < 5000)
-        .collect()
-    }
-    checked = 0
-    for r in rows[:50]:
-        if r.q_id in vecs and r.vec_id in vecs:
-            exact = math.sqrt(
-                sum((a - b) ** 2 for a, b in zip(vecs[r.q_id], vecs[r.vec_id]))
-            )
-            assert abs(exact - r.euclid_dist) < 1e-4
-            assert r.euclid_dist <= 1.45
-            checked += 1
-    assert checked > 0
-
-
 def _canonical_bpe(wc: dict, rounds: int):
     """Reference greedy BPE (Sennrich et al. 2016), pure Python: weighted
     pair counts over the word-frequency table, argmax merge with

@@ -4,6 +4,7 @@ stops broadcasting, these fail before any perf regression ships."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducer_spark.operators.relational import (
@@ -557,16 +558,18 @@ def test_no_python_worker_literal_frames_in_operators():
     assert not offenders, offenders
 
 
-def test_plan_inspection_has_no_assert_statements():
-    """plans/inspect.py guards production paths (the oracle gate and
-    every inspected pin), and ``python -O`` strips ``assert``: every
-    check there must be an explicit raise."""
+@pytest.mark.parametrize("module", ["plans/inspect.py", "oracle.py"])
+def test_plan_inspection_has_no_assert_statements(module):
+    """plans/inspect.py and oracle.py guard production paths (the oracle
+    gate and every inspected pin), and ``python -O`` strips ``assert``:
+    every check there must be an explicit raise."""
     import ast
     from pathlib import Path
 
-    from mapreducer_spark.plans import inspect as plan_inspect
+    import mapreducer_spark
 
-    tree = ast.parse(Path(plan_inspect.__file__).read_text())
+    path = Path(mapreducer_spark.__file__).parent / module
+    tree = ast.parse(path.read_text())
     asserts = [n.lineno for n in ast.walk(tree) if isinstance(n, ast.Assert)]
     assert asserts == [], f"assert statements at lines {asserts}"
 

@@ -1,13 +1,14 @@
-"""The 10x sweep's oracle-result cache (VERDICT r10 #4) — the parts
-that must be right for a cache hit to be as trustworthy as a live
-DuckDB run: structural key invalidation (oracle SQL edit, fixture
-regeneration), digest strictness (same canonicalization as the gate),
-and the deterministic refresh slice."""
+"""The 10x sweep's oracle-result cache — the parts that must be right
+for a cache hit to be as trustworthy as a live DuckDB run: structural
+key invalidation (oracle SQL edit, fixture regeneration, index
+retrain), digest strictness (same canonicalization as the gate), and
+the deterministic refresh slice."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import shutil
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -15,15 +16,18 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _sweep():
     spec = importlib.util.spec_from_file_location(
-        "sweep_r11", os.path.join(REPO, "tools", "sweep_r11.py")
+        "sweep", os.path.join(REPO, "tools", "sweep.py")
     )
     mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("sweep_r11", mod)
+    sys.modules.setdefault("sweep", mod)
     spec.loader.exec_module(mod)
     return mod
 
 
-def test_fixture_fingerprint_tracks_bytes(tmp_path):
+def test_fixture_fingerprint_tracks_bytes(tmp_path, monkeypatch, sf_dir):
+    from mapreducer_spark.operators import similarity as sim
+    from mapreducer_spark.registry import all_queries
+
     sw = _sweep()
     d = tmp_path / "fx"
     d.mkdir()
@@ -40,6 +44,21 @@ def test_fixture_fingerprint_tracks_bytes(tmp_path):
     f3 = sw.fixture_fingerprint(str(d))
     (d / "c.parquet").rename(d / "b.parquet")
     assert f3 != sw.fixture_fingerprint(str(d))
+
+    # A retrained index on unchanged fixture bytes changes the cache key
+    # too: the key hashes the oracle text with the index inlined.
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), d)
+    fp = sw.fixture_fingerprint(str(d))
+    record = {"md5": sim._embeddings_md5(str(d)), "n_train": 500}
+    monkeypatch.setattr(sim, "_frozen_fingerprints", lambda: {"fx": record})
+    q = all_queries()["ann_ivf_topk"]
+    keys = []
+    for scale in (1.0, 2.0):
+        index = [[scale * (i + j) for j in range(64)] for i in range(16)]
+        monkeypatch.setattr(sim, "_frozen_ivf_index", lambda: {"fx": index})
+        keys.append(sw.cache_key(q, str(d), fp))
+    assert keys[0] != keys[1]
+    assert sw.cache_key(q, str(d), fp) == keys[1]
 
 
 def test_refresh_slice_deterministic_and_sparse():

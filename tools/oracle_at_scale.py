@@ -10,11 +10,10 @@ changes a result when the data grows 100x past the gate scale.
 
 Picks cover every operator family whose plan CHANGES behavior with
 scale (adaptive LSH bits, AQE skew handling, broadcast-vs-shuffle
-switches) plus the newest round's operators.  Excluded by design:
-- queries whose oracle embeds frozen gate-scale artifacts (IVF/PQ
-  centroid literals) — the index is fixture-versioned.  To sweep them,
-  set SPARK_GRAFT_ORACLE_SF=.scale10/sf1 so the oracles render the sf1
-  frozen index (how the r7/r8 IVF rows were produced).
+switches) plus the newest round's operators.  The frozen-index
+queries (IVF centroids, PQ codewords) are picked like any other: their
+oracles read the 10x fixture's own artifacts through the gate's DuckDB
+connection.
 (approx_price_quantiles was excluded through r6 because the GK sketch
 is honestly approximate past its accuracy param; round 7 replaced the
 implementation with exact two-phase distributed selection, so it now
@@ -74,9 +73,8 @@ DEFAULT_PICKS = [
     "bloom_decontamination",
     "cdc_chunk_dedup",
     "incremental_neardup_pairs",
-    # user_activity_similarity_blocked is excluded like the IVF/PQ
-    # queries: its oracle is rendered at the GATE's 4-bit LSH
-    # resolution while the Spark side adapts bits to the user count,
+    # user_activity_similarity_blocked is excluded: its oracle is
+    # rendered at the GATE's 4-bit LSH resolution while the Spark side adapts bits to the user count,
     # so at 10x the candidate sets (and recall) legitimately differ.
     "approx_price_quantiles",
     "customer_spend_distribution",
@@ -207,8 +205,7 @@ DEFAULT_PICKS = [
     "join_fanout_profile",
     # r9: VERDICT r8 #4 — point the sweep at the driver blind spot.
     # Every never-driver-sampled name (per CORRECTNESS_r01..r08) now has
-    # a default 10x row; frozen-index names (ann_*/ivf_*/semdedup) stay
-    # in the separate SPARK_GRAFT_ORACLE_SF=.scale10/sf1 run.
+    # a default 10x row.
     "adaptive_threshold_script",
     "approx_distinct_error_report",
     "array_functions",
@@ -289,6 +286,20 @@ DEFAULT_PICKS = [
     "lsh_candidate_cost_curve",
     "histogram_sketch_quantiles",
     "zorder_codes_3d",
+    # the frozen-index family, checked against the 10x fixture's index
+    "ann_index_ari_staleness",
+    "ann_ivf_delta_assign",
+    "ann_ivf_int8_recall",
+    "ann_ivf_kmeans_recall",
+    "ann_ivf_nprobe_sweep",
+    "ann_ivf_rebalance_plan",
+    "ann_ivf_topk",
+    "ann_mmr_agreement",
+    "ann_mmr_topk",
+    "ann_pq_adc_recall_trained",
+    "ivf_list_balance",
+    "retrieval_pipeline_summary",
+    "semdedup_clusters",
 ]
 
 
@@ -298,29 +309,6 @@ def main() -> None:
             f"{SCALE10} missing — run `python tools/gen_scale10.py` first"
         )
     picks = sys.argv[1:] or DEFAULT_PICKS
-    # Frozen-index oracles (IVF/PQ centroid literals) render for
-    # SPARK_GRAFT_ORACLE_SF, which must point at the 10x fixture when
-    # sweeping them — a plain run renders gate-scale literals and
-    # MISMATCHes by construction, which reads like a defect but is an
-    # operator error (it cost a re-run in r8).  Warn loudly up front.
-    frozen_prefixes = ("ann_ivf", "ann_pq", "ann_index", "ivf_", "semdedup")
-    frozen_picks = [
-        n for n in picks if n.startswith(frozen_prefixes)
-    ]
-    if frozen_picks and os.environ.get("SPARK_GRAFT_ORACLE_SF") is None:
-        print(
-            json.dumps(
-                {
-                    "warning": "frozen-index picks without "
-                    "SPARK_GRAFT_ORACLE_SF — their oracles render "
-                    "GATE-scale centroid literals and will MISMATCH "
-                    "against 10x serving; set "
-                    "SPARK_GRAFT_ORACLE_SF=<repo>/.scale10/sf1",
-                    "picks": frozen_picks,
-                }
-            ),
-            flush=True,
-        )
     spark = get_spark(
         app_name="oracle-at-scale",
         master="local[32]",

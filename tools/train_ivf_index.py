@@ -7,8 +7,9 @@ freezes them into ``mapreducer_spark/data/ivf_centroids.json``.  The
 serving query (``ann_ivf_topk``) loads the frozen artifact instead of
 re-training per query — exactly how a production IVF deployment works
 (train once on a sample, persist the quantizer, serve against it), and
-what makes the query hash-checkable: the DuckDB oracle renders the SAME
-literal centroids, so both engines run the identical index.
+what makes the query hash-checkable: the DuckDB oracle reads the SAME
+centroids as its ivf_centroids relation, so both engines run the
+identical index.
 
 Re-run after a fixture regeneration:
 

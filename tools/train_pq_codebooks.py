@@ -12,7 +12,7 @@ quantizing against stale codewords (same drift discipline as the IVF
 index, tools/train_ivf_index.py).
 
 Codeword ids are canonicalized by sorting centers lexicographically, so
-the artifact — and therefore every oracle rendered from it — does not
+the artifact — and therefore every oracle that reads it — does not
 depend on MLlib's internal cluster ordering.
 
 Re-run after a fixture regeneration:

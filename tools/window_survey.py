@@ -1,6 +1,6 @@
 """Registry-wide survey of unpartitioned-window input sizes.
 
-Runs every registered query at the gate sf (default sf0.01), executes
+Runs every registered query on the given fixture, executes
 it, and records the input row count of each Window node with an empty
 partition spec (plans/inspect.unpartitioned_window_input_rows).  Used
 to calibrate UNPARTITIONED_WINDOW_MAX_ROWS: the bound must sit above
@@ -8,7 +8,7 @@ every legitimate domain-collapsed frame (score buckets, day/month
 dimensions, top-k survivors) and below any data-dimension frame (the
 r9 vocab_growth_curve defect: one row per document through one task).
 
-Usage: python tools/window_survey.py [start [end]]   # name-sorted slice
+Usage: python tools/window_survey.py SF_DIR [start [end]]   # name-sorted slice
 Appends JSONL rows {"name", "windows": [rows...], "sec"} to
 tools/window_survey_r10.jsonl.
 """
@@ -29,9 +29,9 @@ from mapreducer_spark.session import get_spark
 
 def main() -> None:
     names = sorted(all_queries())
-    start = int(sys.argv[1]) if len(sys.argv) > 1 else 0
-    end = int(sys.argv[2]) if len(sys.argv) > 2 else len(names)
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+    sf_dir = sys.argv[1]
+    start = int(sys.argv[2]) if len(sys.argv) > 2 else 0
+    end = int(sys.argv[3]) if len(sys.argv) > 3 else len(names)
     out_path = os.path.join(os.path.dirname(__file__), "window_survey_r10.jsonl")
     spark = get_spark(
         app_name="window-survey", master="local[8]", shuffle_partitions=8
