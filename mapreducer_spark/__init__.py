@@ -7,6 +7,7 @@ and LLM-data-pipeline operators a 100 TB training-data pipeline needs.
 
 Layout:
     session.py    SparkSession factory (AQE, Arrow, UTC, shuffle sizing)
+    pyworker.py   Python worker daemon that keeps unchanged zip directories
     registry.py   declarative query registry (Spark fn + DuckDB oracle SQL)
     sources/      table loaders, text-corpus source, key:value text sink
     functions/    shared column expressions (tokenizer, cosine, hashes)

@@ -94,14 +94,15 @@ FROM documents
 def token_count_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counts through a scalar ``pandas_udf``.
 
-    The scan is NOT fanned out to every core: each Python task pays a
-    fixed worker cost of about 0.27 s CPU (Spark 4.1.2 re-validates its
-    import caches per task, see ``sources.tables._PY_UDF_TASK_BYTES``)
-    against about 0.15 s of UDF body per 0.6 MB of ``documents``
-    parquet.  ``fan_out_for_python`` therefore allows one task per
-    ~1.1 MB of input: sf0.1's 0.6 MB table runs as one task with no
-    shuffle, where a plain ``fan_out`` paid a repartition shuffle and
-    one fixed cost per core.  Large inputs still fan out to cluster
+    The scan is NOT fanned out to every core: each task a split adds
+    costs about 0.12 s CPU, the Python worker's fixed cost per task plus
+    its share of the repartition shuffle (see
+    ``sources.tables._PY_UDF_TASK_BYTES``), against about 0.14 s of UDF
+    body for the whole 0.6 MB of sf0.1 ``documents`` parquet.
+    ``fan_out_for_python`` therefore allows one task per ~0.49 MB of
+    input: sf0.1's table runs as one task with no shuffle, where a
+    plain ``fan_out`` paid a repartition shuffle and one fixed cost per
+    core.  Large inputs still fan out to cluster
     parallelism."""
     import re
 

@@ -15,7 +15,28 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _positive_int_env(name: str, default: int) -> int:
+    """``int(os.environ[name])``, or ``default`` when unset; an empty,
+    non-integer or non-positive value raises a ValueError naming
+    ``name``."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
+
+
+DEFAULT_SHUFFLE_PARTITIONS = _positive_int_env("SPARK_GRAFT_CPUS", 32)
+
+# The package's parent directory: a worker daemon started before any file
+# ships finds mapreducer_spark.pyworker there.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def driver_memory_for(master: str | None) -> str | None:
@@ -48,6 +69,25 @@ def driver_memory_for(master: str | None) -> str | None:
     )
 
 
+def python_daemon_conf(master: str | None) -> dict[str, str]:
+    """Confs that run Python workers under :mod:`mapreducer_spark.pyworker`,
+    which skips the per-task re-read of unchanged zip archives.  Only for
+    masters whose executors share this driver's filesystem (``local``,
+    ``local[...]``, ``local-cluster[...]``): the daemon starts before any
+    file ships, so it is found through ``spark.executorEnv.PYTHONPATH``,
+    which Spark appends after ``pyspark.zip``.  Empty for ``master=None``
+    (a session supplied from outside) and remote masters, which keep the
+    stock daemon."""
+    if master is None or not (
+        master == "local" or master.startswith(("local[", "local-cluster["))
+    ):
+        return {}
+    return {
+        "spark.python.daemon.module": "mapreducer_spark.pyworker",
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
+    }
+
+
 def get_spark(
     app_name: str = "mapreducer-spark",
     master: str | None = None,
@@ -63,20 +103,17 @@ def get_spark(
     if master is not None:
         builder = builder.master(master)
 
-    # Heap sized to the task-slot count (guide §5/§9): local-mode
-    # defaults to -Xmx1g, which at local[32] is ~32 MB per concurrent
-    # task slot — far below any production posture (executors run
-    # 0.5-4 GB/core) and the mechanism behind VERDICT r13's stochastic
-    # bench crash (fatal hashAgg→TakeOrderedAndProject stack at 32
-    # cores, clean at 8: 32 concurrent partial-aggregate hash maps +
-    # the 2000-entry codegen class cache sharing 1 GiB).  512 MB per
-    # slot, floor 2 GiB — derived from the master's core count, so the
-    # driver's low-core scaling leg sizes itself proportionally; a real
-    # cluster supplies its own executor memory and never hits this
-    # (master=None leaves the session untouched).  Override:
-    # SPARK_GRAFT_DRIVER_MEM.  Wall-clock neutral by measurement (r13
-    # A/B'd 1g vs 8g on the heavy tail: no change) — this buys survival
-    # headroom, not speed, so the bench stays comparable.
+    # Heap sized to the task-slot count: every concurrent task's
+    # partial-aggregate hash map plus the 2000-entry codegen class cache
+    # (below) must fit in the driver heap.  Local mode defaults to
+    # -Xmx1g, about 32 MB per slot at local[32], where a hash aggregate
+    # feeding TakeOrderedAndProject has died of it while 8 slots ran
+    # clean.  512 MB per slot, floor 2 GiB, derived from the master's
+    # core count so a low-core session sizes itself proportionally; a
+    # real cluster supplies its own executor memory (master=None leaves
+    # the session untouched).  Override: SPARK_GRAFT_DRIVER_MEM.  1g vs
+    # 8g on the heavy tail measured no wall-clock change: this buys
+    # survival headroom, not speed, so the bench stays comparable.
     driver_mem = driver_memory_for(master)
 
     conf: dict[str, str] = {
@@ -109,6 +146,7 @@ def get_spark(
         # confs to spark-submit at gateway start); a pre-existing
         # session ignores it, which is exactly the harness contract.
         conf["spark.driver.memory"] = driver_mem
+    conf.update(python_daemon_conf(master))
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -138,20 +138,27 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-# Input bytes per Python-UDF task.  Every Python task pays a fixed
-# worker-side cost before its UDF body runs — about 0.27 s CPU per task
-# on Spark 4.1.2 / Python 3.11, whatever the body does: the worker's
-# ``setup_spark_files`` calls ``importlib.invalidate_caches()`` on every
-# task, and each of the ~16 zipimporters in ``sys.path_importer_cache``
-# then re-reads the 1,328-entry directory of ``pyspark.zip``.  The
-# token-count body costs about 0.15 s per 0.6 MB of ``documents``
-# parquet.  A task earns its fixed cost once its body costs as much, so
-# the floor is the input whose body time equals the fixed cost
-# (~1.1 MB).  Deliberately not a setting: it is a property of the
+# Input bytes per Python-UDF task.  Each task the floor adds costs CPU
+# before its UDF body runs: the fixed cost of a Python task, 0.07-0.09 s
+# of process-tree CPU per extra trivial ``pandas_udf`` task on Spark
+# 4.1.2 / Python 3.11 under the engine's worker daemon
+# (``mapreducer_spark.pyworker``; 0.31 s with the stock daemon, which
+# re-reads ``pyspark.zip`` on every task), plus its share of the
+# repartition shuffle that splitting a small scan adds, about 0.04 s.
+# Measured on sf0.1 ``documents`` (594,568 bytes, one split) at
+# ``local[2]``: repartitioning to 2 tasks cost 0.10-0.19 s more CPU
+# than the single task, to 4 tasks 0.22-0.29 s more; the token-count
+# body costs 0.11-0.17 s on the whole table.  A task earns its cost once
+# its body costs as much, so the floor is the input whose body time
+# equals that cost (~0.49 MB), and the 0.6 MB table stays one task with
+# no shuffle.  Deliberately not a setting: it is a property of the
 # worker, not of a deployment.
-_PY_TASK_FIXED_S = 0.27
-_PY_BODY_S_PER_BYTE = 0.15 / (0.6 * 2**20)
-_PY_UDF_TASK_BYTES = round(_PY_TASK_FIXED_S / _PY_BODY_S_PER_BYTE)
+_PY_TASK_FIXED_S = 0.08
+_PY_REPARTITION_S_PER_TASK = 0.04
+_PY_BODY_S_PER_BYTE = 0.14 / 594_568
+_PY_UDF_TASK_BYTES = round(
+    (_PY_TASK_FIXED_S + _PY_REPARTITION_S_PER_TASK) / _PY_BODY_S_PER_BYTE
+)
 
 
 def fan_out_for_python(df: DataFrame) -> DataFrame:
