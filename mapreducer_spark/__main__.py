@@ -96,6 +96,7 @@ def cmd_curate(args: argparse.Namespace) -> int:
 
     from mapreducer_spark.functions.hashes import md5_int64
     from mapreducer_spark.operators.curation import repetition_metrics
+    from mapreducer_spark.plans.inspect import checkpoint_inspected
     from mapreducer_spark.sources import load_table
     from mapreducer_spark.sources.snapshots import snapshot_write
 
@@ -105,8 +106,8 @@ def cmd_curate(args: argparse.Namespace) -> int:
     # Checkpoint before filtering on `keep`: pushed into the scan, the
     # predicate re-evaluates the Gopher HOF tree per reference (same fix
     # as curation_pipeline_summary).
-    metrics = repetition_metrics(d).select("doc_id", "keep").localCheckpoint(
-        eager=True
+    metrics = checkpoint_inspected(
+        repetition_metrics(d).select("doc_id", "keep"), "curate.metrics"
     )
     kept = metrics.where("keep").select("doc_id").join(d, "doc_id")
     w = Window.partitionBy(md5_int64(F.col("text"))).orderBy("doc_id")

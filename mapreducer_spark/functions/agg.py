@@ -44,6 +44,8 @@ from decimal import Decimal
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from mapreducer_spark.plans.inspect import checkpoint_inspected
+
 # Fast-branch bounds of _dec_units: |x * 10^s| below 2^45 keeps the double
 # within 2^-9 of x * 10^s, and a fraction more than _TIE_BAND from .5
 # rounds the same way as the exact decimal (see the module docstring).
@@ -318,7 +320,7 @@ def _global_row_number_impl(
     # and the sizes job below is a separate execution — without a
     # materialization the final job can re-sample different bounds and
     # the offsets silently misalign (observed: uneven NTILE buckets).
-    ranged = ranged.localCheckpoint(eager=True)
+    ranged = checkpoint_inspected(ranged, "global_row_number.ranged")
     # One row per partition — metadata-sized, so collect() is legitimate.
     sizes = {
         r["__pid"]: r["cnt"]
@@ -437,7 +439,7 @@ def _global_running_sums_impl(
     )
     # Same pinning rationale as _global_row_number_impl: the totals job
     # and the final job must see the SAME sampled range bounds.
-    ranged = ranged.localCheckpoint(eager=True)
+    ranged = checkpoint_inspected(ranged, "global_running_sums.ranged")
     per_pid = {
         r["__pid"]: r
         for r in ranged.groupBy("__pid")

@@ -34,6 +34,7 @@ from mapreducer_spark.operators.dedup import (
     neardup_pairs_frozen,
     neardup_pairs_shared,
 )
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 
 _MAX_ROUNDS = 15
@@ -56,9 +57,10 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # is two plan branches over `edges`, which would execute the whole
     # upstream pair-detection pipeline twice (column-swapped branches are
     # not ReusedExchange candidates).
-    base = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
+    base = checkpoint_inspected(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        "connected_components.base",
+    )
     sym = base.unionByName(
         base.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -78,8 +80,8 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # Loop partition count derived from the edge count (base is already
     # materialized, so count() is free): ~1M symmetric+looped rows per
     # task, floored at 8 so the fixture-scale graph still overlaps its
-    # tiny tasks.  A constant here would be wrong at 1000x the edges
-    # (VERDICT r2 #5).
+    # tiny tasks.  The width must scale with the edge count: a constant
+    # would be wrong at 1000x the edges.
     n_edges = base.count()
     n_loop_rows = 4 * n_edges  # sym (2x) + self_loops (2x)
     n_parts = max(8, n_loop_rows // 1_000_000)
@@ -103,9 +105,10 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # every round's shuffle join co-locates on the probe key once
     # instead of re-shuffling per round.
     sym = sym.unionByName(self_loops)
-    sym = (
-        sym.coalesce(n_parts) if use_broadcast else sym.repartition(n_parts, "b")
-    ).localCheckpoint(eager=True)
+    sym = checkpoint_inspected(
+        sym.coalesce(n_parts) if use_broadcast else sym.repartition(n_parts, "b"),
+        "connected_components.sym",
+    )
     from pyspark.sql import Observation
 
     # Round 0 fused: with identity labels the join against `labels` is a
@@ -116,17 +119,17 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # checkpoint's materialization) — here and per round below, one
     # whole job saved each iteration.
     obs0 = Observation("cc_r0")
-    labels = (
+    labels = checkpoint_inspected(
         sym.groupBy(F.col("a").alias("v"))
         .agg(F.min("b").alias("comp"))
-        .observe(obs0, F.sum("comp").alias("s"))
-        .localCheckpoint(eager=True)
+        .observe(obs0, F.sum("comp").alias("s")),
+        "connected_components.labels0",
     )
     prev_sum = obs0.get["s"]
     converged = False
 
     for _round in range(_MAX_ROUNDS):
-        # Fused round (VERDICT r4 #3): neighbor-min AND pointer jump
+        # Fused round: neighbor-min AND pointer jump
         # (path halving) in ONE pass over the edge list — per edge
         # (a,b), take min(comp(b), comp(comp(b))) via two joins against
         # the SAME materialized label vector, then one groupBy(a).
@@ -145,7 +148,9 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
         jump = labels.select(F.col("v").alias("jv"), F.col("comp").alias("jcomp"))
         jmp = F.broadcast(jump) if use_broadcast else jump
         obs = Observation(f"cc_r{_round + 1}")
-        new_labels = (
+        # Materialize to keep the loop's lineage bounded; the observed
+        # label sum is the convergence check and costs no extra job.
+        new_labels = checkpoint_inspected(
             sym.join(lbl, sym.b == labels.v)
             .join(jmp, F.col("comp") == F.col("jv"), "left")
             .groupBy(F.col("a").alias("v"))
@@ -154,11 +159,8 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
                     F.least(F.col("comp"), F.coalesce("jcomp", F.col("comp")))
                 ).alias("comp")
             )
-            .observe(obs, F.sum("comp").alias("s"))
-            # Materialize to keep the loop's lineage bounded; the
-            # observed label sum is the convergence check and costs no
-            # extra job.
-            .localCheckpoint(eager=True)
+            .observe(obs, F.sum("comp").alias("s")),
+            "connected_components.labels",
         )
         cur_sum = obs.get["s"]
         labels = new_labels
@@ -180,7 +182,7 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Oracle CC labels, the SCALABLE formulation (VERDICT r12 #4): the old
+# Oracle CC labels, the SCALABLE formulation (O(|E|) work per round): the old
 # WITH RECURSIVE all-pairs transitive closure (reach = every (v,
 # reachable-id) pair) is O(sum of component-size^2) ROWS — at the 10x
 # fixture the pair graph is 1.44M edges and the closure oracle stopped

@@ -31,6 +31,7 @@ from mapreducer_spark.functions.text import (
     ORACLE_TOKEN_SPLIT_RE,
     SPARK_TOKEN_SPLIT_RE,
 )
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import fan_out, load_table
 
@@ -439,7 +440,8 @@ def contrastive_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     ranked, n = global_row_number_with_total(d, ["doc_id"])
-    idx = ranked.localCheckpoint(eager=True)  # anchor + partner branches
+    # Pinned once: the anchor and partner branches both read it.
+    idx = checkpoint_inspected(ranked, "contrastive_negative_pairs.idx")
     j = spark.range(1, _NEG_K + 1).select(F.col("id").cast("int").alias("j"))
     off = 1 + F.pmod(
         md5_int64(
@@ -1338,9 +1340,10 @@ def curation_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.4 s as a pushed filter at sf0.1).  The checkpoint pins the
     # one-evaluation-per-row shape and the narrow frame then feeds both
     # the kept-count aggregate and the dedup window for free.
-    metrics = repetition_metrics(d).select(
-        "doc_id", "n_tokens", "keep"
-    ).localCheckpoint(eager=True)
+    metrics = checkpoint_inspected(
+        repetition_metrics(d).select("doc_id", "n_tokens", "keep"),
+        "curation_pipeline_summary.metrics",
+    )
     kept = (
         metrics.where("keep")
         .select("doc_id", "n_tokens")
@@ -2218,7 +2221,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hits"
         ),
     )
-    per_doc = per_doc.localCheckpoint(eager=True)
+    per_doc = checkpoint_inspected(per_doc, "corpus_datasheet.per_doc")
     uni = (
         d.select(F.explode(ts).alias("tok"))
         .groupBy("tok")
@@ -2375,7 +2378,7 @@ def quality_score_quantile_map(
         "doc_id", "source"
     )
     ss = scored.join(docs, "doc_id").select("source", "score")
-    ss = ss.localCheckpoint(eager=True)
+    ss = checkpoint_inspected(ss, "quality_score_quantile_map.ss")
     srch = ss.groupBy("source", "score").agg(
         F.count(F.lit(1)).alias("c")
     )

@@ -35,6 +35,7 @@ from mapreducer_spark.functions.text import (
     ORACLE_TOKENS_SNIPPET,
     SPARK_TOKEN_SPLIT_RE,
 )
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import fan_out, load_table
 
@@ -297,8 +298,8 @@ def _blocked_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # either way: `sizes` and the two join branches would otherwise each
     # re-scan (and on the live path re-tokenize) the corpus (4.8s vs
     # 6.4s at sf0.1).
-    ts = neardup_tok_hash_sets_frozen(spark, sf_dir).localCheckpoint(
-        eager=True
+    ts = checkpoint_inspected(
+        neardup_tok_hash_sets_frozen(spark, sf_dir), "blocked_pair_overlap.ts"
     )
     sizes = ts.select("doc_id", F.size("tok_set").alias("sz"))
     tok_rows = ts.select("doc_id", "block", F.explode("tok_set").alias("h"))
@@ -371,15 +372,14 @@ def incremental_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is_new is derived after the read.  Materialize once (same
     # rationale as _blocked_pair_overlap): sizes + both join branches
     # would re-scan (live path: re-tokenize) the corpus.
-    ts = (
-        neardup_tok_hash_sets_frozen(spark, sf_dir)
-        .select(
+    ts = checkpoint_inspected(
+        neardup_tok_hash_sets_frozen(spark, sf_dir).select(
             "doc_id",
             "block",
             "tok_set",
             (F.col("doc_id") % _INC_NEW_MOD == _INC_NEW_RES).alias("is_new"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "incremental_neardup_pairs.ts",
     )
     sizes = ts.select("doc_id", F.size("tok_set").alias("sz"))
     tok_rows = ts.select(
@@ -754,7 +754,9 @@ def minhash_lsh_pairs(
     # otherwise each re-tokenize the corpus).
     if tok_sets is None:
         tok_sets = _token_hash_sets(corpus).select("doc_id", "tok_set")
-    ts = tok_sets.select("doc_id", "tok_set").localCheckpoint(eager=True)
+    ts = checkpoint_inspected(
+        tok_sets.select("doc_id", "tok_set"), "minhash_lsh_pairs.ts"
+    )
     with_sets = candidates.join(
         ts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("tok_set", "set_a"),
         "id_a",
@@ -1842,7 +1844,9 @@ def minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run would read.  The checkpointed candidate frame feeds BOTH the
     # recall legs and the verification (previously the banded stage ran
     # twice — once directly, once inside minhash_lsh_pairs).
-    cand = lsh_cand_md5_frozen(spark, sf_dir).localCheckpoint(eager=True)
+    cand = checkpoint_inspected(
+        lsh_cand_md5_frozen(spark, sf_dir), "minhash_lsh_recall.cand"
+    )
     verified = minhash_lsh_pairs(
         corpus,
         use_md5=True,
@@ -2375,7 +2379,9 @@ def lsh_candidate_cost_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Frozen signature artifact (live fallback on staleness): the cost
     # planner re-bands the SAME materialized signatures a production
     # run would read — checkpointed once, reused by all 30 config-bands.
-    sigs = lsh_sigs_md5_frozen(spark, sf_dir).localCheckpoint(eager=True)
+    sigs = checkpoint_inspected(
+        lsh_sigs_md5_frozen(spark, sf_dir), "lsh_candidate_cost_curve.sigs"
+    )
     band_structs = []
     for bands, rpb in _LSH_COST_CONFIGS:
         for j in range(bands):

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducer_spark.functions.agg import dec_sum
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import load_table
 
@@ -258,16 +259,16 @@ def _hour_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     v = F.array(*[F.col(f"h{h}") for h in range(24)])
-    return (
+    # Materialize: the profile pipeline feeds BOTH sides of the pairwise
+    # join (and the broadcast build) — without this it recomputes per
+    # branch (~19s vs ~5s at sf0.1).
+    return checkpoint_inspected(
         prof.select("user_id", v.alias("v"))
         # Norm computed ONCE per profile, not once per pair.
         .select(
             "user_id", "v", F.sqrt(_static_dot(F.col("v"), F.col("v"))).alias("nrm")
-        )
-        # Materialize: the profile pipeline feeds BOTH sides of the
-        # pairwise join (and the broadcast build) — without this it
-        # recomputes per branch (~19s vs ~5s at sf0.1).
-        .localCheckpoint(eager=True)
+        ),
+        "hour_profiles.prof",
     )
 
 
@@ -1894,7 +1895,7 @@ def user_lifecycle_states(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("resurrected")
         .alias("state"),
     )
-    states = states.localCheckpoint(eager=True)
+    states = checkpoint_inspected(states, "user_lifecycle_states.states")
     counts = states.groupBy("wk", "state").agg(
         F.count(F.lit(1)).alias("n_users")
     )
@@ -2135,7 +2136,7 @@ ORDER BY type_a, type_b
 def event_type_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     tu = e.select("event_type", "user_id").distinct()
-    tu = tu.localCheckpoint(eager=True)
+    tu = checkpoint_inspected(tu, "event_type_user_overlap.tu")
     sizes = tu.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = tu.select(F.col("event_type").alias("type_a"), "user_id")
     b = tu.select(F.col("event_type").alias("type_b"), "user_id")
@@ -2248,7 +2249,7 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     uw = e.select(
         "user_id", F.date_trunc("week", "ts").cast("date").alias("wk")
     ).distinct()
-    uw = uw.localCheckpoint(eager=True)
+    uw = checkpoint_inspected(uw, "retention_decay_fit.uw")
     first = uw.groupBy("user_id").agg(F.min("wk").alias("cohort"))
     mx = uw.agg(F.max("wk").alias("max_wk"))
     cells = (
@@ -2259,7 +2260,7 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.countDistinct("user_id").alias("n_active"))
     )
-    cells = cells.localCheckpoint(eager=True)
+    cells = checkpoint_inspected(cells, "retention_decay_fit.cells")
     sizes = cells.where(F.col("k") == 0).select(
         "cohort", F.col("n_active").alias("size")
     )

@@ -20,8 +20,8 @@ Two classic ops beyond the connected-components pass in clustering.py:
 At 100 TB: both ops shuffle only (edge, rank/label) pairs, never
 documents; the near-dup edge list is orders of magnitude smaller than
 the corpus, and the co-purchase graph shuffles on part keys (uniform,
-no skew). The iterative loop localCheckpoints per round — same recipe
-as connected_components (clustering.py).
+no skew). Above the rank-vector broadcast cap the iterative loop pins
+per round — same recipe as connected_components (clustering.py).
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from mapreducer_spark.operators.dedup import (
     ORACLE_NEARDUP_PAIRS_SQL,
     neardup_pairs_shared,
 )
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import load_table
 
@@ -201,12 +202,12 @@ def _build_up_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_oracle_pagerank_sql(),
     doc=f"PageRank ({_PR_ITERS} fixed rounds, damping {_PR_DAMP}) on the "
     "part co-purchase graph (parts sharing an order, symmetric distinct "
-    "edges, so no dangling vertices). Spark = iterative join+agg with "
-    "per-round localCheckpoint (bounded lineage, the connected-"
-    "components recipe); oracle = the same rounds unrolled as chained "
-    "CTEs. Per-edge contributions round to 10 dp and sum as DECIMAL, "
-    "making every round — and therefore the fixpoint trajectory — "
-    "identical across engines and partitionings.",
+    "edges, so no dangling vertices). Spark = iterative join+agg, "
+    "pinned per round above the rank broadcast cap (bounded lineage, "
+    "the connected-components recipe); oracle = the same rounds "
+    "unrolled as chained CTEs. Per-edge contributions round to 10 dp "
+    "and sum as DECIMAL, making every round — and therefore the "
+    "fixpoint trajectory — identical across engines and partitionings.",
     tags=("graph", "join", "agg"),
 )
 def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,19 +221,22 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # violated the rank-vector cap's own memory argument at >5M
     # vertices.  (The broadcast deg setup was 1.8 s of a 3.2 s warm run.)
     sym = copurchase_sym_edges(spark, sf_dir)
-    edges = sym.select(
-        "src",
-        "dst",
-        F.count(F.lit(1)).over(Window.partitionBy("src")).alias("deg"),
-    ).localCheckpoint(eager=True)
+    edges = checkpoint_inspected(
+        sym.select(
+            "src",
+            "dst",
+            F.count(F.lit(1)).over(Window.partitionBy("src")).alias("deg"),
+        ),
+        "part_copurchase_pagerank.edges",
+    )
     n = edges.agg(F.count_distinct("src")).collect()[0][0]
     # Broadcasting the |V|-row rank vector keeps the materialized edge
     # list shuffle-free per round — but only while the vector fits in
     # executor memory.  Above the cap, fall back to a keyed shuffle join
     # on src (edges are already materialized; the extra exchange per
     # round is the honest cost of a rank vector that cannot broadcast),
-    # with a per-round localCheckpoint to bound the lineage the
-    # broadcast path avoids by construction.
+    # with a per-round pin to bound the lineage the broadcast path
+    # avoids by construction.
     use_broadcast = n <= _PR_BROADCAST_MAX_V
     # Round 1 fused: the seed rank is uniformly 1/n, so the first
     # contribution is a literal over the edge list — no rank-vector
@@ -273,7 +277,7 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if not use_broadcast:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = checkpoint_inspected(ranks, "part_copurchase_pagerank.ranks")
     return ranks.select("v", F.round("rank", 8).alias("pagerank"))
 
 
@@ -843,7 +847,7 @@ def copurchase_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ks = inline_rows(spark, [(int(k),) for k in _RICH_CLUB_KS], ["k"])
     club = ks.join(deg, deg.deg > ks.k).select("k", "src")
-    club = club.localCheckpoint(eager=True)
+    club = checkpoint_inspected(club, "copurchase_rich_club.club")
     nodes = club.groupBy("k").agg(F.count(F.lit(1)).alias("n_club"))
     ca = club.select("k", F.col("src").alias("ea"))
     cb = club.select(F.col("k").alias("kb"), F.col("src").alias("eb"))
@@ -920,7 +924,7 @@ FROM tail
 def copurchase_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = copurchase_sym_edges(spark, sf_dir)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    deg = deg.localCheckpoint(eager=True)
+    deg = checkpoint_inspected(deg, "copurchase_degree_powerlaw.deg")
     nv = deg.agg(F.count(F.lit(1)).alias("n_vertices"))
     tail = deg.where(F.col("deg") >= _PL_DMIN)
     lnterm = F.round(

@@ -17,6 +17,7 @@ from mapreducer_spark.functions.agg import (
     oracle_fixed6_sum,
 )
 from mapreducer_spark.functions.hashes import md5_int64, oracle_md5_int64
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import load_table
 
@@ -1865,9 +1866,8 @@ def robust_price_quantity_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(wcum).alias("cc"),
         F.sum("c").over(Window.partitionBy("q")).alias("n"),
     )
-    med = (
-        cum.groupBy("q")
-        .agg(
+    med = checkpoint_inspected(
+        cum.groupBy("q").agg(
             F.min(
                 F.when(
                     F.col("cc") >= F.expr("(n + 1) DIV 2"), F.col("price")
@@ -1875,8 +1875,8 @@ def robust_price_quantity_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("double")
             .alias("m")
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "robust_price_quantity_trend.med",
     )
     a = med.select(F.col("q").alias("qa"), F.col("m").alias("ma"))
     b = med.select(F.col("q").alias("qb"), F.col("m").alias("mb"))
@@ -1975,7 +1975,7 @@ def priority_mix_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("pri"),
         F.year("o_orderdate").alias("yr"),
     ).agg(F.count(F.lit(1)).alias("o"))
-    cell = cell.localCheckpoint(eager=True)
+    cell = checkpoint_inspected(cell, "priority_mix_chisq.cell")
     rt = cell.groupBy("pri").agg(F.sum("o").alias("r"))
     ct = cell.groupBy("yr").agg(F.sum("o").alias("c"))
     n = cell.agg(F.sum("o").alias("n"))
@@ -2166,12 +2166,11 @@ FROM t GROUP BY c_nationkey
 def t_closeness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     bal_bin = F.floor(F.col("c_acctbal") / _KANON_BIN).cast("long")
-    cells = (
+    cells = checkpoint_inspected(
         c.groupBy(
             "c_nationkey", bal_bin.alias("bal_bin"), F.col("c_mktsegment").alias("seg")
-        )
-        .agg(F.count(F.lit(1)).alias("ns"))
-        .localCheckpoint(eager=True)
+        ).agg(F.count(F.lit(1)).alias("ns")),
+        "t_closeness_profile.cells",
     )
     gl = cells.groupBy("seg").agg(F.sum("ns").alias("gs"))
     tot = cells.agg(F.sum("ns").alias("nn"))
@@ -3036,7 +3035,7 @@ def simpson_paradox_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             "syy": F.col("ry") * F.col("ry"),
         },
     )
-    m = m.localCheckpoint(eager=True)
+    m = checkpoint_inspected(m, "simpson_paradox_check.m")
     nn = F.col("n")
     corr = F.round(
         (F.col("sxy") / nn - (F.col("sx") / nn) * (F.col("sy") / nn))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducer_spark.functions.agg import dec_avg, dec_sum
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import load_table
 
@@ -1652,7 +1653,7 @@ def abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"rev": F.col("r")},
         count_alias=None,
     )
-    pr = pr.localCheckpoint(eager=True)
+    pr = checkpoint_inspected(pr, "abc_xyz_matrix.pr")
     rev_dec = F.col("rev").cast("decimal(28,6)")
     # Pareto cumsum over the part dimension: two-phase range-partitioned
     # prefix sum (decimal-exact), not a global-ORDER BY window — same

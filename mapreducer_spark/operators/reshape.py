@@ -14,6 +14,7 @@ from mapreducer_spark.functions.layout import (
     oracle_morton_code_nd,
 )
 from mapreducer_spark.functions.text import ORACLE_TOKEN_LIST_SNIPPET
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import load_table
 
@@ -1003,7 +1004,7 @@ def bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("m")
     )
-    rep = rep.localCheckpoint(eager=True)
+    rep = checkpoint_inspected(rep, "bootstrap_revenue_ci.rep")
     ranked = rep.select(
         "m",
         F.row_number()

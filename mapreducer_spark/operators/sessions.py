@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducer_spark.functions.agg import dec_sum
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import load_table
 
@@ -419,7 +420,7 @@ def daily_revenue_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame
     # The series is dimension-sized; pin it so the lag join and the
     # denominator fold reuse one computation instead of re-collapsing
     # the fact table per branch.
-    z = z.localCheckpoint(eager=True)
+    z = checkpoint_inspected(z, "daily_revenue_autocorrelation.z")
     den = z.agg(
         F.sum(
             F.round(F.col("z") * F.col("z"), 10).cast("decimal(28,10)")
@@ -833,7 +834,7 @@ def revenue_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = o.groupBy(
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("ym")
     ).agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev"))
-    monthly = monthly.localCheckpoint(eager=True)
+    monthly = checkpoint_inspected(monthly, "revenue_forecast_backtest.monthly")
     a = monthly.select("ym", F.col("rev").cast("double").alias("actual"))
     n1 = monthly.select(
         (F.col("ym") + 1).alias("ym"),

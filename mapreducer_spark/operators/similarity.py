@@ -34,6 +34,7 @@ from mapreducer_spark.functions.agg import (
 )
 from mapreducer_spark.functions.frozen import _file_md5, frozen_spec
 from mapreducer_spark.functions.vectors import cosine, oracle_sign_bucket, sign_bucket
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import fan_out, load_table
 
@@ -1081,7 +1082,7 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fan_out: the argmax evaluates n_clusters HOF cosines per row —
     # CPU-bound work that a single-split fixture scan would serialize
-    # onto one core.  localCheckpoint: BOTH sides of the self-join read
+    # onto one core.  The pin: BOTH sides of the self-join read
     # `assigned`; without pinning, each side re-runs the whole
     # assignment.  Together with the literal _index_frame and the
     # repartition below: 6.8 -> 1.4 s at sf0.1.
@@ -1090,7 +1091,7 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreducer_spark.functions.vectors import norm
 
-    assigned = (
+    assigned = checkpoint_inspected(
         corpus.withColumn("__vn", norm(F.col("v")))
         .crossJoin(F.broadcast(index))
         .select(
@@ -1099,8 +1100,8 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_max(_cluster_sims(F.col("v"), F.col("__vn")))
             .getField("cid")
             .alias("cluster"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "semdedup_clusters.assigned",
     )
 
     a = assigned.alias("a")
@@ -2425,8 +2426,6 @@ def ann_ivf_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referenced by both recall columns below, and without the pin each
     # reference re-expanded the whole dequant + probe + window subtree
     # (the executed plan scanned embeddings 32 times — 5.6 s at sf0.1).
-    from mapreducer_spark.plans.inspect import checkpoint_inspected
-
     sq_topk = checkpoint_inspected(sq_topk, "ivf_sq8.sq_topk")
     exact = ann_exact_topk_frozen(spark, sf_dir).select("q_id", "vec_id")
     ivf = _ivf_topk(em, cents, sf_dir=sf_dir).select("q_id", "vec_id")
@@ -2556,7 +2555,7 @@ CROSS JOIN n{_PCA_ITERS} n CROSS JOIN tr t
     "like part_copurchase_pagerank's bounded rounds — convergence "
     "diagnostics belong to the consumer.  Scale shape: the ONLY "
     "corpus-sized stage is the Gram pass (d*d fixed-point longs per "
-    "Arrow batch, localCheckpointed once); all 8 steps are broadcast "
+    "Arrow batch, pinned once); all 8 steps are broadcast "
     "joins over 64-row frames.  Determinism: Gram cells are exact "
     "2^40 fixed-point; mat-vec products are exact DECIMAL(18,6) x "
     "DECIMAL(18,9) sums (never rounded DOUBLE products — the "
@@ -2903,14 +2902,14 @@ WHERE p.xa < p.xb
 def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _cross_source_candidates(spark, sf_dir)
     w = Window.partitionBy("xa").orderBy(F.col("cos_sim").desc(), F.col("xb"))
-    # best is consumed twice by the mutual handshake; the eager
-    # localCheckpoint pins ONE candidate+rank evaluation (a self-join
-    # of a lazy frame re-runs the whole candidate stage per side).
-    best = (
+    # best is consumed twice by the mutual handshake; the eager pin
+    # keeps ONE candidate+rank evaluation (a self-join of a lazy frame
+    # re-runs the whole candidate stage per side).
+    best = checkpoint_inspected(
         cand.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .drop("rn")
-        .localCheckpoint(eager=True)
+        .drop("rn"),
+        "mutual_nn_pairs.best",
     )
     p = best.alias("p")
     q = best.alias("q")
@@ -3011,7 +3010,9 @@ WHERE p.xa < p.xb AND p.margin >= {_MARGIN_MIN}
     tags=("llm", "similarity", "vector", "mining"),
 )
 def margin_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cand = _cross_source_candidates(spark, sf_dir).localCheckpoint(eager=True)
+    cand = checkpoint_inspected(
+        _cross_source_candidates(spark, sf_dir), "margin_nn_pairs.cand"
+    )
     w = Window.partitionBy("xa").orderBy(F.col("cos_sim").desc(), F.col("xb"))
     ak = (
         cand.withColumn("rn", F.row_number().over(w))
@@ -3046,11 +3047,11 @@ def margin_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w_m = Window.partitionBy("xa").orderBy(F.col("margin").desc(), F.col("xb"))
-    best = (
+    best = checkpoint_inspected(
         scored.withColumn("rn", F.row_number().over(w_m))
         .where(F.col("rn") == 1)
-        .drop("rn")
-        .localCheckpoint(eager=True)
+        .drop("rn"),
+        "margin_nn_pairs.best",
     )
     p = best.alias("p")
     q = best.alias("q")
@@ -3461,8 +3462,8 @@ ORDER BY cluster
     "— never collect_list order.  Scale shape: per round ONE "
     "broadcast of k tiny centroid rows x one scan (assignment is "
     "map-side), one (cluster x dim) aggregation with map-side "
-    "partials; centroid frames localCheckpoint so the plan stays "
-    "flat in rounds (the PageRank lesson).",
+    "partials; the final centroids are pinned once, so training "
+    "runs once for every consumer.",
     tags=("llm", "similarity", "vector", "iterative"),
 )
 def embedding_kmeans_spherical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3602,12 +3603,13 @@ def density_prune_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _spherical_lloyd(em: DataFrame, k: int, rounds: int):
     """The in-engine spherical k-means training loop shared by the
     hash-checked embedding_kmeans_spherical query and the frozen-index
-    RETRAIN path (retrain_frozen_index, VERDICT r8 #6): ``rounds``
-    fixed Lloyd iterations over (vec_id, v), centroids seeded from the
-    first k vectors.  Returns (cents, final_assign) where cents is
-    (cent_id, cv array<double>) and final_assign carries the last
-    round's (vec_id, cent_id, sim) — the vector column is dropped from
-    the final round (no consumer needs it; see the carry_v note).  Per round: ONE broadcast of the
+    RETRAIN path (retrain_frozen_index, so a retrained index comes from
+    the same checked loop): ``rounds`` fixed Lloyd iterations over
+    (vec_id, v), centroids seeded from the first k vectors.  Returns
+    (cents, final_assign) where cents is (cent_id, cv array<double>)
+    and final_assign carries the last round's (vec_id, cent_id, sim) —
+    the vector column is dropped from the final round (no consumer
+    needs it; see the carry_v note).  Per round: ONE broadcast of the
     k tiny centroid rows x one scan (map-side assignment), one
     (cluster x dim) aggregation with map-side partials.
 
@@ -3698,7 +3700,7 @@ def _spherical_lloyd(em: DataFrame, k: int, rounds: int):
                 # executes once no matter how many consumers
                 # checkpoint/collect the outputs, while the
                 # intermediate rounds stay lazy in the same action.
-                cents = cents.localCheckpoint(eager=True)
+                cents = checkpoint_inspected(cents, "spherical_lloyd.cents")
     return cents, assign
 
 
@@ -3919,11 +3921,11 @@ def ann_index_ari_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, _N_CENTROIDS, _KM_ROUNDS
     )
     fb = fresh_assign.select("vec_id", F.col("cent_id").alias("cb"))
-    cont = (
+    cont = checkpoint_inspected(
         fa.join(fb, "vec_id")
         .groupBy("ca", "cb")
-        .agg(F.count(F.lit(1)).alias("nij"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("nij")),
+        "ann_index_ari_staleness.cont",
     )
     # C(x,2) = x(x-1) >> 1 — exact integer halving (x(x-1) is even);
     # stays in LONG to ~4e9 rows per cell, mirrored by // 2 in DuckDB.
@@ -4586,8 +4588,6 @@ JOIN xmean xm ON xm.q_id = x.q_id
     tags=("llm", "similarity", "retrieval", "quality"),
 )
 def ann_mmr_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreducer_spark.plans.inspect import checkpoint_inspected
-
     ivf_sel = checkpoint_inspected(
         ann_mmr_topk(spark, sf_dir).select("q_id", "vec_id"),
         "ann_mmr_agreement.ivf_sel",
@@ -4918,8 +4918,6 @@ JOIN complete d ON d.q_id = s.q_id
 )
 def retrieval_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducer_spark.operators.textstats import doc_token_chunks
-
-    from mapreducer_spark.plans.inspect import checkpoint_inspected
 
     # Pin the queries x k selection ONCE (optimization r13, guide
     # §2.4): it is referenced three times below (broadcast into the

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducer_spark.functions.hashes import md5_int64, oracle_md5_int64
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import fan_out, load_table
 
@@ -330,8 +331,6 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it feeds the sizing params, the bitmap build AND the exact-hit
     # join, and without the pin each reference re-expanded the
     # tokenize + n-gram explode of the benchmark slice.  Vocab-sized.
-    from mapreducer_spark.plans.inspect import checkpoint_inspected
-
     bench = checkpoint_inspected(
         grams.where(F.col("source") == _BENCH_SOURCE)
         .select("gram")
@@ -585,8 +584,6 @@ def kmv_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # du is vocab-sized, sk is <= K * |sources| * |grains| rows.
     # kmv_minima(du) == kmv_minima(items): h is a deterministic
     # function of item and the sketch takes DISTINCT hashes either way.
-    from mapreducer_spark.plans.inspect import checkpoint_inspected
-
     du = checkpoint_inspected(items.distinct(), "kmv.distinct_items")
     sk = checkpoint_inspected(
         kmv_minima(du, ["grain", "source"], "item"), "kmv.sketch"

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import load_table
 from mapreducer_spark.sql_api import sql as run_sql
@@ -292,14 +293,13 @@ WHERE spend > chosen.t
 )
 def adaptive_threshold_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    cust_spend = (
-        o.groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
+    cust_spend = checkpoint_inspected(
+        o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
             F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
             .cast("double")
             .alias("spend")
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "adaptive_threshold_script.cust_spend",
     )
     cust_spend.createOrReplaceTempView("cust_spend_tmp")
     return spark.sql(_THRESH_SCRIPT)

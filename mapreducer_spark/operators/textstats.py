@@ -19,6 +19,7 @@ from mapreducer_spark.functions.text import (
     ORACLE_TOKENS_SNIPPET,
     SPARK_TOKEN_SPLIT_RE,
 )
+from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 from mapreducer_spark.sources import fan_out, load_table
 
@@ -2999,7 +3000,7 @@ def corpus_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p")
     )
     big = pairs.groupBy("p.a", "p.b").agg(F.count(F.lit(1)).alias("cab"))
-    big = big.localCheckpoint(eager=True)
+    big = checkpoint_inspected(big, "corpus_entropy_rate.big")
     ctx = big.groupBy("a").agg(F.sum("cab").alias("ca"))
     nb = big.agg(F.sum("cab").alias("n"))
     hu_term = F.round(
@@ -3132,7 +3133,7 @@ def perplexity_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppl = doc_bigram_perplexity(spark, sf_dir).select(
         "doc_id", "n_bigrams", "avg_log2_s"
     )
-    ppl = ppl.localCheckpoint(eager=True)
+    ppl = checkpoint_inspected(ppl, "perplexity_length_bias.ppl")
     n = F.count(F.lit(1))
     st = ppl.agg(
         (

@@ -2,12 +2,17 @@
 
 tests/test_plans.py uses these to assert that filters reach the parquet
 scan (PushedFilters), projections prune columns (ReadSchema), and dim
-joins broadcast instead of shuffling.
+joins broadcast instead of shuffling.  The structural budgets
+(:func:`check_plan_budgets`) run on every gated collect and, through
+:func:`checkpoint_inspected`, on every pinned subtree.
 """
 
 from __future__ import annotations
 
 import re
+from collections import deque
+from collections.abc import Iterator
+from itertools import islice
 
 from pyspark.sql import DataFrame
 
@@ -35,31 +40,44 @@ def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def filescan_counts(df: DataFrame) -> dict:
-    """Static count of FileScan nodes per source table in the plan.
+def _walk(root, *, through_reuse: bool = False) -> Iterator:
+    """Every node of the physical plan under ``root``, nearest first
+    (breadth-first, root first).
 
-    Parses the formatted plan's scan-node detail sections: every
-    ``Scan parquet``/``Scan text`` node carries a ``Location:
-    ...[path]`` line; the path's basename (minus format suffix) is the
-    table.  Counting the STATIC plan (no execution needed) is exactly
-    right for the rescan defect class — the r8
-    lineitem_correlation_matrix regression (a 6-way unionAll re-reading
-    both lineitem subtrees per branch = 12 static scan nodes) was
-    visible here before any row moved.  Spark only collapses duplicate
-    subtrees at runtime via ReuseExchange for SHUFFLE results, not for
-    repeated scans feeding different operators, so a static scan count
-    is a faithful proxy for executed I/O passes.
-    """
-    plan = formatted_plan(df)
-    counts: dict = {}
-    for m in re.finditer(r"Location: \w+(?:\([^)]*\))?\s*\[([^\]]*)\]", plan):
-        path = m.group(1).split(",")[0].strip()
-        name = path.rstrip("/").rsplit("/", 1)[-1]
-        for suf in (".parquet", ".orc", ".csv", ".json", ".txt"):
-            if name.endswith(suf):
-                name = name[: -len(suf)]
-        counts[name] = counts.get(name, 0) + 1
-    return counts
+    AQE wrappers hide their real subtree behind accessors, so an
+    AdaptiveSparkPlanExec also yields its executedPlan and a query stage
+    its plan.  A ReusedExchangeExec is a leaf; ``through_reuse`` follows
+    it to the original exchange it stands for (walking a whole plan that
+    way would visit the reused subtree twice)."""
+    todo = deque([root])
+    while todo:
+        node = todo.popleft()
+        yield node
+        ch = node.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif through_reuse and cls == "ReusedExchangeExec":
+            todo.append(node.child())
+
+
+def _executed_nodes(df: DataFrame) -> Iterator:
+    return _walk(df._jdf.queryExecution().executedPlan())  # type: ignore[attr-defined]
+
+
+def _row_metric(node, names: tuple[str, ...] = ("numOutputRows",)):
+    """The node's value for the last of ``names`` among its SQL
+    metrics, or None when it records none of them."""
+    found = None
+    it = node.metrics().iterator()
+    while it.hasNext():
+        kv = it.next()
+        if kv._1() in names:
+            found = int(kv._2().value())
+    return found
 
 
 def executed_filescan_counts(df: DataFrame) -> dict:
@@ -68,12 +86,10 @@ def executed_filescan_counts(df: DataFrame) -> dict:
     read.  The df must already have been executed (e.g. collected);
     this only inspects, never runs.
 
-    Contrast :func:`filescan_counts`: the static plan double-counts
-    branches whose shuffle subtrees Spark collapses at runtime via
-    ReusedExchange (kmv_set_operations plans 36 static scan nodes but
-    executes 3), so the executed count is the honest rescan metric —
-    it is how the r8 judge confirmed lineitem_correlation_matrix's
-    6-way unionAll really paid 12 scans.
+    The static plan would double-count branches whose shuffle subtrees
+    Spark collapses at runtime via ReusedExchange (kmv_set_operations
+    plans 36 static scan nodes but executes 3), so the executed count
+    is the honest rescan metric.
     """
     s = df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
     # AQE's toString appends the pre-execution plan under an
@@ -132,100 +148,27 @@ def unpartitioned_window_input_rows(df: DataFrame) -> list[int]:
     (never observed in practice) is reported as -1 so callers fail loud
     rather than skip it.
     """
-    plan = df._jdf.queryExecution().executedPlan()  # type: ignore[attr-defined]
-
-    def _children(node):
-        out = []
-        ch = node.children()
-        for i in range(ch.size()):
-            out.append(ch.apply(i))
-        cls = node.getClass().getSimpleName()
-        # AQE wrappers hide their real subtree behind accessors.
-        if cls == "AdaptiveSparkPlanExec":
-            out.append(node.executedPlan())
-        elif cls.endswith("QueryStageExec"):
-            out.append(node.plan())
-        return out
 
     def _nearest_rows(node) -> int:
-        # BFS: the first row-counting metric below the window is its
-        # input cardinality (exchange recordsRead / leaf numOutputRows).
-        queue = _children(node)
-        while queue:
-            nxt = []
-            for n in queue:
-                it = n.metrics().iterator()
-                found = None
-                while it.hasNext():
-                    kv = it.next()
-                    k = kv._1()
-                    if k in ("numOutputRows", "recordsRead"):
-                        found = kv._2().value()
-                if found is not None:
-                    return int(found)
-                nxt.extend(_children(n))
-            queue = nxt
+        # Nearest first: the first row-counting metric below the window
+        # is its input cardinality (exchange recordsRead / leaf
+        # numOutputRows).
+        for n in islice(_walk(node), 1, None):
+            found = _row_metric(n, ("numOutputRows", "recordsRead"))
+            if found is not None:
+                return found
         return -1
 
-    out: list[int] = []
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        # Exactly the single-partition hazards: WindowExec and its Pandas
-        # twin.  WindowGroupLimitExec (rank-pushdown) also carries a
-        # partitionSpec but its Partial mode runs per input partition —
-        # an empty spec there is an optimization, not a collapse.
-        if node.getClass().getSimpleName() in (
-            "WindowExec",
-            "WindowInPandasExec",
-        ):
-            if node.partitionSpec().size() == 0:
-                out.append(_nearest_rows(node))
-        stack.extend(_children(node))
-    return out
-
-
-def broadcast_exchange_rows(df: DataFrame) -> list[int]:
-    """Row count of every BroadcastExchange in the EXECUTED plan.  The
-    df must already have been executed; this only inspects.
-
-    At 100 TB a broadcast frame must be DOMAIN-bounded (dimension
-    tables, one-row totals, frozen indexes, sketch tables): an explicit
-    ``F.broadcast()`` hint on a frame that grows with the data
-    eventually ships the whole dimension to every executor and OOMs
-    the driver building it.  Auto-broadcasts (stats-driven) degrade
-    gracefully — Spark stops choosing them when the side grows — so a
-    grower here is only a defect when the code HINTS it; the survey
-    (tools/broadcast_survey.py) cross-references the two.
-    """
-    plan = df._jdf.queryExecution().executedPlan()  # type: ignore[attr-defined]
-
-    def _children(node):
-        out = []
-        ch = node.children()
-        for i in range(ch.size()):
-            out.append(ch.apply(i))
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            out.append(node.executedPlan())
-        elif cls.endswith("QueryStageExec"):
-            out.append(node.plan())
-        return out
-
-    out: list[int] = []
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() == "BroadcastExchangeExec":
-            rows = -1
-            it = node.metrics().iterator()
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() == "numOutputRows":
-                    rows = int(kv._2().value())
-            out.append(rows)
-        stack.extend(_children(node))
-    return out
+    # Exactly the single-partition hazards: WindowExec and its Pandas
+    # twin.  WindowGroupLimitExec (rank-pushdown) also carries a
+    # partitionSpec but its Partial mode runs per input partition — an
+    # empty spec there is an optimization, not a collapse.
+    return [
+        _nearest_rows(node)
+        for node in _executed_nodes(df)
+        if node.getClass().getSimpleName() in ("WindowExec", "WindowInPandasExec")
+        and node.partitionSpec().size() == 0
+    ]
 
 
 # Ceiling for rows in a HINT-FORCED BroadcastExchange, asserted on every
@@ -260,50 +203,21 @@ def hinted_broadcast_rows(df: DataFrame) -> list[int]:
     link (never observed in practice) is reported as hinted so a gap in
     attribution fails loud instead of silently exempting a hint.
     """
-    plan = df._jdf.queryExecution().executedPlan()  # type: ignore[attr-defined]
 
-    def _children(node):
-        out = []
-        ch = node.children()
-        for i in range(ch.size()):
-            out.append(ch.apply(i))
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            out.append(node.executedPlan())
-        elif cls.endswith("QueryStageExec"):
-            out.append(node.plan())
-        return out
-
-    def _exchange_rows(node) -> int:
-        # BFS the build-side subtree for its broadcast exchange (possibly
-        # behind a QueryStage or ReusedExchange wrapper) and read its
-        # numOutputRows; -1 if no metric found (fail loud upstream).
-        queue = [node]
-        while queue:
-            nxt = []
-            for n in queue:
-                cls = n.getClass().getSimpleName()
-                if cls == "ReusedExchangeExec":
-                    # A leaf wrapper with EMPTY metrics; the original
-                    # exchange (same broadcast payload) hangs off its
-                    # stored child and carries the real numOutputRows.
-                    nxt.append(n.child())
-                    continue
-                if cls == "BroadcastExchangeExec":
-                    it = n.metrics().iterator()
-                    while it.hasNext():
-                        kv = it.next()
-                        if kv._1() == "numOutputRows":
-                            return int(kv._2().value())
-                    return -1
-                nxt.extend(_children(n))
-            queue = nxt
+    def _exchange_rows(build) -> int:
+        # Nearest first down the build side to its broadcast exchange,
+        # possibly behind a QueryStage or a ReusedExchange (a leaf
+        # wrapper with EMPTY metrics whose stored child, the original
+        # exchange, carries the real numOutputRows); -1 if no metric
+        # is found (fail loud upstream).
+        for n in _walk(build, through_reuse=True):
+            if n.getClass().getSimpleName() == "BroadcastExchangeExec":
+                found = _row_metric(n)
+                return -1 if found is None else found
         return -1
 
     out: list[int] = []
-    stack = [plan]
-    while stack:
-        node = stack.pop()
+    for node in _executed_nodes(df):
         cls = node.getClass().getSimpleName()
         if cls in (
             "BroadcastHashJoinExec",
@@ -331,10 +245,9 @@ def hinted_broadcast_rows(df: DataFrame) -> list[int]:
                 # keep hinted=True so it fails loud like a missing link
                 # instead of silently exempting the exchange.
             if hinted:
-                kids = _children(node)
-                build = kids[1] if build_right else kids[0]
-                out.append(_exchange_rows(build))
-        stack.extend(_children(node))
+                out.append(
+                    _exchange_rows(node.right() if build_right else node.left())
+                )
     return out
 
 
@@ -351,9 +264,9 @@ def check_plan_budgets(df: DataFrame, label: str) -> None:
             raise AssertionError(
                 f"{label}: executed plan reads table {table!r} "
                 f"{n_scans} times (budget {MAX_EXECUTED_SCANS_PER_TABLE}) "
-                "— a branch is re-executing its input subtree; "
-                "localCheckpoint the shared frame or emit branches via "
-                "F.stack"
+                "— a branch is re-executing its input subtree; pin the "
+                "shared frame with checkpoint_inspected or emit branches "
+                "via F.stack"
             )
     for n_rows in unpartitioned_window_input_rows(df):
         if not 0 <= n_rows <= UNPARTITIONED_WINDOW_MAX_ROWS:
@@ -374,18 +287,23 @@ def check_plan_budgets(df: DataFrame, label: str) -> None:
 
 
 def checkpoint_inspected(df: DataFrame, label: str) -> DataFrame:
-    """localCheckpoint(eager=True) that does NOT blind the structural
-    budgets: a checkpoint severs lineage, so the gate's per-collect
-    check (run_spark_gated) only ever sees the plan segment AFTER the
-    last checkpoint — a hinted broadcast, rescan fan-out, or global
-    window inside the checkpointed subtree would escape.  This wrapper
-    materializes the frame, then runs :func:`check_plan_budgets` on
-    the just-executed subtree plan before handing back the severed
-    frame, so iterative operators (MMR's greedy rounds,
-    pointer-jumping, ...) and every memoized frame
-    (functions/memo.py) keep the whole pipeline under budget.  The
-    inspection is a JVM plan-tree walk over existing metrics — no
-    extra job."""
+    """The package's only pin: localCheckpoint(eager=True) that does NOT
+    blind the structural budgets.  No other module calls localCheckpoint
+    (tests/test_plans.py enforces it), so every pinned subtree passes
+    the same check.
+
+    A checkpoint severs lineage, so the gate's per-collect check
+    (run_spark_gated) only ever sees the plan segment AFTER the last
+    checkpoint — a hinted broadcast, rescan fan-out, or global window
+    inside the checkpointed subtree would escape.  This wrapper
+    materializes the frame, then runs :func:`check_plan_budgets` on the
+    just-executed subtree plan before handing back the severed frame,
+    so iterative operators (MMR's greedy rounds, pointer-jumping,
+    PageRank's shuffle regime, ...), reuse pins and every memoized frame
+    (functions/memo.py) keep the whole pipeline under budget.  ``label``
+    names the pin as ``<function>.<frame>`` in any budget error.  The
+    inspection is a JVM plan-tree walk over existing metrics — no extra
+    job."""
     out = df.localCheckpoint(eager=True)
     check_plan_budgets(df, f"{label} (checkpointed subtree)")
     return out

@@ -761,13 +761,15 @@ def run_substring_dedup_stream(
         _spans_from_dup_occurrences,
         shingle_occurrences_df,
     )
+    from mapreducer_spark.plans.inspect import checkpoint_inspected
     from mapreducer_spark.sources.snapshots import snapshot_read, snapshot_write
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        sh_new = shingle_occurrences_df(
-            batch_df.select("doc_id", "text")
-        ).localCheckpoint(eager=True)
+        sh_new = checkpoint_inspected(
+            shingle_occurrences_df(batch_df.select("doc_id", "text")),
+            "substring_dedup_stream.sh_new",
+        )
         try:
             old_idx = (
                 snapshot_read(spark, index_dir)

@@ -616,3 +616,41 @@ def test_checkpoint_inspected_catches_blinded_violation(spark):
         base.join(F.broadcast(dim), base.g == dim.g2), "ok_subtree"
     )
     assert ok.count() > 0
+
+
+def test_local_checkpoint_called_only_by_checkpoint_inspected():
+    """plans/inspect.py is the package's one pin path: a bare
+    localCheckpoint anywhere else would sever lineage without the
+    structural budgets ever seeing the pinned subtree."""
+    import ast
+    from pathlib import Path
+
+    import mapreducer_spark
+
+    root = Path(mapreducer_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path.relative_to(root).as_posix() != "plans/inspect.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+    assert offenders == []
+
+
+def test_query_pin_runs_plan_budgets(spark, sf_dir, monkeypatch):
+    """A query's own pin runs the structural budgets on the subtree it
+    severs: with a zero rescan budget, building adaptive_threshold_script
+    (whose cust_spend frame is pinned before the SQL script reads it)
+    raises, naming the pin."""
+    from mapreducer_spark.operators.sqlfront import adaptive_threshold_script
+    from mapreducer_spark.plans import inspect
+
+    monkeypatch.setattr(inspect, "MAX_EXECUTED_SCANS_PER_TABLE", 0)
+    with pytest.raises(
+        AssertionError,
+        match=r"adaptive_threshold_script\.cust_spend \(checkpointed subtree\)",
+    ):
+        adaptive_threshold_script(spark, sf_dir)

@@ -1,12 +1,12 @@
 """Registry-wide survey of HINT-FORCED BroadcastExchange sizes.
 
-Successor to tools/broadcast_survey.py --hints-only: instead of
-re-planning with autoBroadcastJoinThreshold=-1 (which perturbs every
-join in the plan), attribute each executed broadcast join to its
-logical JoinHint via plans/inspect.hinted_broadcast_rows — the same
-primitive the oracle gate asserts BROADCAST_HINTED_MAX_ROWS with —
-so the survey measures the exact frames the gate will police, under
-the exact plans production runs.
+Instead of re-planning with autoBroadcastJoinThreshold=-1 (which
+perturbs every join in the plan), it attributes each executed
+broadcast join to its logical JoinHint via
+plans/inspect.hinted_broadcast_rows — the same primitive the oracle
+gate asserts BROADCAST_HINTED_MAX_ROWS with — so the survey measures
+the exact frames the gate will police, under the exact plans
+production runs.
 
 Usage: python tools/broadcast_hint_survey.py <sf_dir> <out_jsonl> [start [end]]
 """
