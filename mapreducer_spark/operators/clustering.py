@@ -38,12 +38,13 @@ from mapreducer_spark.plans.inspect import checkpoint_inspected
 from mapreducer_spark.registry import register
 
 _MAX_ROUNDS = 15
-# Label-vector broadcast cap — the PageRank recipe (graph.py): ~16 B/row
-# => ~100 MB in-memory at 5M vertices.  Below it the per-round join
-# streams the edge list map-side against a broadcast of the label
-# vector (no edge shuffle per round); above it the join falls back to
-# the keyed shuffle on the pre-partitioned edge list.  Both paths are
-# asserted equal in tests/test_graph.py.
+# Label-vector size cap — the PageRank recipe (graph.py): ~16 B/row
+# => ~100 MB in-memory at 5M vertices.  It picks the layout of the
+# pinned edge list: below it the label vector is small enough for AQE
+# to broadcast, so the edge list is only compacted; above it the edge
+# list is keyed by the probe column.  Neither path hints a broadcast
+# (the label vector grows with |V|).  Both paths are asserted equal in
+# tests/test_graph.py.
 _CC_BROADCAST_MAX_V = 5_000_000
 
 
@@ -97,13 +98,12 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
             .count()
         )
         use_broadcast = n_v <= _CC_BROADCAST_MAX_V
-    # Broadcast path: the per-round join is map-side, so the edge list
-    # needs no keyed layout — coalesce (NO shuffle) just compacts the
-    # four narrow union branches into few tasks before the one-time
-    # materialization (re-deriving the union per round measured SLOWER
-    # than pinning it once).  Fallback path: keyed repartition by b so
-    # every round's shuffle join co-locates on the probe key once
-    # instead of re-shuffling per round.
+    # Broadcast-sized label vector: the edge list needs no keyed layout —
+    # coalesce (NO shuffle) just compacts the four narrow union branches
+    # into few tasks before the one-time materialization (re-deriving
+    # the union per round measured SLOWER than pinning it once).
+    # Fallback path: keyed repartition by b, meant to let every round's
+    # shuffle join co-locate on the probe key.
     sym = sym.unionByName(self_loops)
     sym = checkpoint_inspected(
         sym.coalesce(n_parts) if use_broadcast else sym.repartition(n_parts, "b"),
@@ -133,10 +133,12 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
         # (path halving) in ONE pass over the edge list — per edge
         # (a,b), take min(comp(b), comp(comp(b))) via two joins against
         # the SAME materialized label vector, then one groupBy(a).
-        # Under the broadcast cap both joins are map-side hash lookups,
-        # so a round is: two tiny broadcast builds + one scan of the
-        # pinned edge list + one |V|-row agg shuffle, with the
-        # convergence sum observed on the checkpoint job.  (A deeper
+        # Neither join is hinted: the label vector grows with |V|.  The
+        # pin hides its size from the static planner, so AQE shuffles
+        # both sides, measures the label side, and broadcasts it while
+        # it fits the bytes threshold — the edge shuffle per round is
+        # the price of a vector that may outgrow executor memory.  The
+        # convergence sum is observed on the checkpoint job.  (A deeper
         # label-table pre-compression variant measured SLOWER: nested
         # un-materialized jump plans multiply broadcast-build jobs.)
         # The fixpoint is unchanged: labels are ids, only ever decrease
@@ -144,15 +146,13 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
         # neighbor-min/jump steps stabilizes exactly at comp =
         # component min, so the shrinking label sum stays a faithful
         # fixpoint detector.
-        lbl = F.broadcast(labels) if use_broadcast else labels
         jump = labels.select(F.col("v").alias("jv"), F.col("comp").alias("jcomp"))
-        jmp = F.broadcast(jump) if use_broadcast else jump
         obs = Observation(f"cc_r{_round + 1}")
         # Materialize to keep the loop's lineage bounded; the observed
         # label sum is the convergence check and costs no extra job.
         new_labels = checkpoint_inspected(
-            sym.join(lbl, sym.b == labels.v)
-            .join(jmp, F.col("comp") == F.col("jv"), "left")
+            sym.join(labels, sym.b == labels.v)
+            .join(jump, F.col("comp") == F.col("jv"), "left")
             .groupBy(F.col("a").alias("v"))
             .agg(
                 F.min(

@@ -302,8 +302,9 @@ def checkpoint_inspected(df: DataFrame, label: str) -> DataFrame:
     PageRank's shuffle regime, ...), reuse pins and every memoized frame
     (functions/memo.py) keep the whole pipeline under budget.  ``label``
     names the pin as ``<function>.<frame>`` in any budget error.  The
-    inspection is a JVM plan-tree walk over existing metrics — no extra
-    job."""
+    inspection is a JVM plan-tree walk over existing metrics and runs
+    no job of its own; the pin itself is eager, so it always costs the
+    one job that materializes the frame."""
     out = df.localCheckpoint(eager=True)
     check_plan_budgets(df, f"{label} (checkpointed subtree)")
     return out

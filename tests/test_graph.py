@@ -60,6 +60,34 @@ def test_cc_shuffle_fallback_matches_broadcast(spark, sf_dir, monkeypatch):
     assert _labels() == broadcast_out
 
 
+def test_connected_components_label_vector_over_hinted_budget(spark):
+    """A broadcast-regime graph whose label vector outgrows
+    BROADCAST_HINTED_MAX_ROWS: every round pin runs the hinted-broadcast
+    budget on its subtree, so the label vector must reach the per-round
+    joins unhinted.  4000 vertices in 400 ten-vertex stars (centre =
+    the multiple of ten), two rounds to converge."""
+    from pyspark.sql import functions as F
+
+    from mapreducer_spark.operators import clustering
+    from mapreducer_spark.plans.inspect import BROADCAST_HINTED_MAX_ROWS
+
+    n = 4000
+    assert BROADCAST_HINTED_MAX_ROWS < n <= clustering._CC_BROADCAST_MAX_V
+    edges = (
+        spark.range(n)
+        .where(F.col("id") % 10 != 0)
+        .select(
+            F.col("id").alias("id_a"),
+            (F.col("id") - F.col("id") % 10).alias("id_b"),
+        )
+    )
+    got = {
+        r.v: r.comp
+        for r in clustering.connected_components(edges, "id_a", "id_b").collect()
+    }
+    assert got == {v: v - v % 10 for v in range(n)}
+
+
 def test_connected_components_matches_union_find(spark):
     """Third-implementation parity on RANDOM graphs: the iterative
     Spark label propagation vs a pure-Python union-find with min-label
