@@ -507,7 +507,7 @@ def cmd_verify(args: argparse.Namespace) -> int:
     through the package gate core (mapreducer_spark/oracle.py) — the
     EXACT normalization the test-suite gate enforces (type-tagged
     canonical cells, -0.0/NaN/engine-repr safe), plus its executed-plan
-    scan and window budgets.  ``--all`` sweeps every oracle-backed
+    budgets.  ``--all`` sweeps every oracle-backed
     query (slow; prints one line each)."""
     from mapreducer_spark.oracle import assert_matches_oracle
     from mapreducer_spark.registry import all_queries

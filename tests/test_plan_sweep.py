@@ -53,30 +53,13 @@ def test_no_complex_typed_result_columns(spark, sf_dir, name):
 
 
 def test_rows_only_queries_respect_scan_budget(spark, sf_dir):
-    """The oracle gate asserts the executed-scan budget for every
-    oracle-backed query as a side effect of collecting it (r9,
-    tests/oracle.py); the handful of rows-only queries (HLL sketches,
-    the xxhash64 LSH path) never pass through it, so execute them here
-    and hold them to the same ceiling."""
-    from mapreducer_spark.plans.inspect import (
-        MAX_EXECUTED_SCANS_PER_TABLE,
-        UNPARTITIONED_WINDOW_MAX_ROWS,
-        executed_filescan_counts,
-        unpartitioned_window_input_rows,
-    )
+    """The oracle gate asserts the executed-plan budgets for every
+    oracle-backed query as it collects it; the handful of rows-only
+    queries (HLL sketches, the xxhash64 LSH path) have no oracle, so
+    run them through the same gated collect."""
+    from mapreducer_spark.oracle import run_spark_gated
 
     rows_only = [n for n, q in QUERIES.items() if q.oracle is None]
     assert rows_only, "expected at least the HLL/xxhash64 rows-only set"
     for name in rows_only:
-        df = QUERIES[name].fn(spark, sf_dir)
-        df.collect()
-        for table, n_scans in executed_filescan_counts(df).items():
-            assert n_scans <= MAX_EXECUTED_SCANS_PER_TABLE, (
-                f"{name}: executed plan reads {table!r} {n_scans} times"
-            )
-        # Same single-partition window budget the oracle gate asserts
-        # (tests/oracle.py) — rows-only queries get it here.
-        for n_rows in unpartitioned_window_input_rows(df):
-            assert 0 <= n_rows <= UNPARTITIONED_WINDOW_MAX_ROWS, (
-                f"{name}: unpartitioned Window over {n_rows} rows"
-            )
+        run_spark_gated(spark, QUERIES[name], sf_dir)

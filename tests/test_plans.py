@@ -317,7 +317,7 @@ def test_profile_bucket_bits_match_gate_resolution(spark, oracle_sf_dir):
 
 
 def test_unpartitioned_window_detector(spark):
-    """The single-partition window budget (r10) rests on this detector:
+    """The single-partition window budget rests on this census field:
     a Window node with an empty partition spec is found in the EXECUTED
     plan and sized by the nearest row metric below it; partitioned
     windows and the two-phase helper rewrites report nothing."""
@@ -330,7 +330,7 @@ def test_unpartitioned_window_detector(spark):
     )
     from mapreducer_spark.plans.inspect import (
         UNPARTITIONED_WINDOW_MAX_ROWS,
-        unpartitioned_window_input_rows,
+        plan_census,
     )
 
     base = spark.range(0, 9000).select(
@@ -342,7 +342,7 @@ def test_unpartitioned_window_detector(spark):
         "id", F.row_number().over(Window.orderBy("id")).alias("rn")
     )
     bad.collect()
-    sizes = unpartitioned_window_input_rows(bad)
+    sizes = plan_census(bad).windows
     assert sizes == [9000]
     assert sizes[0] > UNPARTITIONED_WINDOW_MAX_ROWS
 
@@ -354,24 +354,24 @@ def test_unpartitioned_window_detector(spark):
         .alias("rn"),
     )
     ok.collect()
-    assert unpartitioned_window_input_rows(ok) == []
+    assert plan_census(ok).windows == []
 
     # The prescribed fixes: identical answers, no unpartitioned window.
     ranked, total = global_row_number_with_total(base, ["id"])
     ranked.collect()
     assert total == 9000
-    assert unpartitioned_window_input_rows(ranked) == []
+    assert plan_census(ranked).windows == []
 
     summed, grand = global_running_sum_with_total(
         base, ["id"], "g", out_name="cum_g"
     )
     summed.collect()
     assert grand == sum(i % 7 for i in range(9000))
-    assert unpartitioned_window_input_rows(summed) == []
+    assert plan_census(summed).windows == []
 
 
 def test_hinted_broadcast_budget_gate(spark):
-    """The hinted-broadcast budget (r11) rests on this detector + gate
+    """The hinted-broadcast budget rests on this census field + gate
     wiring: an explicit broadcast() hint on a frame that grows with the
     data is found in the EXECUTED plan, attributed to its JoinHint (so
     stats/AQE auto-broadcasts of the SAME frame are exempt), and fails
@@ -383,7 +383,7 @@ def test_hinted_broadcast_budget_gate(spark):
     from mapreducer_spark.oracle import run_spark_gated
     from mapreducer_spark.plans.inspect import (
         BROADCAST_HINTED_MAX_ROWS,
-        hinted_broadcast_rows,
+        plan_census,
     )
     from mapreducer_spark.registry import Query
 
@@ -405,7 +405,7 @@ def test_hinted_broadcast_budget_gate(spark):
 
     bad = bad_fn(spark, "")
     bad.collect()
-    sizes = hinted_broadcast_rows(bad)
+    sizes = plan_census(bad).hinted
     assert sizes == [9000]
     assert sizes[0] > BROADCAST_HINTED_MAX_ROWS
     with pytest.raises(AssertionError, match="hint-forced BroadcastExchange"):
@@ -422,7 +422,7 @@ def test_hinted_broadcast_budget_gate(spark):
         .agg(F.sum("v").alias("sv"))
     )
     auto.collect()
-    assert hinted_broadcast_rows(auto) == []
+    assert plan_census(auto).hinted == []
 
     # A domain-bounded hint (25-row dim): under budget, passes the gate.
     dim = spark.range(0, 25).select(
@@ -438,8 +438,39 @@ def test_hinted_broadcast_budget_gate(spark):
 
     ok = ok_fn(spark, "")
     ok.collect()
-    assert hinted_broadcast_rows(ok) == [25]
+    assert plan_census(ok).hinted == [25]
     run_spark_gated(spark, Query("ok_hinted_dim", ok_fn, oracle=None), "")
+
+
+def test_plan_census_sees_subqueries(spark, sf_dir):
+    """Every AQE subquery is its own adaptive plan: the census walks
+    into scalar and IN subqueries, so their scans count against the
+    rescan budget and a hint inside one meets the broadcast budget."""
+    from mapreducer_spark.plans.inspect import check_plan_budgets, plan_census
+    from mapreducer_spark.sql_api import sql
+
+    nested = sql(
+        spark,
+        sf_dir,
+        "SELECT o_orderkey FROM orders"
+        " WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)"
+        " AND o_orderkey IN (SELECT l_orderkey FROM lineitem"
+        " WHERE l_quantity > (SELECT avg(l_quantity) FROM lineitem))",
+    )
+    nested.collect()
+    assert plan_census(nested).scans == {"orders": 2, "lineitem": 2}
+
+    spark.range(0, 9000).createOrReplaceTempView("base")
+    spark.range(0, 9000).selectExpr(
+        "id AS id2", "id * 2 AS v"
+    ).createOrReplaceTempView("grower")
+    hinted = spark.sql(
+        "SELECT id FROM base WHERE id < (SELECT /*+ BROADCAST(grower) */"
+        " sum(v) FROM base JOIN grower ON base.id = grower.id2)"
+    )
+    hinted.collect()
+    with pytest.raises(AssertionError, match="hint-forced BroadcastExchange"):
+        check_plan_budgets(hinted, "hinted_in_subquery")
 
 
 def test_two_phase_helper_output_stats_keep_broadcast_alive(spark):
@@ -585,7 +616,7 @@ def test_checkpoint_inspected_catches_blinded_violation(spark):
 
     from mapreducer_spark.plans.inspect import (
         checkpoint_inspected,
-        hinted_broadcast_rows,
+        plan_census,
     )
 
     base = spark.range(0, 9000).select(
@@ -604,7 +635,7 @@ def test_checkpoint_inspected_catches_blinded_violation(spark):
         F.sum("v").alias("sv")
     )
     blinded.collect()
-    assert hinted_broadcast_rows(blinded) == []
+    assert plan_census(blinded).hinted == []
 
     # The fix: the wrapper raises at materialization time.
     with pytest.raises(AssertionError, match="hint-forced"):
