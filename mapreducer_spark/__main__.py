@@ -145,105 +145,89 @@ def cmd_curate(args: argparse.Namespace) -> int:
     return 0
 
 
+def _print_report(spark, report_dir: str, key) -> int:
+    """Print a monitor's current report, one JSON object per row
+    (values as strings), sorted by ``key``."""
+    report = spark.read.parquet(report_dir)
+    for row in sorted(report.collect(), key=key):
+        print(json.dumps({k: str(v) for k, v in row.asDict().items()}))
+    return 0
+
+
+def _events_monitor(args: argparse.Namespace, run, key, **kwargs) -> int:
+    """Drain the events fixture through ``run`` (availableNow: whatever
+    is present, then stop) and print the report it refreshed."""
+    from mapreducer_spark.streaming.jobs import read_events_stream
+
+    spark = _get_spark(args)
+    run(
+        read_events_stream(spark, args.sf_dir),
+        args.state_dir,
+        args.report_dir,
+        args.checkpoint,
+        **kwargs,
+    )
+    return _print_report(spark, args.report_dir, key)
+
+
 def cmd_monitor_changepoints(args: argparse.Namespace) -> int:
     """Run the streaming CUSUM change-point monitor over the events
-    fixture (availableNow: drain whatever is present, then stop) and
-    print the current report — the operational twin of the
+    fixture and print the current report — the operational twin of the
     event_value_changepoint query; state survives restarts via the
     batch-keyed partial table, so re-running after new event files land
     extends the monitored history instead of recounting it."""
-    from mapreducer_spark.streaming.jobs import (
-        read_events_stream,
-        run_changepoint_monitor,
-    )
+    from mapreducer_spark.streaming.jobs import run_changepoint_monitor
 
-    spark = _get_spark(args)
-    run_changepoint_monitor(
-        read_events_stream(spark, args.sf_dir),
-        args.state_dir,
-        args.report_dir,
-        args.checkpoint,
+    return _events_monitor(
+        args, run_changepoint_monitor, lambda r: r.event_type
     )
-    report = spark.read.parquet(args.report_dir)
-    for row in sorted(report.collect(), key=lambda r: r.event_type):
-        print(json.dumps({k: str(v) for k, v in row.asDict().items()}))
-    return 0
 
 
 def cmd_monitor_seasonal(args: argparse.Namespace) -> int:
-    """Run the streaming day-of-week seasonal anomaly monitor
-    (availableNow) and print the current report — the operational twin
-    of the events_seasonal_anomaly query; the batch-keyed daily state
-    table makes re-runs extend history instead of recounting."""
-    from mapreducer_spark.streaming.jobs import (
-        read_events_stream,
-        run_seasonal_anomaly_monitor,
-    )
+    """Run the streaming day-of-week seasonal anomaly monitor and print
+    the current report — the operational twin of the
+    events_seasonal_anomaly query; the batch-keyed daily state table
+    makes re-runs extend history instead of recounting."""
+    from mapreducer_spark.streaming.jobs import run_seasonal_anomaly_monitor
 
-    spark = _get_spark(args)
-    run_seasonal_anomaly_monitor(
-        read_events_stream(spark, args.sf_dir),
-        args.state_dir,
-        args.report_dir,
-        args.checkpoint,
+    return _events_monitor(
+        args, run_seasonal_anomaly_monitor, lambda r: (str(r.day), r.dow)
     )
-    report = spark.read.parquet(args.report_dir)
-    for row in sorted(report.collect(), key=lambda r: (str(r.day), r.dow)):
-        print(json.dumps({k: str(v) for k, v in row.asDict().items()}))
-    return 0
 
 
 def cmd_monitor_dp_counts(args: argparse.Namespace) -> int:
-    """Run the streaming DP count monitor (availableNow) and print the
-    current release — the operational twin of the dp_nation_order_counts
-    mechanism over streaming event-type counts: every drain folds new
-    events into the batch-keyed state, draws FRESH hash noise for the
-    new release index through the shared dp_count_release algebra, and
-    reports the sequential-composition budget spent so far."""
-    from mapreducer_spark.streaming.jobs import (
-        read_events_stream,
-        run_dp_count_monitor,
-    )
+    """Run the streaming DP count monitor and print the current release
+    — the operational twin of the dp_nation_order_counts mechanism over
+    streaming event-type counts: every drain folds new events into the
+    batch-keyed state, draws FRESH hash noise for the new release index
+    through the shared dp_count_release algebra, and reports the
+    sequential-composition budget spent so far."""
+    from mapreducer_spark.streaming.jobs import run_dp_count_monitor
 
-    spark = _get_spark(args)
-    run_dp_count_monitor(
-        read_events_stream(spark, args.sf_dir),
-        args.state_dir,
-        args.report_dir,
-        args.checkpoint,
+    return _events_monitor(
+        args,
+        run_dp_count_monitor,
+        lambda r: r.event_type,
         eps_per_release=args.eps_per_release,
     )
-    report = spark.read.parquet(args.report_dir)
-    for row in sorted(report.collect(), key=lambda r: r.event_type):
-        print(json.dumps({k: str(v) for k, v in row.asDict().items()}))
-    return 0
 
 
 def cmd_monitor_dp_histogram(args: argparse.Namespace) -> int:
-    """Run the streaming DP histogram monitor (availableNow) and print
-    the current release — the distribution-valued sibling of
-    monitor-dp-counts: every drain folds new events into the
-    batch-keyed per-bucket state, releases the full fixed-grid clamped
-    value histogram with FRESH hash noise through the shared
-    dp_histogram_release algebra (empty cells noised too), and reports
-    the sequential-composition budget spent so far."""
-    from mapreducer_spark.streaming.jobs import (
-        read_events_stream,
-        run_dp_histogram_monitor,
-    )
+    """Run the streaming DP histogram monitor and print the current
+    release — the distribution-valued sibling of monitor-dp-counts:
+    every drain folds new events into the batch-keyed per-bucket state,
+    releases the full fixed-grid clamped value histogram with FRESH
+    hash noise through the shared dp_histogram_release algebra (empty
+    cells noised too), and reports the sequential-composition budget
+    spent so far."""
+    from mapreducer_spark.streaming.jobs import run_dp_histogram_monitor
 
-    spark = _get_spark(args)
-    run_dp_histogram_monitor(
-        read_events_stream(spark, args.sf_dir),
-        args.state_dir,
-        args.report_dir,
-        args.checkpoint,
+    return _events_monitor(
+        args,
+        run_dp_histogram_monitor,
+        lambda r: r.bucket,
         eps_per_release=args.eps_per_release,
     )
-    report = spark.read.parquet(args.report_dir)
-    for row in sorted(report.collect(), key=lambda r: r.bucket):
-        print(json.dumps({k: str(v) for k, v in row.asDict().items()}))
-    return 0
 
 
 def cmd_monitor_topk_retrieval(args: argparse.Namespace) -> int:
@@ -275,10 +259,9 @@ def cmd_monitor_topk_retrieval(args: argparse.Namespace) -> int:
         args.report_dir,
         args.checkpoint,
     )
-    report = spark.read.parquet(args.report_dir)
-    for row in sorted(report.collect(), key=lambda r: (r.q_id, r.mmr_rank)):
-        print(json.dumps({k: str(v) for k, v in row.asDict().items()}))
-    return 0
+    return _print_report(
+        spark, args.report_dir, lambda r: (r.q_id, r.mmr_rank)
+    )
 
 
 def cmd_snapshot_diff(args: argparse.Namespace) -> int:
@@ -507,9 +490,10 @@ def cmd_verify(args: argparse.Namespace) -> int:
     through the package gate core (mapreducer_spark/oracle.py) — the
     EXACT normalization the test-suite gate enforces (type-tagged
     canonical cells, -0.0/NaN/engine-repr safe), plus its executed-plan
-    budgets.  ``--all`` sweeps every oracle-backed
-    query (slow; prints one line each)."""
-    from mapreducer_spark.oracle import assert_matches_oracle
+    budgets.  A query with no oracle runs through the same gated
+    collect, so its budgets still apply, and reports its row count.
+    ``--all`` sweeps every query (slow; prints one line each)."""
+    from mapreducer_spark.oracle import assert_matches_oracle, run_spark_gated
     from mapreducer_spark.registry import all_queries
 
     qs = all_queries()
@@ -525,23 +509,21 @@ def cmd_verify(args: argparse.Namespace) -> int:
     n_bad = 0
     for name in names:
         q = qs[name]
-        if q.oracle is None:
-            print(json.dumps({"query": name, "status": "rows-only"}))
-            continue
         try:
-            assert_matches_oracle(spark, q, args.sf_dir)
-            print(json.dumps({"query": name, "status": "MATCH"}))
+            if q.oracle is None:
+                _, rows = run_spark_gated(spark, q, args.sf_dir)
+                out = {"query": name, "status": "rows-only", "rows": len(rows)}
+            else:
+                assert_matches_oracle(spark, q, args.sf_dir)
+                out = {"query": name, "status": "MATCH"}
         except AssertionError as e:
             n_bad += 1
-            print(
-                json.dumps(
-                    {
-                        "query": name,
-                        "status": "MISMATCH",
-                        "detail": str(e)[:400],
-                    }
-                )
-            )
+            out = {
+                "query": name,
+                "status": "FAIL" if q.oracle is None else "MISMATCH",
+                "detail": str(e)[:400],
+            }
+        print(json.dumps(out))
     return 1 if n_bad else 0
 
 
@@ -795,7 +777,7 @@ def main(argv: list[str] | None = None) -> int:
         "tables and compare values — the correctness gate as a verb",
     )
     vf.add_argument("names", nargs="*", help="query names (see list-queries)")
-    vf.add_argument("--all", action="store_true", help="verify every oracle-backed query")
+    vf.add_argument("--all", action="store_true", help="verify every registered query")
     vf.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     vf.set_defaults(fn=cmd_verify)
 

@@ -215,6 +215,145 @@ def run_windowed_to_parquet(
     q.awaitTermination()
 
 
+def _drain(stream: DataFrame, step, checkpoint: str):
+    """Run ``step(batch_df, batch_id)`` on every micro-batch of ``stream``
+    present now (availableNow: drain, then stop) and return the finished
+    query.  The checkpoint keeps batch ids stable across restarts; every
+    step's replay handling is keyed on them."""
+    q = (
+        stream.writeStream.foreachBatch(step)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def _monitor_swap_write(df: DataFrame, target: str, batch_id: int) -> None:
+    """Commit ``df`` as ``target`` by write-aside-then-swap — the one
+    rename commit of the streaming jobs' parquet state tables (the
+    snapshot-backed jobs commit through sources/snapshots.py).
+
+    The full write lands in ``<target>.tmp-<batch_id>-<uuid>`` while
+    ``target`` (which ``df`` may still read from) stays intact: cache()
+    is not a durability barrier, so a task retry or recompute mid-write
+    must re-read valid data.  On a real object store this is the
+    table-format commit (an Iceberg/Delta metadata swap); local rename
+    is its twin.
+
+    Not atomic across the two renames — a crash in between leaves
+    ``target`` missing with the previous generation parked at
+    ``<target>.old-<batch_id>``; :func:`_monitor_recover_target`
+    restores exactly that case on the next read.  Without it the next
+    batch would find no state and restart the accumulated history from
+    its own rows.
+    """
+    import shutil
+
+    # Sweep orphan .tmp-* siblings first: a crash during/after a prior
+    # write but before the renames leaves them behind, and nothing else
+    # ever touches them — repeated crash loops would leak state dirs
+    # unboundedly (the snapshot layer's orphan-sweep discipline).
+    parent, base = os.path.split(os.path.abspath(target.rstrip("/")))
+    if os.path.isdir(parent):
+        for d in os.listdir(parent):
+            if d.startswith(base + ".tmp-"):
+                shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+
+    tmp = f"{target}.tmp-{batch_id}-{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").parquet(tmp)
+    old = f"{target}.old-{batch_id}"
+    if os.path.exists(target):
+        os.rename(target, old)
+    os.rename(tmp, target)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _monitor_recover_target(target: str) -> None:
+    """If a crash between _monitor_swap_write's renames left ``target``
+    missing, restore the newest parked ``<target>.old-*`` backup."""
+    if os.path.exists(target):
+        return
+    parent, base = os.path.split(os.path.abspath(target.rstrip("/")))
+    if not os.path.isdir(parent):
+        return
+    prefix = base + ".old-"
+    backups = [d for d in os.listdir(parent) if d.startswith(prefix)]
+    if not backups:
+        return
+
+    def batch_key(name: str) -> int:
+        try:
+            return int(name[len(prefix):])
+        except ValueError:
+            return -1
+
+    newest = max(backups, key=batch_key)
+    os.rename(os.path.join(parent, newest), target)
+
+
+def _monitor_prev_state(spark, state_dir: str):
+    """The accumulated state table, or None only when none has EVER been
+    committed.  Recovers a crash-parked backup first; any other read
+    failure (corrupt parquet, permissions) PROPAGATES: read as "no
+    state", it would replace the whole history with one batch's rows."""
+    _monitor_recover_target(state_dir)
+    if not os.path.exists(state_dir):
+        return None
+    return spark.read.parquet(state_dir)
+
+
+def _fold_monitor(
+    stream: DataFrame,
+    checkpoint: str,
+    state_dir: str,
+    report_dir: str,
+    partial,
+    report,
+) -> None:
+    """The batch-exact monitors' one fold: each micro-batch's
+    ``partial(batch_df)`` — its locally combined counts or sums — is
+    keyed by batch id into the state table (rows
+    ``(batch_id, *partial columns)``), and ``report(state, batch_id)``
+    re-derives the report from the whole state, so it always equals a
+    from-scratch batch run over everything seen so far (the parity
+    tests).
+
+    Replay contract: the folds are non-idempotent sums, so a replayed
+    batch — a crash before the offset commit, or a wiped checkpoint,
+    after which availableNow re-delivers the whole input as batch 0 —
+    REPLACES its own earlier rows instead of counting them twice.  Sums
+    are exact (integer counts or DECIMAL), so the batch/stream split
+    cannot change a digit of the report, and reports are pure functions
+    of the state (hash noise, key tie-breaks, no RNG), so a replay
+    reproduces them byte for byte.  State and report commit through
+    _monitor_swap_write; ``report`` swap-writes any table of its own
+    (the top-k pool) with the same ``batch_id``.
+    """
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        part = partial(batch_df)
+        part = part.select(F.lit(batch_id).alias("batch_id"), *part.columns)
+        prev = _monitor_prev_state(spark, state_dir)
+        state = (
+            part
+            if prev is None
+            else prev.where(F.col("batch_id") != batch_id).unionByName(part)
+        )
+        # Materialize the merged state off the directory being replaced.
+        _monitor_swap_write(state, state_dir, batch_id)
+        _monitor_swap_write(
+            report(spark.read.parquet(state_dir), batch_id),
+            report_dir,
+            batch_id,
+        )
+
+    _drain(stream, step, checkpoint)
+
+
 def run_foreach_batch_upsert(
     events: DataFrame, state_dir: str, checkpoint_dir: str
 ) -> None:
@@ -222,58 +361,31 @@ def run_foreach_batch_upsert(
     parquet 'state table' — the merge-into emulation for plain parquet
     (real deployments would use a transactional table format).
 
-    The new state is WRITTEN TO A SIDE DIRECTORY and swapped in via
-    rename, never written over the directory it is still reading from:
-    cache() is not a durability barrier (an evicted partition or executor
-    loss mid-write would recompute from the half-deleted source and
-    corrupt the state).  The swap keeps the previous generation until the
-    new one is fully committed.
+    The state commits through the monitors' path: the prior state is
+    read by _monitor_prev_state (a crash-parked generation is restored
+    first, a state that exists but cannot be read fails the batch) and
+    the new one is written aside and swapped in by _monitor_swap_write,
+    never over the directory it is still reading from.
     """
-    import shutil
-    import uuid as _uuid
-
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
+
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            existing = spark.read.parquet(state_dir)
-        except Exception:
-            existing = None
-        merged = (
-            batch_df.select("user_id", "event_id", "ts")
-            if existing is None
-            else batch_df.select("user_id", "event_id", "ts").unionByName(existing)
-        )
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
+        merged = batch_df.select("user_id", "event_id", "ts")
+        prev = _monitor_prev_state(batch_df.sparkSession, state_dir)
+        if prev is not None:
+            merged = merged.unionByName(prev)
         latest = (
             merged.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .drop("rn")
         )
-        # Full write completes while state_dir is still intact — any task
-        # retry/recompute during the write re-reads valid source data.
-        tmp_dir = f"{state_dir}.tmp-{batch_id}-{_uuid.uuid4().hex[:8]}"
-        latest.write.mode("overwrite").parquet(tmp_dir)
-        # Swap: retire the old generation, promote the new one.  (On a
-        # real object store this is the table-format commit step — e.g.
-        # an Iceberg/Delta metadata swap; local FS rename is its twin.)
-        old_dir = f"{state_dir}.old-{batch_id}"
-        if os.path.exists(state_dir):
-            os.rename(state_dir, old_dir)
-        os.rename(tmp_dir, state_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        _monitor_swap_write(latest, state_dir, batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events, upsert, checkpoint_dir)
 
 
 def run_stream_to_memory(
@@ -348,7 +460,7 @@ def click_abandonment_stream(
 ) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every click, with its
     attributed purchase if one arrived within ``horizon_minutes``, else
-    NULLs — the abandonment feed (SURVEY.md §2.9 depth, VERDICT r3 #4).
+    NULLs — the abandonment feed (SURVEY.md §2.9).
 
     The outer side exercises the subtle half of stream-stream join
     state: a NULL-extended row may only be emitted once the purchase
@@ -456,8 +568,8 @@ class PublishedTags:
     answers from the in-memory set first and only folds in manifests
     NEWER than the high-water version on a miss, so the steady-state
     per-batch cost is one directory listing, never a full manifest
-    rescan (ADVICE r6) — while a tag published by another publisher
-    instance after this one started is still found (ADVICE r7).
+    rescan, while a tag published by another publisher instance after
+    this one started is still found.
     """
 
     def __init__(self, table_dir: str) -> None:
@@ -513,12 +625,12 @@ def run_snapshot_publisher(
     for free: version N == the Nth published batch.
 
     The published-tag set is maintained INCREMENTALLY: each manifest is
-    read exactly once per publisher lifetime (never a full rescan per
-    batch, which was O(versions^2) driver I/O over a long-running
-    stream; ADVICE r6), and before publishing a tag it hasn't seen, the
-    publisher folds in any manifests newer than its high-water version —
-    so a batch published by ANOTHER publisher instance after this one
-    started is still deduplicated (ADVICE r7).  Known limit: dedup only
+    read exactly once per publisher lifetime (a full rescan per batch
+    would be O(versions^2) driver I/O over a long-running stream), and
+    before publishing a tag it hasn't seen, the publisher folds in any
+    manifests newer than its high-water version — so a batch published
+    by ANOTHER publisher instance after this one started is still
+    deduplicated.  Known limit: dedup only
     spans UNEXPIRED history — if snapshot_expire dropped a batch's
     manifest and the checkpoint was also wiped, a replay of that batch
     republishes (the tag evidence is gone; same contract as Delta's
@@ -535,15 +647,7 @@ def run_snapshot_publisher(
         version = snapshot_write(batch_df, table_dir, op="overwrite", tag=tag)
         tags.record(tag, version)
 
-    q = (
-        stream_df.writeStream.foreachBatch(publish)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df, publish, checkpoint)
 
 
 _DOCS_SCHEMA = StructType(
@@ -597,13 +701,7 @@ def run_quality_router(
         finally:
             scored.unpersist()
 
-    q = (
-        docs.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs, route, checkpoint_dir)
 
 
 class BatchMetricsListener:
@@ -641,9 +739,9 @@ class BatchMetricsListener:
                         "observed": {
                             k: r.asDict() for k, r in (p.observedMetrics or {}).items()
                         },
-                        # State-store footprint per stateful operator
-                        # (VERDICT r4 #7) — rows held, rows touched this
-                        # batch, bytes in the store.  THE capacity metric
+                        # State-store footprint per stateful operator —
+                        # rows held, rows touched this batch, bytes in
+                        # the store.  THE capacity metric
                         # for long-running stateful jobs: unbounded
                         # numRowsTotal growth is how watermark
                         # misconfiguration shows up in production.
@@ -796,14 +894,7 @@ def run_substring_dedup_stream(
             batch_counts, index_dir, op="append", tag=f"batch-{batch_id}"
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs_stream, step, checkpoint)
 
 
 def run_kmv_sketch_stream(
@@ -849,82 +940,7 @@ def run_kmv_sketch_stream(
             merged, sketch_dir, op="overwrite", tag=f"batch-{batch_id}"
         )
 
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _monitor_swap_write(df: DataFrame, target: str, batch_id: int) -> None:
-    """Write-aside-then-swap for the monitor state/report tables.
-
-    Not atomic across the two renames — a crash in between leaves
-    ``target`` missing with the previous state parked at
-    ``<target>.old-<batch_id>``; :func:`_monitor_recover_target`
-    restores exactly that case on the next read, so the pair is
-    crash-safe end-to-end (the r8 advisor's finding: without recovery,
-    a replayed batch silently reset the whole accumulated state to its
-    own partial).
-    """
-    import shutil
-    import uuid as _uuid
-
-    # Sweep orphan .tmp-* siblings first: a crash during/after a prior
-    # write but before the renames leaves them behind, and nothing else
-    # ever touches them — repeated crash loops would leak state dirs
-    # unboundedly (the snapshot layer's orphan-sweep discipline).
-    parent, base = os.path.split(os.path.abspath(target.rstrip("/")))
-    if os.path.isdir(parent):
-        for d in os.listdir(parent):
-            if d.startswith(base + ".tmp-"):
-                shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-
-    tmp = f"{target}.tmp-{batch_id}-{_uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    old = f"{target}.old-{batch_id}"
-    if os.path.exists(target):
-        os.rename(target, old)
-    os.rename(tmp, target)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _monitor_recover_target(target: str) -> None:
-    """If a crash between _monitor_swap_write's renames left ``target``
-    missing, restore the newest parked ``<target>.old-*`` backup."""
-    if os.path.exists(target):
-        return
-    parent, base = os.path.split(os.path.abspath(target.rstrip("/")))
-    if not os.path.isdir(parent):
-        return
-    prefix = base + ".old-"
-    backups = [d for d in os.listdir(parent) if d.startswith(prefix)]
-    if not backups:
-        return
-
-    def batch_key(name: str) -> int:
-        try:
-            return int(name[len(prefix):])
-        except ValueError:
-            return -1
-
-    newest = max(backups, key=batch_key)
-    os.rename(os.path.join(parent, newest), target)
-
-
-def _monitor_prev_state(spark, state_dir: str):
-    """The accumulated state table, or None only when none has EVER been
-    committed.  Recovers a crash-parked backup first; any other read
-    failure (corrupt parquet, permissions) PROPAGATES — the former
-    ``except Exception: state = partial`` silently discarded the entire
-    history on such errors (ADVICE r8)."""
-    _monitor_recover_target(state_dir)
-    if not os.path.exists(state_dir):
-        return None
-    return spark.read.parquet(state_dir)
+    _drain(events_stream, step, checkpoint)
 
 
 def run_changepoint_monitor(
@@ -934,58 +950,26 @@ def run_changepoint_monitor(
     checkpoint: str,
 ) -> None:
     """Streaming CUSUM change-point monitoring: each micro-batch folds
-    its per-(event_type, day) value sums into a daily state table, then
-    re-derives the SAME argmax-|CUSUM| report the batch operator
-    (operators/events_time.py::event_value_changepoint) produces — the
-    continuous-monitoring half of the change-point story: the report is
-    always the one a from-scratch batch run over all data seen so far
-    would emit (proven by the parity test).
-
-    Replay safety: daily sums are NOT idempotent under re-addition, so
-    partials are keyed by batch_id — state rows are
-    (batch_id, event_type, day, v) and a replayed batch REPLACES its
-    own partials instead of double-counting (the upsert-job contract;
-    same guarantee after a checkpoint wipe with availableNow, where the
-    whole input becomes batch 0 again).  The report derives from the
-    partial table grouped to the daily grain — DECIMAL sums, so the
-    batch/stream split cannot change a single digit.  Both writes use
-    the write-aside-then-swap pattern (cache() is not a durability
-    barrier).
+    its per-(event_type, day) DECIMAL value sums into the state, and the
+    report is the SAME argmax-|CUSUM| report the batch operator
+    (operators/events_time.py::event_value_changepoint) produces from
+    the daily grain — the continuous-monitoring half of the change-point
+    story.  Replay and commit: :func:`_fold_monitor`.
     """
     from mapreducer_spark.operators.events_time import cusum_report
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = batch_df.groupBy(
+    _fold_monitor(
+        events_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=lambda b: b.groupBy(
             "event_type", F.col("ts").cast("date").alias("day")
-        ).agg(
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("v")
-        ).select(F.lit(batch_id).alias("batch_id"), "event_type", "day", "v")
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
-            )
-        )
-        # Materialize the merged state off the directory being replaced.
-        _monitor_swap_write(state, state_dir, batch_id)
-        daily = (
-            spark.read.parquet(state_dir)
-            .groupBy("event_type", "day")
-            .agg(F.sum("v").alias("v"))
-        )
-        _monitor_swap_write(cusum_report(daily), report_dir, batch_id)
-
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ).agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("v")),
+        report=lambda st, _: cusum_report(
+            st.groupBy("event_type", "day").agg(F.sum("v").alias("v"))
+        ),
     )
-    q.awaitTermination()
 
 
 def run_seasonal_anomaly_monitor(
@@ -995,60 +979,29 @@ def run_seasonal_anomaly_monitor(
     checkpoint: str,
 ) -> None:
     """Streaming day-of-week seasonal anomaly monitoring: each
-    micro-batch folds its per-(day, dow) event counts into the daily
-    state table, then re-derives the SAME dow-baseline z-score report
-    the batch operator (operators/events_time.py::
-    events_seasonal_anomaly) produces via the shared
-    seasonal_anomaly_report algebra — always equal to a from-scratch
-    batch run over everything seen so far (parity test).
-
-    Replay safety is the changepoint monitor's contract verbatim:
-    counts are not idempotent under re-addition, so partials are keyed
-    by batch_id and a replayed batch REPLACES its own rows; the report
-    derives from the re-grouped daily grain (exact integer counts, so
-    the batch/stream split cannot change a digit); both writes use
-    write-aside-then-swap.
+    micro-batch folds its per-(day, dow) event counts into the state,
+    and the report is the SAME dow-baseline z-score report the batch
+    operator (operators/events_time.py::events_seasonal_anomaly)
+    produces via the shared seasonal_anomaly_report algebra.  Replay
+    and commit: :func:`_fold_monitor`.
     """
     from mapreducer_spark.operators.events_time import (
         seasonal_anomaly_report,
     )
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = (
-            batch_df.groupBy(
-                F.date_trunc("day", "ts").cast("date").alias("day"),
-                (F.dayofweek("ts") - 1).cast("int").alias("dow"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(batch_id).alias("batch_id"), "day", "dow", "n")
-        )
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
-            )
-        )
-        _monitor_swap_write(state, state_dir, batch_id)
-        daily = (
-            spark.read.parquet(state_dir)
-            .groupBy("day", "dow")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-        _monitor_swap_write(
-            seasonal_anomaly_report(daily), report_dir, batch_id
-        )
-
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _fold_monitor(
+        events_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=lambda b: b.groupBy(
+            F.date_trunc("day", "ts").cast("date").alias("day"),
+            (F.dayofweek("ts") - 1).cast("int").alias("dow"),
+        ).agg(F.count(F.lit(1)).alias("n")),
+        report=lambda st, _: seasonal_anomaly_report(
+            st.groupBy("day", "dow").agg(F.sum("n").cast("long").alias("n"))
+        ),
     )
-    q.awaitTermination()
 
 
 def run_heavy_hitters_monitor(
@@ -1058,55 +1011,33 @@ def run_heavy_hitters_monitor(
     checkpoint: str,
 ) -> None:
     """Streaming count-min heavy-hitters monitoring: each micro-batch
-    folds its per-user event counts into the state table, then
-    re-derives the SAME top-N report the batch operator
+    folds its per-user event counts into the state, and the report is
+    the SAME top-N report the batch operator
     (operators/sketches.py::cms_heavy_hitters) produces via the shared
     cms_report_from_counts algebra — the merged CMS grid is rebuilt
     from the folded counts by weighted increments, which equals
     per-event increments exactly because integer addition commutes
     (this is WHY CMS is the canonical mergeable sketch: daily shard
     grids add cell-wise; folding counts first is the same sum in a
-    different association order).
-
-    Replay contract: the changepoint monitor's verbatim — batch-keyed
-    partials so a replayed batch REPLACES its rows, write-aside-then-
-    swap for both tables.
+    different association order).  Replay and commit:
+    :func:`_fold_monitor`.
     """
     from mapreducer_spark.operators.sketches import cms_report_from_counts
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = (
-            batch_df.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(batch_id).alias("batch_id"), "user_id", "n")
-        )
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
+    _fold_monitor(
+        events_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=lambda b: b.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n")
+        ),
+        report=lambda st, _: cms_report_from_counts(
+            st.groupBy("user_id").agg(
+                F.sum("n").cast("long").alias("exact_cnt")
             )
-        )
-        _monitor_swap_write(state, state_dir, batch_id)
-        counts = (
-            spark.read.parquet(state_dir)
-            .groupBy("user_id")
-            .agg(F.sum("n").cast("long").alias("exact_cnt"))
-        )
-        _monitor_swap_write(
-            cms_report_from_counts(counts), report_dir, batch_id
-        )
-
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
 
 
 def run_stickiness_monitor(
@@ -1115,23 +1046,23 @@ def run_stickiness_monitor(
     report_dir: str,
     checkpoint: str,
 ) -> None:
-    """Streaming DAU/WAU stickiness maintenance (VERDICT r8 #7 — the
-    retention/growth twin completing the monitor family): each
-    micro-batch folds its distinct (day, user_id) activity pairs into
-    the state table, then re-derives the SAME stickiness report the
-    batch operator (operators/events_time.py::user_stickiness_dau_wau)
-    produces via the shared stickiness_report algebra — always equal to
-    a from-scratch batch run over everything seen so far (parity test).
+    """Streaming DAU/WAU stickiness maintenance, the retention/growth
+    member of the monitor family: each micro-batch folds its distinct
+    (day, user_id) activity pairs into the state table, then re-derives
+    the SAME stickiness report the batch operator
+    (operators/events_time.py::user_stickiness_dau_wau) produces via the
+    shared stickiness_report algebra — always equal to a from-scratch
+    batch run over everything seen so far (parity test).
 
-    Replay contract differs from the other monitors ON PURPOSE: the
-    state is a DISTINCT SET of (day, user_id) pairs, and set union is
-    idempotent — a replayed batch re-adds pairs that are already
-    present, changing nothing — so batch-keyed partials (needed where
-    the fold is a non-idempotent SUM) would only bloat the state with
-    per-batch multiplicity.  The state grain is active (day, user)
-    pairs — the DAU integral, far smaller than raw events — and at
-    100 TB it shrinks further to the WAU window if old days are
-    compacted out.  Both writes use the shared crash-safe swap.
+    Not a :func:`_fold_monitor` ON PURPOSE: the state is a DISTINCT SET
+    of (day, user_id) pairs, and set union is idempotent — a replayed
+    batch re-adds pairs that are already present, changing nothing — so
+    batch-keyed partials (needed where the fold is a non-idempotent SUM)
+    would only bloat the state with per-batch multiplicity.  The state
+    grain is active (day, user) pairs — the DAU integral, far smaller
+    than raw events — and at 100 TB it shrinks further to the WAU window
+    if old days are compacted out.  Both writes use the shared
+    crash-safe swap.
     """
     from mapreducer_spark.operators.events_time import stickiness_report
 
@@ -1154,14 +1085,7 @@ def run_stickiness_monitor(
             batch_id,
         )
 
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(events_stream, step, checkpoint)
 
 
 def run_quantile_monitor(
@@ -1173,57 +1097,31 @@ def run_quantile_monitor(
 ) -> None:
     """Streaming quantile maintenance over event values via the
     mergeable histogram sketch: each micro-batch folds its per-bucket
-    value counts into the state table, then re-derives the SAME
+    value counts into the state, and the report is the SAME
     width-bounded quantile report the batch algebra
     (operators/sketches.py::histogram_quantile_report) produces over
     all data seen so far — a histogram is THE canonical mergeable
     summary (batch counts add cell-wise), so batch/stream parity is
-    exact by construction (parity test).
-
-    Replay contract: counts are a non-idempotent SUM fold, so partials
-    are keyed by batch_id and a replayed batch REPLACES its own rows
-    (the changepoint monitor's contract verbatim).  State grain is
-    (batch, bucket) — domain-bounded, independent of stream length.
+    exact by construction.  State grain is (batch, bucket) —
+    domain-bounded, independent of stream length.  Replay and commit:
+    :func:`_fold_monitor`.
     """
     from mapreducer_spark.operators.sketches import (
         histogram_quantile_report,
     )
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = (
-            batch_df.groupBy(
-                F.floor(F.col("value") / width).cast("long").alias("b")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(batch_id).alias("batch_id"), "b", "n")
-        )
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
-            )
-        )
-        _monitor_swap_write(state, state_dir, batch_id)
-        h = (
-            spark.read.parquet(state_dir)
-            .groupBy("b")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-        _monitor_swap_write(
-            histogram_quantile_report(h, width), report_dir, batch_id
-        )
-
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _fold_monitor(
+        events_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=lambda b: b.groupBy(
+            F.floor(F.col("value") / width).cast("long").alias("b")
+        ).agg(F.count(F.lit(1)).alias("n")),
+        report=lambda st, _: histogram_quantile_report(
+            st.groupBy("b").agg(F.sum("n").cast("long").alias("n")), width
+        ),
     )
-    q.awaitTermination()
 
 
 def run_dp_count_monitor(
@@ -1233,7 +1131,7 @@ def run_dp_count_monitor(
     checkpoint: str,
     eps_per_release: float = 1.0,
 ) -> None:
-    """Streaming DP telemetry: per-event-type counts maintained as
+    """Streaming DP telemetry: per-event-type counts folded as
     batch-keyed partials and RELEASED each micro-batch through the
     discrete-Laplace count-release algebra (the exact code path of the
     batch mechanism — operators/profiling.py::dp_count_release), with
@@ -1243,39 +1141,21 @@ def run_dp_count_monitor(
     monitor prices its own continual-observation cost instead of
     pretending re-releases are free.
 
-    Replay contract: counts are a non-idempotent SUM fold, so partials
-    are keyed by batch_id and a replayed batch REPLACES its own rows
-    (the quantile monitor's contract).  The release index is the
-    distinct-batch count of the state — a replayed batch reproduces the
-    same index, the same salt, and therefore the byte-identical report
-    (noise is a hash, not an RNG: crash-replay can never double-spend
-    the budget or re-roll the noise).  State grain is (batch,
-    event_type) — domain-bounded; the report is one row per event type.
+    The release index is the distinct-batch count of the state, so a
+    replayed batch reproduces the same index, the same salt and the
+    byte-identical report: crash-replay can never double-spend the
+    budget or re-roll the noise.  State grain is (batch, event_type);
+    the report is one row per event type.  Replay and commit:
+    :func:`_fold_monitor`.
     """
     from mapreducer_spark.operators.profiling import dp_count_release
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = (
-            batch_df.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(batch_id).alias("batch_id"), "event_type", "n")
-        )
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
-            )
-        )
-        _monitor_swap_write(state, state_dir, batch_id)
-        st = spark.read.parquet(state_dir)
+    def report(st: DataFrame, _batch_id: int) -> DataFrame:
         n_releases = st.select("batch_id").distinct().count()
         totals = st.groupBy("event_type").agg(
             F.sum("n").cast("long").alias("true_count")
         )
-        report = dp_count_release(
+        return dp_count_release(
             totals,
             "event_type",
             f"dp-monitor-v1|{n_releases}|",
@@ -1291,16 +1171,17 @@ def run_dp_count_monitor(
                 "eps_spent_total"
             ),
         )
-        _monitor_swap_write(report, report_dir, batch_id)
 
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _fold_monitor(
+        events_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=lambda b: b.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n")
+        ),
+        report=report,
     )
-    q.awaitTermination()
 
 
 def run_dp_histogram_monitor(
@@ -1311,9 +1192,9 @@ def run_dp_histogram_monitor(
     eps_per_release: float = 1.0,
 ) -> None:
     """Streaming DP telemetry over a DISTRIBUTION: the clamped
-    event-value histogram maintained as batch-keyed per-bucket partials
-    and RELEASED each micro-batch through the discrete-Laplace
-    histogram algebra (the exact code path of the batch mechanism —
+    event-value histogram folded as batch-keyed per-bucket partials and
+    RELEASED each micro-batch through the discrete-Laplace histogram
+    algebra (the exact code path of the batch mechanism —
     operators/profiling.py::dp_histogram_release, full fixed grid,
     empty cells noised too), with sequential-composition budget
     accounting: release R salts its noise by R and the report carries
@@ -1321,14 +1202,11 @@ def run_dp_histogram_monitor(
     buckets are disjoint, so the per-release price is eps_per_release
     (parallel composition), not cells x eps.
 
-    Replay contract: identical to run_dp_count_monitor — counts are a
-    non-idempotent SUM fold, so partials are keyed by batch_id and a
-    replayed batch REPLACES its own rows; the release index is the
-    distinct-batch count of the state, so a replayed batch reproduces
-    the same salt and the byte-identical report (noise is a hash, not
-    an RNG: crash-replay can never re-roll the draw or double-spend
-    the budget).  State grain is (batch, bucket) — grid-bounded; the
-    report is one row per grid cell, CDF included.
+    The release index is the distinct-batch count of the state, as in
+    run_dp_count_monitor, so a replayed batch reproduces the same salt
+    and the byte-identical report.  State grain is (batch, bucket) —
+    grid-bounded; the report is one row per grid cell, CDF included.
+    Replay and commit: :func:`_fold_monitor`.
     """
     from mapreducer_spark.operators.profiling import (
         _DPEV_BUCKETS,
@@ -1338,30 +1216,7 @@ def run_dp_histogram_monitor(
     )
     from pyspark.sql import Window
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = (
-            batch_df.groupBy(
-                F.floor(
-                    F.least(F.col("value"), F.lit(float(_DPEV_CLAMP)))
-                    / _DPEV_WIDTH
-                )
-                .cast("long")
-                .alias("bucket")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(batch_id).alias("batch_id"), "bucket", "n")
-        )
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
-            )
-        )
-        _monitor_swap_write(state, state_dir, batch_id)
-        st = spark.read.parquet(state_dir)
+    def report(st: DataFrame, _batch_id: int) -> DataFrame:
         n_releases = st.select("batch_id").distinct().count()
         totals = st.groupBy("bucket").agg(
             F.sum("n").cast("long").alias("tn")
@@ -1375,7 +1230,7 @@ def run_dp_histogram_monitor(
         wc = Window.orderBy("bucket").rowsBetween(
             Window.unboundedPreceding, 0
         )
-        report = rel.select(
+        return rel.select(
             "bucket",
             (F.col("bucket") * _DPEV_WIDTH).cast("long").alias("lo_value"),
             "true_n",
@@ -1388,16 +1243,22 @@ def run_dp_histogram_monitor(
                 "eps_spent_total"
             ),
         )
-        _monitor_swap_write(report, report_dir, batch_id)
 
-    q = (
-        events_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _fold_monitor(
+        events_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=lambda b: b.groupBy(
+            F.floor(
+                F.least(F.col("value"), F.lit(float(_DPEV_CLAMP)))
+                / _DPEV_WIDTH
+            )
+            .cast("long")
+            .alias("bucket")
+        ).agg(F.count(F.lit(1)).alias("n")),
+        report=report,
     )
-    q.awaitTermination()
 
 
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1422,54 +1283,43 @@ def run_topk_retrieval_monitor(
     report_dir: str,
     checkpoint: str,
 ) -> None:
-    """Streaming INCREMENTAL RETRIEVAL (VERDICT r11 #5) — the retrieval
-    shelf's batch<->stream closure, extending the one-code-path
-    discipline the DP monitors established: as candidate vectors arrive
-    in micro-batches, maintain a snapshot-versioned top-k pool per
-    query and re-rank it through the SHARED greedy MMR algebra
+    """Streaming INCREMENTAL RETRIEVAL — the retrieval shelf's
+    batch<->stream closure: as candidate vectors arrive in
+    micro-batches, maintain a snapshot-versioned top-k pool per query
+    and re-rank it through the SHARED greedy MMR algebra
     (operators/similarity.py::_mmr_rerank — the exact code path of
     similarity_topk_mmr), so once every vector has arrived the pool
     equals similarity_topk's batch output and the report equals
     similarity_topk_mmr's, row for row (the parity test pins both).
 
-    Mechanics (the quantile/DP monitors' contracts):
-    - Per batch: score ONLY the batch's candidates against the fixed
+    - Partial: score ONLY the batch's candidates against the fixed
       broadcast query set (identical 6dp-rounded cosine + tie-break as
-      the batch operator) and keep the per-batch per-query top-k as the
-      partial — global top-k is a subset of the union of per-batch
-      top-ks, so the merge is exact while the state stays at
-      batches x queries x k rows (each with its candidate vector — the
-      pairwise re-rank needs no side lookup).  At 100 TB the partial is
-      the only stage that touches the batch, and it's one map-side
-      window over batch x queries scored rows.
-    - Replay-exact: partials are batch-keyed and a replayed batch
-      REPLACES its own rows; pool and report are pure functions of the
-      state, so crash-replay reproduces them byte-identically (no RNG
-      anywhere — ties break on vec_id).
-    - Snapshot-versioned: pool/report are swap-written per batch; a
-      reader always sees one complete version.
+      the batch operator) and keep the per-batch per-query top-k —
+      global top-k is a subset of the union of per-batch top-ks, so the
+      merge is exact while the state stays at batches x queries x k
+      rows (each with its candidate vector — the pairwise re-rank needs
+      no side lookup).  At 100 TB the partial is the only stage that
+      touches the batch, and it's one map-side window over batch x
+      queries scored rows.
+    - Report: the pool is swap-written per batch before the MMR re-rank
+      reads it, so a reader always sees one complete version; ties
+      break on vec_id, so replay reproduces both byte for byte.
+
+    Replay and commit: :func:`_fold_monitor`.
     """
     from pyspark.sql import Window
 
     from mapreducer_spark.functions.vectors import cosine
     from mapreducer_spark.operators.similarity import _TOP_K, _mmr_rerank
 
-    q_b = F.broadcast(
-        queries_df.select(
-            F.col("q_id"), F.col("qv")
-        )
-    )
+    q_b = F.broadcast(queries_df.select(F.col("q_id"), F.col("qv")))
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        w = Window.partitionBy("q_id").orderBy(
-            F.col("sim").desc(), F.col("vec_id")
-        )
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.crossJoin(q_b)
             .where(F.col("q_id") != F.col("vec_id"))
             .select(
-                F.lit(batch_id).alias("batch_id"),
                 "q_id",
                 "vec_id",
                 F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias(
@@ -1481,23 +1331,15 @@ def run_topk_retrieval_monitor(
             .where(F.col("rnk") <= _TOP_K)
             .drop("rnk")
         )
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
-            )
-        )
-        _monitor_swap_write(state, state_dir, batch_id)
-        st = spark.read.parquet(state_dir)
-        # Cross-batch duplicate deliveries (re-written/compacted input
-        # files hand the same vec_id to two batch_ids) would otherwise
-        # put duplicate (q_id, vec_id) rows in the pool and skew the MMR
-        # re-rank (ADVICE r12): collapse to one row per (q_id, vec_id),
-        # keeping max sim — for true re-deliveries the sims are identical
-        # (deterministic scoring), so this is exactly the
-        # arrived-once pool.
+
+    def report(st: DataFrame, batch_id: int) -> DataFrame:
+        spark = st.sparkSession
+        # A vec_id delivered under two batch ids (re-written or
+        # compacted input files) would put a duplicate (q_id, vec_id)
+        # row in the pool and skew the MMR re-rank: collapse to one row
+        # per (q_id, vec_id), keeping max sim — for true re-deliveries
+        # the sims are identical (deterministic scoring), so this is
+        # exactly the arrived-once pool.
         pool = (
             st.groupBy("q_id", "vec_id")
             .agg(F.max("sim").alias("sim"))
@@ -1509,7 +1351,7 @@ def run_topk_retrieval_monitor(
         vectors = st.select("vec_id", "embedding").dropDuplicates(
             ["vec_id"]
         )
-        report = _mmr_rerank(
+        return _mmr_rerank(
             spark,
             sf_dir="",  # unused: vectors supplied from state
             pool=pool_df.select(
@@ -1517,16 +1359,15 @@ def run_topk_retrieval_monitor(
             ),
             vectors=vectors,
         )
-        _monitor_swap_write(report, report_dir, batch_id)
 
-    q = (
-        embeddings_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _fold_monitor(
+        embeddings_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=partial,
+        report=report,
     )
-    q.awaitTermination()
 
 
 def run_ivf_ingest_monitor(
@@ -1547,21 +1388,19 @@ def run_ivf_ingest_monitor(
     vectors have arrived (the parity test pins it against the frozen
     ann_ivf_assign artifact's own counts).
 
-    r13: each drain's report also carries the REBALANCE readout
+    Each drain's report also carries the REBALANCE readout
     (frac_of_index, occupancy vs the sqrt-n rule's target mean,
     rule_k/index_k, k-lags-rule, split/hot/ok action) through the
     SHARED ivf_rebalance_readout — the same decision code path as the
     batch ann_ivf_rebalance_plan, so the live index emits the verdicts
     the offline maintenance query would, continuously.
 
-    Contracts (the monitor family's): batch-keyed (batch_id, vec_id,
-    cluster) partials — a replayed batch REPLACES its own rows, so
-    crash-replay reproduces the report byte-identically (assignment is
-    deterministic, no RNG); state grain is one row per ingested vector
-    (exactly the inverted-lists table a production deployment
+    State grain is one (batch_id, vec_id, cluster) row per ingested
+    vector (exactly the inverted-lists table a production deployment
     maintains); the report is k rows.  At 100 TB each drain touches
     ONLY the batch (|batch| x k centroid cosines, map-side); the lists
-    table grows by appends, never recomputes."""
+    table grows by appends, never recomputes.  Replay and commit:
+    :func:`_fold_monitor`."""
     from mapreducer_spark.operators.similarity import (
         _ivf_assigned_live,
         ivf_rebalance_readout,
@@ -1572,21 +1411,7 @@ def run_ivf_ingest_monitor(
     # frozen index.
     index_k = index_df.count()
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = _ivf_assigned_live(batch_df, index_df).select(
-            F.lit(batch_id).alias("batch_id"), "vec_id", "cluster"
-        )
-        prev = _monitor_prev_state(spark, state_dir)
-        state = (
-            partial
-            if prev is None
-            else prev.where(F.col("batch_id") != batch_id).unionByName(
-                partial
-            )
-        )
-        _monitor_swap_write(state, state_dir, batch_id)
-        st = spark.read.parquet(state_dir)
+    def report(st: DataFrame, _batch_id: int) -> DataFrame:
         occ = (
             st.groupBy("cluster")
             .agg(
@@ -1599,14 +1424,15 @@ def run_ivf_ingest_monitor(
                 "n_batches",
             )
         )
-        report = ivf_rebalance_readout(occ, index_k, n_col="n_vectors")
-        _monitor_swap_write(report, report_dir, batch_id)
+        return ivf_rebalance_readout(occ, index_k, n_col="n_vectors")
 
-    q = (
-        embeddings_stream.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _fold_monitor(
+        embeddings_stream,
+        checkpoint,
+        state_dir,
+        report_dir,
+        partial=lambda b: _ivf_assigned_live(b, index_df).select(
+            "vec_id", "cluster"
+        ),
+        report=report,
     )
-    q.awaitTermination()

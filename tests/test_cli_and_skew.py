@@ -709,8 +709,9 @@ def test_fixed6_quantize_matches_duckdb_hypothesis(xs):
 
 
 def test_cli_verify(spark, capsys):
-    """verify CLI: a green query MATCHes; a rows-only query is labeled;
-    unknown names are rejected with exit 2."""
+    """verify CLI: a green query MATCHes; a rows-only query runs through
+    the gated collect and reports its row count; unknown names are
+    rejected with exit 2."""
     import json as _json
 
     from mapreducer_spark.__main__ import main
@@ -733,8 +734,46 @@ def test_cli_verify(spark, capsys):
     by_name = {r["query"]: r for r in lines}
     assert by_name["pricing_summary"]["status"] == "MATCH"
     assert by_name["dedup_minhash_lsh"]["status"] == "rows-only"
+    assert by_name["dedup_minhash_lsh"]["rows"] > 0
 
     assert main(["verify", "no_such_query"]) == 2
+
+
+def test_cli_monitor_prints_report_rows(spark, sf_dir, tmp_path, capsys):
+    """monitor-changepoints and monitor-dp-counts print their report
+    table, one JSON row each; a second run on the same checkpoint has no
+    new input and prints the same rows."""
+    import json as _json
+
+    from mapreducer_spark.__main__ import main
+
+    for cmd in ("monitor-changepoints", "monitor-dp-counts"):
+        report = str(tmp_path / f"{cmd}_report")
+        argv = [
+            cmd,
+            "--sf-dir",
+            sf_dir,
+            str(tmp_path / f"{cmd}_state"),
+            report,
+            "--checkpoint",
+            str(tmp_path / f"{cmd}_ck"),
+        ]
+        runs = []
+        for _ in range(2):
+            capsys.readouterr()
+            assert main(argv) == 0
+            printed = [
+                tuple(_json.loads(ln).items())
+                for ln in capsys.readouterr().out.splitlines()
+                if ln.startswith("{")
+            ]
+            table = [
+                tuple((k, str(v)) for k, v in r.asDict().items())
+                for r in spark.read.parquet(report).collect()
+            ]
+            assert printed and sorted(printed) == sorted(table)
+            runs.append(printed)
+        assert runs[0] == runs[1]
 
 
 def test_driver_memory_sized_to_local_slots(monkeypatch):

@@ -72,6 +72,80 @@ def test_foreach_batch_upsert_matches_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def test_foreach_batch_upsert_recovers_state_and_never_resets(
+    spark, sf_dir, tmp_path
+):
+    """The upsert commits through the monitors' swap: a state parked at
+    ``<state>.old-N`` by a crash between the two renames is restored and
+    its rows survive the next upsert; an orphan ``.tmp-*`` sibling is
+    swept; a corrupt state directory fails the stream instead of being
+    overwritten with the batch's rows."""
+    import datetime as dt
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    state = str(tmp_path / "state")
+    # A history row no fixture event supersedes (user -1).
+    spark.createDataFrame(
+        [(-1, -1, dt.datetime(2001, 1, 1))],
+        "user_id long, event_id long, ts timestamp",
+    ).write.parquet(state + ".old-7")
+    orphan = state + ".tmp-99-deadbeef"
+    os.makedirs(orphan)
+    run_foreach_batch_upsert(
+        read_events_stream(spark, sf_dir), state, str(tmp_path / "ck1")
+    )
+    got = spark.read.parquet(state)
+    n_users = latest_event_per_user(spark, sf_dir).count()
+    assert got.where("user_id = -1").count() == 1, "parked history lost"
+    assert got.count() == n_users + 1
+    assert not os.path.exists(state + ".old-7")
+    assert not os.path.exists(orphan), "orphan .tmp dir not swept"
+
+    bad = str(tmp_path / "bad_state")
+    os.makedirs(bad)
+    junk = os.path.join(bad, "part-00000.parquet")
+    with open(junk, "w") as f:
+        f.write("this is not parquet")
+    with pytest.raises(StreamingQueryException):
+        run_foreach_batch_upsert(
+            read_events_stream(spark, sf_dir), bad, str(tmp_path / "ck2")
+        )
+    assert os.listdir(bad) == ["part-00000.parquet"]
+
+
+def test_streaming_state_commits_through_one_path():
+    """streaming/jobs.py has one drain and one state swap: foreachBatch
+    is wired only in _drain, and os.rename runs only in the swap and
+    its crash recovery, so no job can grow a commit without the
+    recovery, the no-silent-reset read and the orphan sweep."""
+    import ast
+    from pathlib import Path
+
+    from mapreducer_spark.streaming import jobs
+
+    tree = ast.parse(Path(jobs.__file__).read_text())
+
+    def callers(attr: str) -> list[str]:
+        return sorted(
+            {
+                getattr(top, "name", "<module>")
+                for top in tree.body
+                for node in ast.walk(top)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == attr
+            }
+        )
+
+    assert callers("foreachBatch") == ["_drain"]
+    assert callers("rename") == [
+        "_monitor_recover_target",
+        "_monitor_swap_write",
+    ]
+
+
 def test_watermarked_dedup_stream(spark, sf_dir):
     name, _ = run_stream_to_memory(
         deduped_stream(read_events_stream(spark, sf_dir)), output_mode="append"
@@ -789,7 +863,7 @@ def test_changepoint_monitor_matches_batch_and_replays(spark, sf_dir, tmp_path):
 
 
 def test_monitor_swap_crash_recovery_and_error_propagation(spark, tmp_path):
-    """The two r8-advisor hazards in the monitors' state handling:
+    """The two hazards that would silently reset the monitors' state:
 
     1. A crash between _monitor_swap_write's two renames leaves the
        state dir missing with history parked at ``<dir>.old-<batch>`` —
